@@ -26,10 +26,11 @@ Exactly-once end to end, at-least-once in the middle: ``refresh()``
 polls the changelog, applies the delta under a deterministic batch id
 ``ivm:<from>-<to>``, and only then commits the cursor. A crash between
 the two re-delivers the span; the rollup's batch ledger makes the
-re-apply a no-op. Float caveat: ``sum`` over floating columns is
-reordered arithmetic vs a from-scratch recompute (bit drift); keep
-float sums tolerance-checked or use integer/decimal columns — the
-tests pin bit-equality on longs.
+re-apply a no-op. ``sum`` over float/double inputs is refused: the
++v/-v cancellation is reordered arithmetic, so untouched groups of a
+rewritten bucket would surface spurious non-zero deltas. Sum integer or
+decimal columns (cast floats to decimal first); the tests pin
+bit-equality on longs.
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 from dbt_customer360_spark.lake.table import ChangelogReader, LakeTable
 
@@ -97,6 +99,25 @@ class IncrementalRollup:
         self.aggs = aggs
         self.row_filter = row_filter
         self.reader = ChangelogReader(source, cursor_path)
+        # refused here when the source schema is known, else by refresh
+        m = source._read_manifest()
+        if m["schema"]:
+            self._refuse_float_sums(source._read_paths(m, []))
+
+    def _refuse_float_sums(self, rows: DataFrame) -> None:
+        """Raise ValueError for a ``sum`` whose input resolves to
+        float/double over ``rows``' schema (analysis only, no job): its
+        retraction would not cancel exactly (module docstring)."""
+        for a in self.aggs:
+            if a.kind != "sum":
+                continue
+            t = rows.select(F.expr(a.col)).schema[0].dataType
+            if isinstance(t, (FloatType, DoubleType)):
+                raise ValueError(
+                    f"sum aggregate {a.out!r} over {a.col!r} has floating "
+                    f"type {t.simpleString()}; incremental float sums drift "
+                    "— sum an integer or decimal column instead"
+                )
 
     def _delta(self, old: DataFrame, new: DataFrame) -> DataFrame:
         """Signed per-group deltas straight from the span's (old, new)
@@ -110,9 +131,8 @@ class IncrementalRollup:
         dominant shuffle — is unnecessary. Group rows whose every
         contribution nets to zero are dropped before the merge so
         untouched groups in changed buckets don't rewrite rollup
-        buckets. Float-sum caveat as in the module docstring: cancel
-        order is reordered arithmetic, exact only for integer/decimal
-        columns (the pinned ones)."""
+        buckets. The cancellation is exact only for integer/decimal
+        sums, which is why float sums are refused up front."""
         if self.row_filter:
             old = old.filter(F.expr(self.row_filter))
             new = new.filter(F.expr(self.row_filter))
@@ -145,6 +165,7 @@ class IncrementalRollup:
         if to <= frm:
             return None
         old, new = self.source.changelog_sides(frm, to)
+        self._refuse_float_sums(new)
         sid = self.rollup.merge_additive(
             self._delta(old, new),
             self.group_by,

@@ -35,7 +35,8 @@ Scale notes: the bucket layout means a MERGE touching k of B buckets
 reads/writes only k/B of the table; B is chosen at create time
 (``buckets``) and should be sized so one bucket ≈ a few GB at target
 scale. All data movement is Spark jobs — the driver only manipulates
-manifest JSON (O(#files), not O(rows)).
+manifest JSON (O(#files), not O(rows)) — except an ``append`` of a
+``pyarrow.Table``, whose rows already live on the driver (lineage).
 """
 
 from __future__ import annotations
@@ -45,11 +46,15 @@ import os
 import shutil
 import tempfile
 import uuid
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_customer360_spark.session import local_df
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 class CommitConflict(RuntimeError):
@@ -657,6 +662,24 @@ class LakeTable:
 
     # --- writes ------------------------------------------------------------------
 
+    def _write_tasks(self, df: DataFrame, n_buckets: int) -> int:
+        """Write-task count for ``n_buckets`` bucket partitions of
+        ``df`` (rule in :meth:`_write_bucket_files`). Reads Spark's
+        ``sizeInBytes`` estimate on the driver and runs no job. The
+        estimate comes off the already-analyzed plan: it matches the
+        optimized plan's for these writes (the same statistics visitor
+        over file sizes and local rows), without an extra optimizer pass
+        per write (10-20 ms for a merge plan on a 4-vCPU host)."""
+        jconf = self.spark._jsparkSession.sessionState().conf()
+        est = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
+        if est >= jconf.defaultSizeInBytes():
+            return n_buckets
+        advisory = self.spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            self.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        want = max(self.spark.sparkContext.defaultParallelism, -(-est // advisory))
+        return min(n_buckets, want)
+
     def _write_bucket_files(
         self,
         df: DataFrame,
@@ -676,6 +699,19 @@ class LakeTable:
         NO shuffle at all; the legacy xxhash64 layout shuffles on the
         computed bucket column as before.
 
+        Each bucket is written by exactly one task, as one file (or one
+        run of ``max_records_per_file`` parts). The B bucket partitions
+        are coalesced — whole partitions merged, never split — into
+        ``k = min(B, max(defaultParallelism, ceil(est / advisory)))``
+        write tasks, where ``est`` is Spark's ``sizeInBytes`` estimate
+        for ``df`` and ``advisory`` is
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes``: AQE's own
+        parallelism-first sizing, which it never applies to a
+        ``repartition(B, keys)`` shuffle. A small table then pays for
+        ``defaultParallelism`` task launches instead of B; an unknown
+        estimate (Spark's default-size sentinel) or GB-sized buckets
+        keep one task per bucket.
+
         When the manifest carries a ``sort_order`` (set by
         ``compact(sort_by=...)``) every write — merges included — sorts
         rows WITHIN each bucket partition on those columns before
@@ -692,14 +728,17 @@ class LakeTable:
         out_id = uuid.uuid4().hex[:12]
         out_rel = f"w{out_id}"
         out_abs = os.path.join(self.root, "data", out_rel)
+        n_buckets = manifest.get("buckets", self.buckets)
+        tasks = self._write_tasks(df, n_buckets)
         bucket_col = self._bucket_expr(keys, manifest)
         df = df.withColumn("__bucket", bucket_col)
-        n_buckets = manifest.get("buckets", self.buckets)
         if not pre_partitioned:
             if manifest.get("bucket_fn", "xxhash64") == "murmur3":
                 df = df.repartition(n_buckets, *self._layout_cols(manifest, keys))
             else:
                 df = df.repartition(n_buckets, "__bucket")
+        if tasks < n_buckets:
+            df = df.coalesce(tasks)
         sort_by = manifest.get("sort_order") or []
         if sort_by:
             df = df.sortWithinPartitions("__bucket", *sort_by)
@@ -1163,9 +1202,16 @@ class LakeTable:
             m["batch_ids"].append(batch_id)
         return self._commit(m)
 
-    def append(self, df: DataFrame, batch_id: str | None = None) -> int:
+    def append(self, df: DataFrame | pa.Table, batch_id: str | None = None) -> int:
         """Append-only commit (no key semantics): one new file added to
-        bucket '0'. Used for lineage/metrics tables."""
+        bucket '0'. Used for lineage/metrics tables.
+
+        ``df`` is a Spark DataFrame, or a ``pyarrow.Table`` for rows
+        that already live on the driver (a lineage row): pyarrow writes
+        that file in-process, so the commit runs no Spark job. Both
+        writers record the same Spark DDL types in the manifest and
+        produce a one-file dir entry, so readers and compaction cannot
+        tell them apart."""
         m = self._read_manifest()
         if batch_id is not None and batch_id in m["batch_ids"]:
             return m["snapshot_id"]
@@ -1176,16 +1222,50 @@ class LakeTable:
                 f"append-only commit on a table merged by keys {m['keys']}; "
                 "use merge()/merge_lsn() so key semantics hold"
             )
-        self._merge_schema(m, df)
-        df = self._conform(df, m)
         out_rel = f"a{uuid.uuid4().hex[:12]}"
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(self.root, "data", out_rel)
-        )
+        out_abs = os.path.join(self.root, "data", out_rel)
+        if isinstance(df, DataFrame):
+            self._merge_schema(m, df)
+            df = self._conform(df, m)
+            df.coalesce(1).write.mode("overwrite").parquet(out_abs)
+        else:
+            self._write_arrow(df, m, out_abs)
         m["files"].setdefault("0", []).append(out_rel)
         if batch_id is not None:
             m["batch_ids"].append(batch_id)
         return self._commit(m)
+
+    def _write_arrow(self, tbl: pa.Table, manifest: dict, out_abs: str) -> None:
+        """Driver-side twin of the Spark append write: add ``tbl``'s new
+        columns to the manifest schema as Spark DDL types, conform it to
+        that schema (NULL-fill missing columns, cast the rest), and
+        write it as the single parquet file of the dir ``out_abs``."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
+        from pyspark.sql.types import StructType
+
+        known = {n for n, _ in manifest["schema"]}
+        for field in tbl.schema:
+            if field.name not in known:
+                manifest["schema"].append(
+                    [field.name, from_arrow_type(field.type).simpleString()]
+                )
+        ddl = ", ".join(f"`{n}` {t}" for n, t in manifest["schema"])
+        schema = to_arrow_schema(StructType.fromDDL(ddl))
+        cols = [
+            tbl.column(f.name).cast(f.type)
+            if f.name in tbl.column_names
+            else pa.nulls(tbl.num_rows, f.type)
+            for f in schema
+        ]
+        os.makedirs(out_abs)
+        pq.write_table(
+            pa.Table.from_arrays(cols, schema=schema),
+            os.path.join(out_abs, f"part-00000-{uuid.uuid4()}.parquet"),
+            compression="zstd",
+            coerce_timestamps="us",
+        )
 
     def compact(
         self,

@@ -26,13 +26,25 @@ from __future__ import annotations
 
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_customer360_spark.lake.table import LakeTable
-from dbt_customer360_spark.session import local_df
 
 KEYS = ["repo", "path"]
+LINEAGE_SCHEMA = pa.schema(
+    [
+        ("epoch", pa.string()),
+        ("row_kind", pa.string()),
+        ("partition", pa.string()),
+        ("rows_applied", pa.int64()),
+        ("deletes", pa.int64()),
+        ("min_lsn", pa.int64()),
+        ("max_lsn", pa.int64()),
+        ("snapshot_id", pa.int64()),
+    ]
+)
 
 
 class CDCApplier:
@@ -191,18 +203,26 @@ class CDCApplier:
     ) -> dict:
         """Apply one micro-batch exactly-once; returns lineage stats.
 
-        Two Spark jobs per batch, neither a full-width re-scan:
+        Four Spark jobs per pruned batch, none a full-width re-scan —
+        under AQE every shuffle's map side runs as its own job, so each
+        of the two steps below is a map job plus a result job:
           1. distinct touched hash-buckets (inside ``merge_lsn``): the
              scan is column-pruned to the merge KEYS + (lsn, op) for the
-             riding observation — never the content payload;
+             riding observation — never the content payload. Skipped
+             under ``assume_dense_batches`` and ``write_mode='mor'``,
+             which leaves two jobs per batch;
           2. the LSN merge itself (union touched target + batch,
              ``max_by`` reduce, bucketed write) — within-batch dedup,
              stale-replay rejection (high-watermark), and the upsert are
              all one comparator; map-side partial aggregation absorbs
              hot-key skew (see LakeTable.merge_lsn).
         Lineage stats (row counts, LSN range, deletes) ride the merge
-        job itself via ``Observation`` — the round-1 separate stats
-        aggregation over (lsn, op, repo, path) is gone.
+        job itself via ``Observation``, and the lineage rows are written
+        by pyarrow on the driver — no job. Options add jobs: the
+        explicit stats aggregation below (two), validation for
+        quarantine/expectations (two, plus one quarantine append when
+        rows are rejected), per-partition lineage on the batch path
+        (two), and the rollup refresh and maintenance when they are due.
 
         ``use_observation=False`` computes those stats with an explicit
         column-pruned (lsn, op) aggregation job instead. The streaming
@@ -412,16 +432,15 @@ class CDCApplier:
                     )
                     for r in per_part
                 ]
-            # local_df (Arrow LocalRelation), NOT createDataFrame: a
-            # Python-RDD-backed 1-row write costs ~5s/job in this env
-            # and would tax EVERY micro-batch (session.local_df)
-            row = local_df(
-                self.spark,
-                rows,
-                "epoch string, row_kind string, partition string, rows_applied long, deletes long, "
-                "min_lsn long, max_lsn long, snapshot_id long",
+            # the rows already live on the driver, so pyarrow writes
+            # them in-process: no Spark job per epoch
+            self.lineage.append(
+                pa.Table.from_pylist(
+                    [dict(zip(LINEAGE_SCHEMA.names, r)) for r in rows],
+                    schema=LINEAGE_SCHEMA,
+                ),
+                batch_id=f"lineage-{batch_id}",
             )
-            self.lineage.append(row, batch_id=f"lineage-{batch_id}")
         self._applied_since_maintenance += 1
         self._applied_since_rollup += 1
         if self.rollup is not None and self._applied_since_rollup >= self.rollup_every:

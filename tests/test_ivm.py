@@ -245,3 +245,31 @@ def test_applier_refreshes_rollup_per_epoch(spark, tmp_path):
         .agg(F.count("*").cast("long").alias("n")).collect()
     }
     assert {(r.repo, r.n_paths) for r in applier.rollup.read().collect()} == exp
+
+
+def test_float_sums_are_refused(spark, tmp_path):
+    """Float/double sums cannot cancel exactly under retraction, so
+    they are refused: at construction when the source schema is known,
+    else at the first refresh. Integer and decimal sums are accepted."""
+    ddl = "id long, g string, v long, f double"
+    src = LakeTable(spark, str(tmp_path / "src"), buckets=4)
+
+    def rollup(name, aggs):
+        roll = LakeTable(spark, str(tmp_path / name), buckets=4)
+        return IncrementalRollup(
+            src, roll, ["g"], aggs, cursor_path=str(tmp_path / f"{name}.json")
+        )
+
+    late = rollup("late", [AggSpec("s", "sum", "f")])  # schema unknown yet
+    src.merge(spark.createDataFrame([(1, "a", 2, 0.1)], ddl), ["id"], batch_id="b0")
+    with pytest.raises(ValueError, match="floating"):
+        late.refresh()
+    with pytest.raises(ValueError, match="floating"):
+        rollup("f", [AggSpec("n", "count"), AggSpec("s", "sum", "f")])
+    with pytest.raises(ValueError, match="floating"):
+        rollup("expr", [AggSpec("s", "sum", "v * 0.5d")])
+    ok = rollup(
+        "ok", [AggSpec("s", "sum", "v"), AggSpec("d", "sum", "cast(f as decimal(10,2))")]
+    )
+    ok.refresh()
+    assert [(r.g, r.s, float(r.d)) for r in ok.read().collect()] == [("a", 2, 0.1)]
