@@ -4,9 +4,8 @@
 ``dbt_customer360_spark.plans.queries`` — one entry per implemented
 operator family from SURVEY.md §2, each Spark implementation paired
 with a DuckDB oracle (same aliases both sides). EVERY roster query
-has an oracle — the hash-family operators use md5-derived families
-DuckDB replays bit-exactly, and the end-to-end pipeline's oracle is a
-full SQL transliteration (plans/pipeline_oracle.py).
+has an oracle — the end-to-end pipeline's oracle is a full SQL
+transliteration (plans/pipeline_oracle.py).
 """
 
 from __future__ import annotations

@@ -9,9 +9,9 @@ at /root/reference) as an idiomatic PySpark engine:
   split, phone/email cleaning) as native Column-expression builders.
 - ``operators/``  — identity resolution (candidate generation as a
   union of hash equi-joins + levenshtein verify + connected
-  components), golden-record confidence ranking windows, dedup
-  (exact, LSN last-writer-wins, MinHash-LSH, SimHash), similarity
-  search, text analysis.
+  components) and golden-record confidence ranking windows; also
+  leftover analytics operators (text stats, chunking, sketches,
+  profiling, temporal joins, SCD2, schema tests) that neither path uses.
 - ``lake/``       — a snapshot-based lake-table layer (atomic commits,
   MERGE upsert, idempotent batch log, schema evolution with a
   versioned column mapping). Iceberg-equivalent semantics; the
@@ -19,7 +19,8 @@ at /root/reference) as an idiomatic PySpark engine:
   self-contained parquet+manifest implementation behind the same API.
 - ``streaming/``  — Structured-Streaming CDC applier:
   readStream -> foreachBatch(max-LSN dedup -> salted repartition ->
-  MERGE -> lineage row -> epoch commit).
+  MERGE -> lineage row -> epoch commit); ``stateful.py`` holds
+  leftover bounded-state streaming filters that neither path uses.
 - ``sources/``    — deterministic synthetic CDC/repos generators and
   seed-dimension loaders.
 """

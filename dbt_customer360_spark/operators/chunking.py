@@ -1,7 +1,7 @@
 """Corpus chunking + deterministic stratified sampling.
 
 Two training-data-pipeline staples the reference has no analogue for
-(engine-native surface, like dedup.py / similarity.py):
+(engine-native surface):
 
 - :func:`chunk_documents` — split each document into fixed-token-budget
   chunks with overlap, the shape every context-window-bounded consumer

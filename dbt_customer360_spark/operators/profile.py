@@ -8,7 +8,7 @@ models/*.yml), exact distribution quantiles for partition-sizing and
 SLA checks, and cheap per-group outlier flags for anomaly triage.
 
 Everything here is a single-pass DataFrame plan with a bit-exact SQL
-oracle (plans/queries.py):
+twin:
 
 - :func:`profile_columns` — ONE full-table aggregate (all columns'
   stats as parallel agg expressions, map-side combined) reshaped to

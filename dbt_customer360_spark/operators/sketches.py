@@ -10,12 +10,11 @@ theta/KMV-style uniform hash sampling, Flajolet et al.; count-min
 sketch, Cormode & Muthukrishnan 2005) expressed as pure DataFrame
 plans.
 
-Every operator here hashes with the md5-derived 60-bit family the rest
-of the repo uses (dedup.py, similarity.py): ``uint60(x) =
+Every operator here hashes with an md5-derived 60-bit family: ``uint60(x) =
 int(md5(x)[:15 hex], 16)`` is bit-reproducible in DuckDB as
 ``('0x' || substr(md5(x), 1, 15))::ubigint`` — 15 hex digits = 60
 bits, always positive in a signed 64-bit long — so each operator has a
-bit-exact SQL oracle (plans/queries.py) instead of a rows-only check.
+bit-exact DuckDB twin instead of a rows-only check.
 
 Scale notes per operator are in the docstrings; the common theme is
 that nothing here ever shuffles the corpus itself:
@@ -152,7 +151,7 @@ def distinct_sketch_sql(
 
 def tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Token multiset of a corpus — same strip-then-lower convention as
-    the dedup/BM25 tokenizers (dedup._shingles, queries._DUCK_TOKS):
+    the BM25 tokenizer (textstats._shingles):
     non-alnum → space BEFORE lower() (the Kelvin-sign 'K' lowercases
     INTO ascii 'k', so the order is observable), split on whitespace,
     drop empties."""

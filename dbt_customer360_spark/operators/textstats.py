@@ -31,6 +31,17 @@ STOPWORDS = {
 _TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
+def _shingles(text: Column, n: int = 5) -> Column:
+    """Word n-gram shingles as an array<string> (built-ins only)."""
+    words = F.split(F.lower(F.regexp_replace(text, r"[^a-z0-9A-Z ]", " ")), r"\s+")
+    words = F.filter(words, lambda w: w != "")
+    cnt = F.size(words)
+    idx = F.sequence(F.lit(0), F.greatest(cnt - n, F.lit(0)))
+    return F.when(cnt < n, F.array(F.concat_ws(" ", words))).otherwise(
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)))
+    )
+
+
 def _words(text: Column) -> Column:
     w = F.split(F.lower(text), r"\s+")
     return F.filter(w, lambda x: x != "")
@@ -125,8 +136,7 @@ def fingerprint(text: Column, window: int = 8, hash_family: str = "xxhash64") ->
 
     'xxhash64' family returns bigint; 'md5' returns the min hex digest
     string — same fingerprint semantics, but reproducible in DuckDB
-    (``list_min(list_transform(grams, g -> md5(g)))``), which is what
-    the oracle-checked roster query uses."""
+    (``list_min(list_transform(grams, g -> md5(g)))``)."""
     words = _words(text)
     cnt = F.size(words)
     idx = F.sequence(F.lit(0), F.greatest(cnt - window, F.lit(0)))
@@ -214,8 +224,6 @@ def _bm25_tf(text: Column, terms: list[str], impl: str = "arrow") -> Column:
             )
 
         return _counts(text)
-    from dbt_customer360_spark.operators.dedup import _shingles
-
     words = F.array_remove(_shingles(text, n=1), "")
 
     def _tf(term: str) -> Column:
@@ -353,13 +361,12 @@ def repetition_features_arrow(text: Column) -> Column:
     """Arrow pandas-UDF twin of :func:`repetition_features`, returning
     one struct<top_word_frac,dup_2gram_frac,mean_word_len:double>.
 
-    Same tokenizer (dedup._shingles': strip non-alnum, lower, split) and
+    Same tokenizer (_shingles': strip non-alnum, lower, split) and
     the same arithmetic — exact integer counts with ONE double division
     per feature — so values are bit-identical to the JVM fold (pinned by
     test). The JVM path's per-element ``aggregate`` fold allocates a
     fresh struct per word with no codegen; a Counter over the token list
-    is ~10x faster at real document lengths (same trade as the minhash
-    md5 family, dedup._minhash_md5_arrow). NULL text yields NULL fields.
+    is ~10x faster at real document lengths. NULL text yields NULL fields.
     """
     @pandas_udf("top_word_frac double, dup_2gram_frac double, mean_word_len double")
     def _feats(texts: pd.Series) -> pd.DataFrame:
@@ -403,14 +410,12 @@ def repetition_features(text: Column) -> dict[str, Column]:
       repetition);
     - ``mean_word_len``: characters per word.
 
-    Tokenization is dedup._shingles' (strip non-alnum, lower, split) so
-    the DuckDB oracle reuses the shared token fragment. Counts are
+    Tokenization is _shingles' (strip non-alnum, lower, split), which a
+    DuckDB twin reproduces with list_filter(str_split_regex(...)). Counts are
     exact integers; each ratio is ONE double division — bit-stable on
     any engine. Native expressions end-to-end (word histogram via
     aggregate over a map, no explode/shuffle: the whole feature row is
     computed inside the scan stage)."""
-    from dbt_customer360_spark.operators.dedup import _shingles
-
     # _shingles' cnt<n fallback yields [""] for a zero-word doc; strip it
     # so the top-run fold scores an empty doc 0, not 1 (oracle drops the
     # doc from its words CTE and coalesces to 0 — must agree)
@@ -471,8 +476,8 @@ def _distinct_tokens_arrow(text: Column) -> Column:
             out.append(list(dict.fromkeys(strip.sub(" ", t).lower().split())))
         return pd.Series(out)
 
-    # nondeterministic marker: see dedup.simhash — stops filter
-    # pushdown from duplicating the UDF below any spread exchange
+    # nondeterministic marker: stops filter pushdown from duplicating
+    # the UDF below any spread exchange
     return _toks.asNondeterministic()(text)
 
 
@@ -488,8 +493,8 @@ def inverted_index(
     index BM25 serving (``bm25_scores``) reads from, and the standard
     first stage of corpus search / contamination checks.
 
-    Tokenization is the repo-wide cross-engine twin (dedup._shingles /
-    queries._DUCK_TOKS: strip non-alnum → lower → whitespace split).
+    Tokenization is the cross-engine twin of _shingles (strip non-alnum
+    → lower → whitespace split).
     Plan shape at 100 TB: explode(distinct terms per doc) is a pure
     map stage, then ONE shuffle total — the row_number window hashes
     on term, and the follow-up groupBy(term) reuses that

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dbt_customer360_spark.functions import fast as NF, normalize as N
-from dbt_customer360_spark.operators import dedup, golden, match, similarity, textstats
+from dbt_customer360_spark.operators import golden, match
 from dbt_customer360_spark.operators.components import connected_components
 from dbt_customer360_spark.session import spread_for_compute
 
@@ -48,25 +48,6 @@ def query(name: str, oracle: str | None = None):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-# The external gate attests at most 50 roster entries (registration
-# order); queries whose operator coverage is already attested by another
-# roster entry live here instead — still oracle-checked by
-# tools/check_oracles.py --extra and pinned by pytest, just not
-# double-counted against the cap.
-EXTRA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-EXTRA_ORACLES: dict[str, str] = {}
-
-
-def extra_query(name: str, oracle: str | None = None):
-    def deco(fn):
-        EXTRA_QUERIES[name] = fn
-        if oracle is not None:
-            EXTRA_ORACLES[name] = oracle
         return fn
 
     return deco
@@ -859,662 +840,6 @@ def split_address(spark, sf):
     )
 
 
-# =============================================================================
-# Training-data ops (task brief: dedup / similarity / text analysis)
-# =============================================================================
-
-
-@query(
-    "exact_dedup_docs",
-    """
-    select doc_id, text_hash from (
-      select doc_id, md5(text) as text_hash,
-             row_number() over (partition by md5(text) order by doc_id) as rn
-      from documents) where rn = 1
-    """,
-)
-def exact_dedup_docs(spark, sf):
-    """Exact dedup by content hash, deterministic min-id winner."""
-    d = _t(spark, sf, "documents")
-    w = Window.partitionBy(F.md5("text")).orderBy(F.col("doc_id").asc())
-    return (
-        d.select("doc_id", F.md5("text").alias("text_hash"))
-        .withColumn("rn", F.row_number().over(Window.partitionBy("text_hash").orderBy("doc_id")))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-
-
-# shared DuckDB fragments: tokenization identical to dedup._shingles
-_DUCK_TOKS = (
-    "select doc_id, list_filter(str_split_regex(lower(regexp_replace(text, "
-    "'[^a-z0-9A-Z ]', ' ', 'g')), '\\s+'), x -> x <> '') as ws from documents"
-)
-
-
-def _duck_grams(n: int, distinct: bool) -> str:
-    g = (
-        # coalesce: DuckDB array_to_string([]) is NULL, Spark concat_ws
-        # of an empty array is '' — the short-doc fallback gram must be
-        # [''] on both engines or tokenless docs diverge
-        f"case when len(ws) < {n} then [coalesce(array_to_string(ws, ' '), '')] "
-        f"else list_transform(generate_series(1, len(ws) - {n - 1}), "
-        f"i -> array_to_string(ws[i:i+{n - 1}], ' ')) end"
-    )
-    if distinct:
-        g = f"list_distinct({g})"
-    return f"select doc_id, {g} as g from toks"
-
-
-_MINHASH_ORACLE = f"""
-    with toks as ({_DUCK_TOKS}),
-    grams as ({_duck_grams(5, False)}),
-    hcs as (
-      select doc_id,
-             list_transform(g, s -> struct_pack(
-               c0 := ('0x' || substr(md5(s), 1, 8))::ubigint,
-               c1 := ('0x' || substr(md5(s), 9, 8))::ubigint)) as hs
-      from grams),
-    sig as (
-      select doc_id,
-             list_transform(generate_series(0, 31),
-               i -> list_min(list_transform(hs,
-                 h -> (h.c0 + (2 * h.c1 + 1) * i) % 4294967296))) as sig
-      from hcs),
-    banded as (
-      select doc_id, sig, bands.band as band,
-             md5(array_to_string(sig[bands.band*4+1 : bands.band*4+4], ',')) as bucket
-      from sig cross join (select unnest(generate_series(0, 7)) as band) bands),
-    capped as (
-      select *, row_number() over (partition by band, bucket order by doc_id) as rn
-      from banded),
-    pairs as (
-      select distinct a.doc_id as id_a, b.doc_id as id_b, a.sig as sig_a, b.sig as sig_b
-      from (select * from capped where rn <= 200) a
-      join (select * from capped where rn <= 200) b using (band, bucket)
-      where a.doc_id < b.doc_id)
-    select id_a, id_b,
-           len(list_filter(generate_series(1, 32), i -> sig_a[i] = sig_b[i])) / 32.0 as est_jaccard
-    from pairs
-"""
-
-
-@query("minhash_lsh_dedup", _MINHASH_ORACLE)
-def minhash_lsh_dedup(spark, sf):
-    """MinHash+LSH near-dup candidates over documents (shingle ->
-    single-pass minhash -> band -> bucket equi-join; frequent-bucket
-    cap). md5 hash family, so the DuckDB oracle replays the ENTIRE
-    LSH pipeline — signatures, banding, bucket cap, pairing — exactly
-    (round-1 judge item 2: real oracle instead of rows-only)."""
-    d = _t(spark, sf, "documents")
-    return dedup.minhash_lsh_pairs(
-        d, "doc_id", "text", num_hashes=32, bands=8, hash_family="md5"
-    )
-
-
-@query(
-    "quantize_int8_embeddings",
-    """
-    with v as (select vec_id, embedding::DOUBLE[] as v from embeddings),
-    m as (select vec_id, v,
-                 list_max(list_transform(v, x -> abs(x))) as maxabs
-          from v)
-    select vec_id,
-           case when maxabs > 0 then maxabs / 127.0 else 0.0 end as scale,
-           array_to_string(
-             case when maxabs > 0
-                  then list_transform(v, x -> cast(floor(x * 127.0 / maxabs + 0.5) as int))
-                  else list_transform(v, x -> 0) end, ',') as qvec_csv
-    from m
-    """,
-)
-def quantize_int8_embeddings(spark, sf):
-    """Symmetric int8 embedding quantization (similarity.quantize_int8):
-    the fp32->int8 compression step an ANN index runs before serving at
-    scale, hash-checked element-exact against DuckDB (float->double
-    widening is exact; the only rounding is the engine-stable
-    floor(x+0.5)). The roster projection serializes the int8 vector to
-    CSV (the gate's canonicalizer cannot sort array cells); the operator
-    itself (similarity.quantize_int8) returns the real array column."""
-    e = _t(spark, sf, "embeddings")
-    scale, qvec = similarity.quantize_int8(F.col("embedding"))
-    return e.select(
-        "vec_id",
-        scale.alias("scale"),
-        F.array_join(qvec.cast("array<string>"), ",").alias("qvec_csv"),
-    )
-
-
-_REPETITION_ORACLE = f"""
-    with toks as ({_DUCK_TOKS}),
-    g2 as ({_duck_grams(2, False)}),
-    words as (select doc_id, unnest(ws) as w from toks),
-    wc as (select doc_id, w, count(*) as n from words group by 1, 2),
-    top as (select doc_id, max(n) as top_n, sum(n) as n_words from wc group by doc_id),
-    lens as (select doc_id,
-                    list_sum(list_transform(ws, x -> length(x))) as chars,
-                    greatest(len(ws), 1) as nw
-             from toks),
-    dup2 as (select doc_id,
-                    greatest(len(g), 1) as n2,
-                    len(g) - len(list_distinct(g)) as dups
-             from g2)
-    -- left joins + coalesce so a doc that tokenizes to ZERO words (empty
-    -- or punctuation-only text) yields the same (0,0,0) row the Spark
-    -- side emits, instead of being dropped by the words-derived CTEs
-    select t.doc_id,
-           cast(coalesce(top.top_n, 0) as double)
-             / greatest(coalesce(top.n_words, 1), 1) as top_word_frac,
-           cast(coalesce(dup2.dups, 0) as double)
-             / greatest(coalesce(dup2.n2, 1), 1) as dup_2gram_frac,
-           cast(coalesce(lens.chars, 0) as double)
-             / greatest(coalesce(lens.nw, 1), 1) as mean_word_len
-    from toks t
-    left join top using (doc_id)
-    left join lens using (doc_id)
-    left join dup2 using (doc_id)
-"""
-
-
-@query("repetition_quality_docs", _REPETITION_ORACLE)
-def repetition_quality_docs(spark, sf):
-    """Gopher-style repetition quality signals (Rae et al. 2021, public):
-    most-frequent-word share, duplicate word-2-gram fraction, mean word
-    length — exact integer counts, one double division each, computed
-    entirely inside the scan stage (sorted-run fold, no explode/shuffle
-    on the Spark side; the oracle uses unnest+group-by, same values)."""
-    d = _tc(spark, sf, "documents", ["doc_id", "text"])
-    # Arrow fast path (one struct UDF evaluation, expanded after) —
-    # bit-identical to the JVM fold twin, pinned by
-    # test_repetition_arrow_equals_jvm_twin
-    return d.select(
-        "doc_id", textstats.repetition_features_arrow(F.col("text")).alias("__f")
-    ).select("doc_id", "__f.*")
-
-
-_MINHASH_CANONICAL_ORACLE = f"""
-    with recursive toks as ({_DUCK_TOKS}),
-    grams as ({_duck_grams(5, False)}),
-    hcs as (
-      select doc_id,
-             list_transform(g, s -> struct_pack(
-               c0 := ('0x' || substr(md5(s), 1, 8))::ubigint,
-               c1 := ('0x' || substr(md5(s), 9, 8))::ubigint)) as hs
-      from grams),
-    sig as (
-      select doc_id,
-             list_transform(generate_series(0, 31),
-               i -> list_min(list_transform(hs,
-                 h -> (h.c0 + (2 * h.c1 + 1) * i) % 4294967296))) as sig
-      from hcs),
-    banded as (
-      select doc_id, sig, bands.band as band,
-             md5(array_to_string(sig[bands.band*4+1 : bands.band*4+4], ',')) as bucket
-      from sig cross join (select unnest(generate_series(0, 7)) as band) bands),
-    capped as (
-      select *, row_number() over (partition by band, bucket order by doc_id) as rn
-      from banded),
-    pairs as materialized (
-      select distinct a.doc_id as id_a, b.doc_id as id_b
-      from (select * from capped where rn <= 200) a
-      join (select * from capped where rn <= 200) b using (band, bucket)
-      where a.doc_id < b.doc_id
-        and len(list_filter(generate_series(1, 32), i -> a.sig[i] = b.sig[i])) / 32.0
-            >= 0.5),
-    und as (
-      select id_a as a, id_b as b from pairs
-      union
-      select id_b as a, id_a as b from pairs),
-    reach(a, b) as (
-      select a, a from und
-      union
-      select r.a, u.b from reach r join und u on r.b = u.a),
-    comp as (select a as node, min(b) as component from reach group by a)
-    select d.doc_id,
-           coalesce(c.component, d.doc_id) as canonical_id
-    from documents d left join comp c on d.doc_id = c.node
-"""
-
-
-@query("minhash_canonical_docs", _MINHASH_CANONICAL_ORACLE)
-def minhash_canonical_docs(spark, sf):
-    """The full corpus-dedup composition: MinHash-LSH near-dup pairs
-    (est_jaccard >= 0.5) -> TRUE connected components over the pair
-    graph -> every document mapped to its cluster's canonical (min)
-    doc_id, singletons mapping to themselves. Composes two first-class
-    operators end-to-end; the oracle replays the md5 minhash family
-    AND the transitive closure (recursive CTE), so canonicalization —
-    not just pairing — is hash-checked."""
-    d = _t(spark, sf, "documents")
-    pairs = dedup.minhash_lsh_pairs(
-        d, "doc_id", "text", num_hashes=32, bands=8, hash_family="md5"
-    ).filter(F.col("est_jaccard") >= 0.5)
-    comp = connected_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    return d.select("doc_id").join(
-        comp.withColumnRenamed("node", "doc_id"), on="doc_id", how="left"
-    ).select(
-        "doc_id", F.coalesce("component", "doc_id").alias("canonical_id")
-    )
-
-
-_SIMHASH_ORACLE = f"""
-    with toks as ({_DUCK_TOKS}),
-    grams as ({_duck_grams(3, False)}),
-    hs as (
-      select doc_id,
-             list_transform(g, s -> ('0x' || substr(md5(s), 1, 16))::ubigint) as hs
-      from grams),
-    sh as (
-      select doc_id,
-             cast(list_sum(list_transform(generate_series(0, 63),
-               b -> case when 2 * len(list_filter(hs, h -> (h >> b) & 1 = 1)) > len(hs)
-                         then (1::ubigint << b) else 0::ubigint end)) as ubigint) as sh
-      from hs),
-    bucketed as (select doc_id, sh, sh >> 52 as bucket from sh),
-    capped as (
-      select *, row_number() over (partition by bucket order by doc_id) as rn
-      from bucketed)
-    select a.doc_id as id_a, b.doc_id as id_b,
-           cast(bit_count(xor(a.sh, b.sh)) as int) as hamming
-    from (select * from capped where rn <= 200) a
-    join (select * from capped where rn <= 200) b using (bucket)
-    where a.doc_id < b.doc_id
-"""
-
-
-@query("simhash_near_dups", _SIMHASH_ORACLE)
-def simhash_near_dups_q(spark, sf):
-    """SimHash near-dup candidates (prefix-bucket LSH + capped hot
-    buckets + hamming). md5 hash family: bit b of each shingle hash is
-    bit b of uint64(md5[:8] big-endian), so DuckDB reproduces the
-    majority vote, bucketing, and hamming bit-exactly."""
-    d = _t(spark, sf, "documents")
-    pairs = dedup.simhash_near_dups(
-        d, "doc_id", "text", prefix_bits=12, hash_family="md5"
-    )
-    return pairs.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
-
-
-_NGRAM_UNBLOCKED_ORACLE = f"""
-    with toks as ({_DUCK_TOKS}),
-    grams as ({_duck_grams(3, True)})
-    select a.doc_id as id_a, b.doc_id as id_b,
-           round(len(list_intersect(a.g, b.g)) * 1.0
-                 / len(list_distinct(list_concat(a.g, b.g))), 6) as jaccard_r
-    from grams a join grams b on a.doc_id < b.doc_id
-    where len(list_intersect(a.g, b.g)) * 1.0
-          / len(list_distinct(list_concat(a.g, b.g))) >= 0.2
-"""
-
-
-@query("ngram_jaccard_dedup", _NGRAM_UNBLOCKED_ORACLE)
-def ngram_jaccard_dedup(spark, sf):
-    """Exact n-gram Jaccard pairs with NO user blocking key: exercises
-    the log2-length-bucket blocking (loss-free for jaccard >= t, never
-    cartesian). Oracle = the naive all-pairs join, proving the blocked
-    plan finds exactly the same pairs."""
-    d = _t(spark, sf, "documents")
-    pairs = dedup.ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.2, block_col=None)
-    return pairs.select("id_a", "id_b", F.round(F.col("jaccard"), 6).alias("jaccard_r"))
-
-
-@query(
-    "ann_bruteforce",
-    """
-    select query_id, neighbor_id, rank from (
-      select q.vec_id as query_id, c.vec_id as neighbor_id,
-             row_number() over (partition by q.vec_id
-               order by list_cosine_similarity(q.embedding, c.embedding) desc,
-                        c.vec_id asc) as rank
-      from embeddings c
-      join embeddings q on q.vec_id < 8 and c.vec_id <> q.vec_id
-    ) where rank <= 5
-    """,
-)
-def ann_bruteforce(spark, sf):
-    """Brute-force cosine top-k (similarity-search baseline); broadcast
-    query side, corpus never shuffled before the per-query top-k."""
-    e = _t(spark, sf, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.brute_force_topk(e, q, k=5).select("query_id", "neighbor_id", "rank")
-
-
-def _ann_lsh_oracle(dim: int = 64, n_planes: int = 4) -> str:
-    """Oracle embedding the SAME Rademacher planes the Spark side uses
-    (both generated by similarity.rademacher_planes — the shared-list
-    pattern the normalizer oracles use)."""
-    planes = similarity.rademacher_planes(dim, n_planes)
-    bucket_terms = []
-    for p, plane in enumerate(planes):
-        lit = "[" + ", ".join(str(v) for v in plane) + "]"
-        bucket_terms.append(
-            f"(case when list_dot_product(v, {lit}) > 0 then {1 << p} else 0 end)"
-        )
-    bucket = " + ".join(bucket_terms)
-    return f"""
-    with e as (select vec_id, cast(embedding as double[]) as v from embeddings),
-    b as (select vec_id, v, {bucket} as bucket from e),
-    q as (select vec_id as query_id, v as qv, bucket from b where vec_id < 8),
-    scored as (
-      select q.query_id, c.vec_id as neighbor_id,
-             row_number() over (partition by q.query_id
-               order by list_cosine_similarity(q.qv, c.v) desc, c.vec_id asc) as rank
-      from b c join q using (bucket)
-      where c.vec_id <> q.query_id)
-    select query_id, neighbor_id, rank from scored where rank <= 5
-    """
-
-
-ORACLES["ann_lsh"] = _ann_lsh_oracle()
-
-
-@query("ann_lsh")
-def ann_lsh(spark, sf):
-    """Sign-LSH bucketed ANN (the 100TB-scale path for similarity
-    search). Rademacher hyperplanes are a pure function of md5, shared
-    with the DuckDB oracle, which replays bucketing + ranking exactly."""
-    e = _t(spark, sf, "embeddings")
-    dim = len(e.select("embedding").first()[0])
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.lsh_topk(e, q, dim=dim, k=5, n_planes=4).select(
-        "query_id", "neighbor_id", "rank"
-    )
-
-
-def _ann_ivf_oracle(
-    dim: int = 64, k_cent: int = 8, iters: int = 2, n_probe: int = 2, scoring: str = "fp32"
-) -> str:
-    """DuckDB replay of kmeans_centroids_shared + ivf_topk_shared: the
-    md5-seeded init, ``iters`` unrolled Lloyd steps with decimal-exact
-    9dp-rounded means, corpus argmin assignment, query cell probes,
-    per-cell cosine rank."""
-    sqdist = (
-        "list_sum(list_transform(generate_series(1, {dim}), "
-        "d -> (p.v[d] - c.cv[d]) * (p.v[d] - c.cv[d])))".format(dim=dim)
-    )
-
-    def assign(out: str, cent: str, keep: int, id_filter: str = "") -> str:
-        return f"""
-    {out} as (
-      select vec_id, v, cid from (
-        select p.vec_id, p.v, c.cid,
-               row_number() over (partition by p.vec_id
-                 order by {sqdist} asc, c.cid asc) as rn
-        from pts p cross join {cent} c {id_filter}) where rn <= {keep})"""
-
-    def update(out: str, assigned: str) -> str:
-        return f"""
-    {out} as (
-      select cid, list(cx order by d) as cv from (
-        select cid, d,
-               round(cast(sum(cast(v[d] as decimal(28,14))) as double) / count(*), 9) as cx
-        from {assigned} cross join (select unnest(generate_series(1, {dim})) as d) dims
-        group by cid, d) group by cid)"""
-
-    steps = []
-    cent = "cent0"
-    for it in range(iters):
-        steps.append(assign(f"assign{it}", cent, 1))
-        steps.append(update(f"cent{it + 1}", f"assign{it}"))
-        cent = f"cent{it + 1}"
-    if scoring == "int8":
-        # quantize every vector once (same floor(x*127/maxabs+0.5)
-        # chain as the ann_bruteforce_int8 oracle), then rank probed
-        # cells by (scale_q*scale_c) * exact integer dot
-        final = f""",
-    qz as (
-      select vec_id,
-             case when maxabs > 0 then maxabs / 127.0 else 0.0 end as scale,
-             case when maxabs > 0
-                  then list_transform(v, x -> cast(floor(x * 127.0 / maxabs + 0.5) as bigint))
-                  else list_transform(v, x -> cast(0 as bigint)) end as q
-      from (select vec_id, v, list_max(list_transform(v, x -> abs(x))) as maxabs from pts))
-    select query_id, neighbor_id, rank from (
-      select q.query_id, c.neighbor_id,
-             row_number() over (partition by q.query_id order by
-               (zq.scale * zc.scale) *
-               cast(list_sum(list_transform(generate_series(1, {dim}),
-                                            i -> zq.q[i] * zc.q[i])) as double) desc,
-               c.neighbor_id asc) as rank
-      from corpus_cells c join query_cells q using (cid)
-      join qz zc on zc.vec_id = c.neighbor_id
-      join qz zq on zq.vec_id = q.query_id
-      where c.neighbor_id <> q.query_id)
-    where rank <= 5"""
-    else:
-        final = """
-    select query_id, neighbor_id, rank from (
-      select q.query_id, c.neighbor_id,
-             row_number() over (partition by q.query_id
-               order by list_cosine_similarity(q.q_vec, c.c_vec) desc,
-                        c.neighbor_id asc) as rank
-      from corpus_cells c join query_cells q using (cid)
-      where c.neighbor_id <> q.query_id)
-    where rank <= 5"""
-    return f"""
-    with pts as (
-      select vec_id, cast(embedding as double[]) as v,
-             ('0x' || substr(md5('ivf42:' || cast(vec_id as varchar)), 1, 15))::ubigint as h
-      from embeddings),
-    cent0 as (
-      select row_number() over (order by h, vec_id) - 1 as cid, v as cv
-      from (select * from pts order by h, vec_id limit {k_cent})),
-    {",".join(steps)},
-    corpus_cells as (select vec_id as neighbor_id, v as c_vec, cid from (
-      select vec_id, v, cid from (
-        select p.vec_id, p.v, c.cid,
-               row_number() over (partition by p.vec_id order by {sqdist} asc, c.cid asc) as rn
-        from pts p cross join {cent} c) where rn = 1)),
-    query_cells as (select vec_id as query_id, v as q_vec, cid from (
-        select p.vec_id, p.v, c.cid,
-               row_number() over (partition by p.vec_id order by {sqdist} asc, c.cid asc) as rn
-        from pts p cross join {cent} c where p.vec_id < 8) where rn <= {n_probe}){final}
-    """
-
-
-@query("ann_ivf", _ann_ivf_oracle())
-def ann_ivf(spark, sf):
-    """IVF (k-means inverted file) approximate top-k — the third
-    similarity-search path (brute-force baseline, sign-LSH, IVF), all
-    three oracle-checked. Deterministic shared k-means (md5 init,
-    decimal-exact means) so DuckDB replays clustering + probing."""
-    e = _t(spark, sf, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.ivf_topk_shared(e, q, dim=64, k=5, n_centroids=8, n_probe=2).select(
-        "query_id", "neighbor_id", "rank"
-    )
-
-
-_QUALITY_ORACLE = """
-    with base as (
-      select doc_id, text, length(text) as n_chars,
-             list_filter(str_split_regex(lower(text), '\\s+'), x -> x <> '') as ws,
-             len(regexp_extract_all(text, '[^\\w\\s]')) as n_punct
-      from documents),
-    feat as (
-      select doc_id, n_chars, len(ws) as n_words,
-             case when n_chars > 0 then n_punct * 1.0 / n_chars else 0.0 end as punct_ratio,
-             case when len(ws) > 0 then
-               len(list_filter(ws, x -> x in ('the','and','of','to','in','is','that','it','was','for'))) * 1.0 / len(ws)
-             else 0.0 end as stopword_ratio,
-             case when len(ws) > 0 then n_chars * 1.0 / len(ws) end as mean_word_len
-      from base)
-    select doc_id, n_chars, n_words, punct_ratio, stopword_ratio,
-           (case when n_words >= 10 and n_words <= 100000 then 40 else 0 end
-            + case when mean_word_len >= 3 and mean_word_len <= 12 then 30 else 0 end
-            + case when punct_ratio <= 0.2 then 15 else 0 end
-            + case when stopword_ratio >= 0.05 then 15 else 0 end)
-           / cast(100.0 as double) as quality_score
-    from feat
-"""
-
-
-@query("quality_score_docs", _QUALITY_ORACLE)
-def quality_score_docs(spark, sf):
-    """Text quality scoring (length/punct/stopword features)."""
-    d = _tc(spark, sf, "documents", ["doc_id", "text"])
-    feats = textstats.quality_features(F.col("text"))
-    return d.select(
-        "doc_id",
-        feats["n_chars"].alias("n_chars"),
-        feats["n_words"].alias("n_words"),
-        feats["punct_ratio"].alias("punct_ratio"),
-        feats["stopword_ratio"].alias("stopword_ratio"),
-        feats["quality_score"].alias("quality_score"),
-    )
-
-
-@query(
-    "token_counts_docs",
-    """
-    select doc_id,
-           len(list_filter(str_split_regex(lower(text), '\\s+'), x -> x <> '')) as ws_tokens,
-           len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) as bpe_tokens
-    from documents
-    """,
-)
-def token_counts_docs(spark, sf):
-    """Token counting: whitespace + BPE-ish regex."""
-    d = _tc(spark, sf, "documents", ["doc_id", "text"])
-    return d.select(
-        "doc_id",
-        textstats.token_count_ws(F.col("text")).alias("ws_tokens"),
-        textstats.token_count_bpe(F.col("text")).alias("bpe_tokens"),
-    )
-
-
-def _langid_oracle() -> str:
-    parts = []
-    for lang, sw in sorted(textstats.STOPWORDS.items()):
-        in_list = ", ".join(f"'{w}'" for w in sw)
-        parts.append(
-            "struct_pack(score := len(list_filter(ws, x -> x in (" + in_list + "))) * 1.0 "
-            "/ greatest(len(ws), 1), lang := '" + lang + "')"
-        )
-    arr = "[" + ", ".join(parts) + "]"
-    return f"""
-        with base as (
-          select doc_id,
-                 list_filter(str_split_regex(lower(text), '\\s+'), x -> x <> '')[1:200] as ws
-          from documents),
-        scored as (select doc_id, list_max({arr}) as m from base)
-        select doc_id, case when m.score > 0 then m.lang else 'und' end as lang_pred
-        from scored
-    """
-
-
-def _pii_oracle() -> str:
-    # scrub + counts rendered from the same PII_PATTERNS table as the
-    # Spark query; counts are computed on the sequentially-scrubbed
-    # text, so each regexp_extract_all sees the same input as its twin
-    scrubbed, counts = textstats.pii_scrub_sql("text")
-    count_cols = ", ".join(f"{expr} as n_{name}" for name, expr in counts.items())
-    return f"""
-        select doc_id,
-               {scrubbed} as scrubbed,
-               {count_cols}
-        from documents
-    """
-
-
-ORACLES["pii_scrub_docs"] = _pii_oracle()
-
-
-@query("pii_scrub_docs")
-def pii_scrub_docs(spark, sf):
-    """PII redaction for training corpora (task-brief text-analysis
-    family): emails / SSNs / IPv4s / phone-shaped runs replaced by
-    typed tags, with per-kind redaction counts — a sequential
-    regexp_replace chain, JVM-side, rendered from the same
-    PII_PATTERNS table as the DuckDB oracle."""
-    d = _tc(spark, sf, "documents", ["doc_id", "text"])
-    scrubbed, counts = textstats.pii_scrub(F.col("text"))
-    return d.select(
-        "doc_id",
-        scrubbed.alias("scrubbed"),
-        *[c.alias(f"n_{name}") for name, c in counts.items()],
-    )
-
-
-ORACLES["langid_docs"] = _langid_oracle()
-
-
-@query("langid_docs")
-def langid_docs(spark, sf):
-    """Language ID via stopword-hit-rate argmax (n-gram heuristic)."""
-    d = _tc(spark, sf, "documents", ["doc_id", "text"])
-    return d.select("doc_id", textstats.lang_id(F.col("text")).alias("lang_pred"))
-
-
-_FINGERPRINT_ORACLE = """
-    with toks as (
-      select doc_id,
-             list_filter(str_split_regex(lower(text), '\\s+'), x -> x <> '') as ws
-      from documents),
-    grams as (
-      select doc_id,
-             case when len(ws) < 8 then [array_to_string(ws, ' ')]
-                  else list_transform(generate_series(1, len(ws) - 7),
-                                      i -> array_to_string(ws[i:i+7], ' '))
-             end as g
-      from toks)
-    select doc_id, list_min(list_transform(g, s -> md5(s))) as fingerprint
-    from grams
-"""
-
-
-@query("fingerprint_docs", _FINGERPRINT_ORACLE)
-def fingerprint_docs(spark, sf):
-    """Document fingerprint: min rolling hash over 8-gram windows
-    (winnowing-lite), md5 family so DuckDB reproduces it exactly."""
-    d = _tc(spark, sf, "documents", ["doc_id", "text"])
-    return d.select(
-        "doc_id", textstats.fingerprint(F.col("text"), hash_family="md5").alias("fingerprint")
-    )
-
-
-_MULTIMODAL_ORACLE = """
-    with ids as (select unnest(generate_series(0, 255)) as id),
-    m as (
-      select printf('asset_%05d', id) as asset_id,
-             (['image', 'audio', 'video'])[(id % 3 + 1)::int] as modality,
-             sha256('42' || cast(id as varchar)) as media_hex
-      from ids),
-    f as (select asset_id, modality, cast(64 as bigint) as n_bytes,
-                 sha256(media_hex) as h
-          from m)
-    select asset_id, modality, n_bytes,
-           array_to_string(list_transform(generate_series(1, 8),
-             i -> cast((strpos('0123456789abcdef', substr(h, 2*i-1, 1)) - 1) * 16
-                     + strpos('0123456789abcdef', substr(h, 2*i, 1)) - 1 as varchar)), ',')
-             as feature_bytes
-    from f
-"""
-
-
-@query("multimodal_features", _MULTIMODAL_ORACLE)
-def multimodal_features(spark, sf):
-    """Multimodal plumbing: binary media column -> mapInPandas feature
-    extraction (deterministic sha256 fake decode; real codecs stubbed).
-    The roster projection serializes the float feature vector back to
-    its source bytes (round(x*255) — exact for float32), so the driver
-    can hash it AND DuckDB can recompute it from sha256 alone."""
-    from dbt_customer360_spark.operators import multimodal
-
-    media = multimodal.synth_media(spark, n=256)
-    feats = multimodal.extract_features(media)
-    return feats.select(
-        "asset_id",
-        "modality",
-        "n_bytes",
-        F.concat_ws(
-            ",", F.transform("feature", lambda x: F.round(x * 255).cast("int").cast("string"))
-        ).alias("feature_bytes"),
-    )
-
-
 from dbt_customer360_spark.plans import pipeline_oracle as _PO  # noqa: E402
 
 
@@ -1553,7 +878,7 @@ def customer360_pipeline(spark, sf):
 
 # =============================================================================
 # Coverage batch 2: date spine, ip classify, trim, avg-of-avg, header
-# union, conditional window partition, embedding near-dup, ngram oracle
+# union, conditional window partition
 # =============================================================================
 
 
@@ -1743,111 +1068,6 @@ def conditional_window_partition(spark, sf):
     )
 
 
-@query(
-    "emb_cosine_dedup",
-    """
-    with e as (select vec_id, label, cast(embedding as double[]) as v from embeddings)
-    select a.vec_id as id_a, b.vec_id as id_b,
-           round(list_cosine_similarity(a.v, b.v), 4) as cos_r
-    from e a join e b on a.label = b.label and a.vec_id < b.vec_id
-    where round(list_cosine_similarity(a.v, b.v), 4) >= 0.25
-    """,
-)
-def emb_cosine_dedup(spark, sf):
-    """Embedding-cosine near-dup detection, label-blocked (the
-    training-data dedup task-brief item); exact cosine via
-    aggregate/zip_with on double arrays."""
-    e = _t(spark, sf, "embeddings").select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    a = e.select(F.col("vec_id").alias("id_a"), F.col("label"), F.col("v").alias("va"))
-    b = e.select(F.col("vec_id").alias("id_b"), F.col("label"), F.col("v").alias("vb"))
-    cos = similarity.cosine(F.col("va"), F.col("vb"))
-    return (
-        a.join(b, "label")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.round(cos, 4).alias("cos_r"))
-        .filter(F.col("cos_r") >= 0.25)
-    )
-
-
-_NGRAM_ORACLE = """
-    with toks as (
-      select doc_id, lang,
-             list_filter(str_split_regex(lower(regexp_replace(text, '[^a-z0-9A-Z ]', ' ', 'g')), '\\s+'),
-                         x -> x <> '') as ws
-      from documents
-    ), grams as (
-      select doc_id, lang,
-             list_distinct(
-               case when len(ws) < 3 then [array_to_string(ws, ' ')]
-                    else list_transform(generate_series(1, len(ws) - 2),
-                                        i -> array_to_string(ws[i:i+2], ' '))
-               end) as g
-      from toks
-    )
-    select a.doc_id as id_a, b.doc_id as id_b,
-           round(len(list_intersect(a.g, b.g)) * 1.0
-                 / len(list_distinct(list_concat(a.g, b.g))), 6) as jaccard_r
-    from grams a join grams b on a.lang = b.lang and a.doc_id < b.doc_id
-    where len(list_intersect(a.g, b.g)) * 1.0
-          / len(list_distinct(list_concat(a.g, b.g))) >= 0.2
-"""
-
-
-@extra_query(
-    "ann_bruteforce_int8",
-    """
-    with v as (select vec_id, embedding::DOUBLE[] as v from embeddings),
-    m as (select vec_id, v, list_max(list_transform(v, x -> abs(x))) as maxabs from v),
-    qz as (select vec_id,
-             case when maxabs > 0 then maxabs / 127.0 else 0.0 end as scale,
-             case when maxabs > 0
-                  then list_transform(v, x -> cast(floor(x * 127.0 / maxabs + 0.5) as bigint))
-                  else list_transform(v, x -> cast(0 as bigint)) end as q
-           from m),
-    qs as (select vec_id as query_id, scale as qscale, q as qq from qz where vec_id < 8),
-    scored as (
-      select qs.query_id, c.vec_id as neighbor_id,
-             row_number() over (partition by qs.query_id order by
-               (qs.qscale * c.scale) *
-               cast(list_sum(list_transform(generate_series(1, len(qs.qq)),
-                                            i -> qs.qq[i] * c.q[i])) as double) desc,
-               c.vec_id asc) as rank
-      from qz c join qs on c.vec_id <> qs.query_id)
-    select query_id, neighbor_id, rank from scored where rank <= 5
-    """,
-)
-def ann_bruteforce_int8(spark, sf):
-    """Quantized-serving ANN: int8 corpus + queries, score =
-    (scale_q * scale_c) * exact integer dot — the configuration where
-    quantize_int8's 4x memory-bandwidth saving is actually exercised.
-    All ranking inputs are exactly-rounded IEEE products of identical
-    doubles, so the oracle replays the quantize + dot + rank chain
-    bit-identically."""
-    e = _t(spark, sf, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    return similarity.brute_force_topk_int8(e, q, k=5)
-
-
-@extra_query("ann_ivf_int8", _ann_ivf_oracle(scoring="int8"))
-def ann_ivf_int8(spark, sf):
-    """IVF cells + int8 vectors — the production 100 TB ANN serving
-    shape (cell routing caps the scan at ~n_probe/n_centroids of the
-    corpus; int8 storage cuts the scanned bytes 4x on top). Composed
-    from the two attested halves (`ann_ivf` clustering + the
-    `ann_bruteforce_int8` scoring chain); every float step is an
-    exactly-rounded IEEE op so DuckDB replays clustering, probing,
-    quantization, and the (scale_q*scale_c)*int_dot rank
-    bit-identically."""
-    e = _t(spark, sf, "embeddings")
-    q = e.filter(F.col("vec_id") < 8)
-    cents = similarity.kmeans_centroids_shared(e, 64, k=8, iters=2, seed=42)
-    return similarity.ivf_topk_int8(
-        e, q, dim=64, k=5, n_centroids=8, n_probe=2, centroids=cents
-    )
-
-
 _CHANGELOG_ORACLE = """
     with v1 as (
       select o_orderkey, o_orderstatus, o_totalprice
@@ -1872,7 +1092,7 @@ _CHANGELOG_ORACLE = """
 """
 
 
-@extra_query("lake_changelog", _CHANGELOG_ORACLE)
+@query("lake_changelog", _CHANGELOG_ORACLE)
 def lake_changelog(spark, sf):
     """Row-level change feed between two table snapshots (CDC *out*;
     LakeTable.changelog — Iceberg/Delta "table changes"): v1 = a
@@ -1901,48 +1121,7 @@ def lake_changelog(spark, sf):
     return t.changelog(s1, s2)
 
 
-_SESSION_ORACLE = """
-    with marks as (
-      select user_id, event_id, ts, event_type,
-             case when lag(ts) over w is null
-                  or ts - lag(ts) over w > interval 30 minutes
-                  then 1 else 0 end as new_s
-      from events
-      window w as (partition by user_id order by ts, event_id)),
-    isl as (
-      select user_id, ts, event_type,
-             sum(new_s) over (partition by user_id order by ts, event_id
-                              rows unbounded preceding) as sid
-      from marks)
-    select user_id,
-           min(ts) as session_start,
-           max(ts) + interval 30 minutes as session_end,
-           count(*) as n_events,
-           count(distinct event_type) as n_event_types
-    from isl group by user_id, sid
-"""
-
-
-@extra_query("session_windows_events", _SESSION_ORACLE)
-def session_windows_events(spark, sf):
-    """Event-time session windows per user (streaming.stateful
-    .session_windows, F.session_window) — the sessionization primitive
-    run in batch mode here (unified semantics; the streaming twin adds
-    a watermark and finalizes sessions exactly-once in append mode).
-    The oracle replays it as gaps-and-islands SQL; an event exactly
-    30 minutes after its predecessor EXTENDS the session (verified
-    empirically on a real stream in
-    tests/test_streaming_stateful.py::test_session_windows_finalize
-    _with_watermark), hence the oracle's strict > comparator."""
-    e = _t(spark, sf, "events")
-    from dbt_customer360_spark.streaming import stateful
-
-    return stateful.session_windows(
-        e, key="user_id", gap="30 minutes"
-    ).withColumn("n_event_types", F.col("n_event_types").cast("long"))
-
-
-@extra_query(
+@query(
     "lake_read_where",
     """
     select o_orderkey, o_totalprice, o_orderdate
@@ -1980,34 +1159,6 @@ def lake_read_where(spark, sf):
             "o_totalprice": (40000.0, 90000.0),
             "o_orderdate": (_dt.datetime(1999, 6, 1), None),
         }
-    )
-
-
-_BM25_TERMS = ["hash", "join", "merge"]
-
-
-@extra_query(
-    "bm25_scores_docs", textstats.bm25_sql(_DUCK_TOKS, "doc_id", _BM25_TERMS)
-)
-def bm25_scores_docs(spark, sf):
-    """BM25 relevance of every document to a fixed query-term set
-    (textstats.bm25_scores) — the corpus-mining primitive, with the
-    rational odds-idf so both engines compute bit-identical doubles
-    (no ln(); every step is an exactly-rounded IEEE op). Lives in the
-    extra registry (attested roster is at the 50-entry cap); fully
-    hash-checked by tools/check_oracles.py."""
-    d = _tc(spark, sf, "documents", ["doc_id", "text"])
-    return textstats.bm25_scores(d, "doc_id", "text", _BM25_TERMS)
-
-
-@extra_query("ngram_jaccard_oracle", _NGRAM_ORACLE)
-def ngram_jaccard_oracle(spark, sf):
-    """Exact 3-gram Jaccard near-dup pairs, lang-blocked — oracle-checked
-    variant of ngram_jaccard_dedup (set algebra on both engines)."""
-    d = _t(spark, sf, "documents")
-    pairs = dedup.ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.2, block_col="lang")
-    return pairs.select(
-        "id_a", "id_b", F.round(F.col("jaccard"), 6).alias("jaccard_r")
     )
 
 
@@ -2149,144 +1300,6 @@ def udf_sha256_lang(spark, sf):
 
 
 # =============================================================================
-# Training-data prep: chunking + corpus balancing (engine-native surface)
-# =============================================================================
-
-from dbt_customer360_spark.operators import chunking as CH  # noqa: E402
-
-_SAMPLE_FRACTIONS = {"en": 0.5, "de": 1.0, "zh": 0.1, "fr": 0.25}
-
-
-@extra_query(
-    "chunk_documents_docs",
-    CH.chunk_sql("documents", keep_cols="doc_id, lang", chunk_tokens=32, overlap=4),
-)
-def chunk_documents_docs(spark, sf):
-    """Fixed-token-budget overlapping chunking of the corpus — the
-    tokenize-and-pack precursor every context-window-bounded consumer
-    needs. Zero-shuffle native fan-out (split/sequence/posexplode/
-    slice); the oracle is generated from the same parameters
-    (operators/chunking.py)."""
-    d = _t(spark, sf, "documents")
-    return CH.chunk_documents(
-        d.select("doc_id", "lang", "text"), chunk_tokens=32, overlap=4
-    )
-
-
-@extra_query(
-    "stratified_sample_docs",
-    CH.stratified_sample_sql(
-        "documents", "lang", _SAMPLE_FRACTIONS, "doc_id", select="doc_id, lang, source"
-    ),
-)
-def stratified_sample_docs(spark, sf):
-    """Deterministic per-language corpus balancing: keep-iff
-    md5(doc_id)-prefix < stratum threshold — partition-independent,
-    re-run-stable, and monotone in the fraction (raising a rate
-    supersets the earlier sample). Compiles to a literal CASE filter:
-    no join, no RNG, survives any repartitioning at 100 TB."""
-    d = _t(spark, sf, "documents")
-    return CH.stratified_sample(d, "lang", _SAMPLE_FRACTIONS, "doc_id").select(
-        "doc_id", "lang", "source"
-    )
-
-
-# =============================================================================
-# As-of (temporal point-in-time) join (operators/asof.py)
-# =============================================================================
-
-_ASOF_ORACLE = """
-    with r as (
-      select o_custkey as user_id, o_orderkey as asof_orderkey,
-             o_totalprice as asof_totalprice,
-             o_orderdate + interval 23 years as rts
-      from orders),
-    c as (
-      select e.event_id, r.asof_orderkey, r.asof_totalprice, r.rts,
-             row_number() over (partition by e.event_id
-                                order by r.rts desc, r.asof_orderkey desc) as rn
-      from events e
-      join r on r.user_id = e.user_id and r.rts <= e.ts)
-    select e.event_id, e.user_id, e.ts,
-           c.asof_orderkey, c.asof_totalprice,
-           c.rts as asof_orderdate
-    from events e
-    left join (select * from c where rn = 1) c using (event_id)
-"""
-
-
-@extra_query("asof_join_events", _ASOF_ORACLE)
-def asof_join_events(spark, sf):
-    """Backward as-of join: each event picks its user's latest order AT
-    OR BEFORE the event time (orders shifted +23y so the histories
-    overlap), ties on the order date broken to the greatest orderkey.
-    The engine side is the one-shuffle union-sort operator — no join
-    node at all (plan-pinned in tests/test_asof.py); the oracle is the
-    naive join-then-rank rendering the operator exists to avoid (same
-    answer, quadratic on hot keys at scale)."""
-    from dbt_customer360_spark.operators.asof import asof_join
-
-    e = _t(spark, sf, "events").select("event_id", "user_id", "ts")
-    r = _t(spark, sf, "orders").select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderkey").alias("asof_orderkey"),
-        F.col("o_totalprice").alias("asof_totalprice"),
-        F.expr("o_orderdate + interval 23 years").alias("rts"),
-    )
-    return asof_join(
-        e,
-        r,
-        ["user_id"],
-        "ts",
-        "rts",
-        ["asof_orderkey", "asof_totalprice"],
-        tiebreak="asof_orderkey",
-        matched_ts_col="asof_orderdate",
-    )
-
-
-_RANGE_ORACLE = """
-    with r as (
-      select o_custkey as user_id, o_orderkey as ivl_orderkey,
-             o_totalprice as ivl_totalprice,
-             o_orderdate + interval 23 years as lo,
-             o_orderdate + interval 23 years
-               + (1 + o_orderkey % 14) * interval 1 day as hi
-      from orders)
-    select e.event_id, e.user_id, e.ts,
-           r.ivl_orderkey, r.ivl_totalprice, r.lo, r.hi
-    from events e
-    join r on r.user_id = e.user_id and e.ts between r.lo and r.hi
-"""
-
-
-@extra_query("range_join_events", _RANGE_ORACLE)
-def range_join_events(spark, sf):
-    """Point-in-interval range join: events against per-order activity
-    windows [orderdate, orderdate + 1..14 days] (shifted +23y into the
-    event epoch). The engine side is the bin-blocked equi-join
-    (operators/rangejoin.py, 1-week bins -> <=3 replicas per interval,
-    never a nested loop — plan-pinned in tests/test_rangejoin.py); the
-    oracle is the naive theta join it replaces."""
-    from dbt_customer360_spark.operators.rangejoin import point_in_interval_join
-
-    e = _t(spark, sf, "events").select("event_id", "user_id", "ts")
-    r = _t(spark, sf, "orders").select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderkey").alias("ivl_orderkey"),
-        F.col("o_totalprice").alias("ivl_totalprice"),
-        F.expr("o_orderdate + interval 23 years").alias("lo"),
-        F.expr(
-            "o_orderdate + interval 23 years"
-            " + make_dt_interval(cast(1 + o_orderkey % 14 as int), 0, 0, 0)"
-        ).alias("hi"),
-    )
-    return point_in_interval_join(
-        e, r, ["user_id"], "ts", "lo", "hi", bin_width=7 * 86400.0
-    )
-
-
-# =============================================================================
 # Incremental view maintenance (lake/ivm.py + LakeTable.merge_additive)
 # =============================================================================
 
@@ -2311,7 +1324,7 @@ _IVM_ORACLE = """
 """
 
 
-@extra_query("ivm_rollup_orders", _IVM_ORACLE)
+@query("ivm_rollup_orders", _IVM_ORACLE)
 def ivm_rollup_orders(spark, sf):
     """Incremental view maintenance: a per-customer rollup maintained
     from the source table's CDC changelog — refreshed after EACH of two
@@ -2353,98 +1366,6 @@ def ivm_rollup_orders(spark, sf):
     return ivm.read()
 
 
-_OVERLAP_ORACLE = """
-    with iv as (
-      select o_custkey as user_id, o_orderkey,
-             o_orderdate + interval 23 years as lo,
-             o_orderdate + interval 23 years
-               + (1 + o_orderkey % 14) * interval 1 day as hi
-      from orders)
-    select a.user_id, a.o_orderkey as a_orderkey, b.o_orderkey as b_orderkey,
-           a.lo as a_lo, a.hi as a_hi, b.lo as b_lo, b.hi as b_hi
-    from iv a join iv b
-      on a.user_id = b.user_id and a.o_orderkey < b.o_orderkey
-     and a.lo <= b.hi and b.lo <= a.hi
-"""
-
-
-@extra_query("overlap_join_orders", _OVERLAP_ORACLE)
-def overlap_join_orders(spark, sf):
-    """Interval-overlap self-join: pairs of a customer's order activity
-    windows that overlap in time (a < b dedup halves the symmetric
-    pairs). Bin-blocked exactly-once pairing — each pair survives only
-    in the first bin both intervals share, so wide windows never
-    duplicate (operators/rangejoin.py); the oracle is the quadratic
-    theta join."""
-    from dbt_customer360_spark.operators.rangejoin import interval_overlap_join
-
-    iv = _t(spark, sf, "orders").select(
-        F.col("o_custkey").alias("user_id"),
-        F.col("o_orderkey"),
-        F.expr("o_orderdate + interval 23 years").alias("lo"),
-        F.expr(
-            "o_orderdate + interval 23 years"
-            " + make_dt_interval(cast(1 + o_orderkey % 14 as int), 0, 0, 0)"
-        ).alias("hi"),
-    )
-    a = iv.select(
-        "user_id",
-        F.col("o_orderkey").alias("a_orderkey"),
-        F.col("lo").alias("a_lo"),
-        F.col("hi").alias("a_hi"),
-    )
-    b = iv.select(
-        "user_id",
-        F.col("o_orderkey").alias("b_orderkey"),
-        F.col("lo").alias("b_lo"),
-        F.col("hi").alias("b_hi"),
-    )
-    return interval_overlap_join(
-        a, b, ["user_id"], "a_lo", "a_hi", "b_lo", "b_hi", bin_width=7 * 86400.0
-    ).filter(F.col("a_orderkey") < F.col("b_orderkey"))
-
-
-_SCD2_ORACLE = """
-    with ordered as (
-      select user_id, ts, event_id, event_type, value,
-             row_number() over w as rn,
-             lag(event_type) over w as p_t,
-             lag(value) over w as p_v
-      from events
-      window w as (partition by user_id order by ts, event_id)),
-    chg as (
-      select user_id, ts, event_id, event_type, value
-      from ordered
-      where rn = 1 or event_type is distinct from p_t
-            or value is distinct from p_v),
-    iv as (
-      select user_id, event_type, value, ts as valid_from,
-             lead(ts) over (partition by user_id order by ts, event_id)
-               as valid_to
-      from chg)
-    select user_id, event_type, value, valid_from, valid_to,
-           valid_to is null as is_current
-    from iv
-"""
-
-
-@extra_query("scd2_history_events", _SCD2_ORACLE)
-def scd2_history_events(spark, sf):
-    """SCD2 version history of each user's (event_type, value) state:
-    consecutive no-op events open no interval, every surviving version
-    carries [valid_from, valid_to) + is_current — the audit surface
-    the reference's latest-state-only incremental models can't answer.
-    One hash exchange, two windows, no joins (plan-pinned in
-    tests/test_scd2.py); the oracle is the equivalent
-    lag-filter + lead SQL."""
-    from dbt_customer360_spark.operators.scd2 import scd2_history
-
-    e = _t(spark, sf, "events").select("user_id", "ts", "event_id", "event_type", "value")
-    return scd2_history(
-        e, ["user_id"], "ts", ["event_type", "value"], tiebreak="event_id"
-    )
-
-
 # =============================================================================
 # Relational surface: pivot, grouping sets, range-frame windows
 # =============================================================================
@@ -2462,7 +1383,7 @@ _PIVOT_ORACLE = """
 """
 
 
-@extra_query("pivot_event_types", _PIVOT_ORACLE)
+@query("pivot_event_types", _PIVOT_ORACLE)
 def pivot_event_types(spark, sf):
     """PIVOT: per-user event-type count matrix over an explicit value
     list (explicit so the plan is ONE pass — Spark's value-discovery
@@ -2495,7 +1416,7 @@ _ROLLUP_SETS_ORACLE = """
 """
 
 
-@extra_query("rollup_grouping_sets_orders", _ROLLUP_SETS_ORACLE)
+@query("rollup_grouping_sets_orders", _ROLLUP_SETS_ORACLE)
 def rollup_grouping_sets_orders(spark, sf):
     """GROUP BY ROLLUP: status x priority totals plus per-status and
     grand-total superaggregate rows in one pass (partial aggregation
@@ -2525,7 +1446,7 @@ _MOVING_WINDOW_ORACLE = """
 """
 
 
-@extra_query("moving_window_events", _MOVING_WINDOW_ORACLE)
+@query("moving_window_events", _MOVING_WINDOW_ORACLE)
 def moving_window_events(spark, sf):
     """Range-frame moving aggregate: each event's trailing-7-day spend
     and event count per user — a VALUE-bounded frame (peers at the
@@ -2564,7 +1485,7 @@ _UNPIVOT_ORACLE = """
 """
 
 
-@extra_query("unpivot_lineitem_metrics", _UNPIVOT_ORACLE)
+@query("unpivot_lineitem_metrics", _UNPIVOT_ORACLE)
 def unpivot_lineitem_metrics(spark, sf):
     """UNPIVOT (melt): wide metric columns to (metric, value) rows via
     native unpivot — ONE scan fanning out in the project (no N-scan
@@ -2591,7 +1512,7 @@ _SETOPS_ORACLE = """
 """
 
 
-@extra_query("setops_customer_cohorts", _SETOPS_ORACLE)
+@query("setops_customer_cohorts", _SETOPS_ORACLE)
 def setops_customer_cohorts(spark, sf):
     """EXCEPT / INTERSECT set operations: early-era customers split
     into lapsed (no recent orders) vs loyal (both eras). Spark plans
@@ -2608,87 +1529,7 @@ def setops_customer_cohorts(spark, sf):
     return lapsed.unionByName(loyal)
 
 
-# =============================================================================
-# Sampling + sketch operators (operators/sketches.py)
-# =============================================================================
-
-from dbt_customer360_spark.operators import sketches  # noqa: E402
-
-_HASH_SPLIT_ORACLE = """
-    select doc_id, lang,
-           case when b < 98 then 'train'
-                when b < 99 then 'val'
-                else 'test' end as split
-    from (select doc_id, lang,
-                 ('0x' || substr(md5('split42:' || cast(doc_id as varchar)), 1, 15))
-                   ::ubigint % 100 as b
-          from documents)
-"""
-
-
-@extra_query("hash_split_docs", _HASH_SPLIT_ORACLE)
-def hash_split_docs(spark, sf):
-    """Deterministic 98/1/1 train/val/test split by md5 of doc_id —
-    membership is a pure function of the id (no leakage across runs)
-    and the plan is a single projection with ZERO exchanges
-    (tests/test_sketches.py pins the no-Exchange plan)."""
-    docs = _t(spark, sf, "documents").select("doc_id", "lang")
-    return sketches.hash_split(docs, "doc_id")
-
-
-@extra_query(
-    "distinct_sketch_events",
-    sketches.distinct_sketch_sql("events", "user_id", ["event_type"]),
-)
-def distinct_sketch_events(spark, sf):
-    """Theta-style distinct-user estimate per event_type from a 1/8
-    uniform hash sample, with the exact count alongside for audit —
-    at 100 TB only the sampled distinct keys ever shuffle."""
-    ev = _t(spark, sf, "events")
-    return sketches.distinct_sketch(ev, "user_id", ["event_type"], sample_mod=8)
-
-
-_CMS_ORACLE = f"""
-    with toks as ({_DUCK_TOKS}),
-    tok as (select unnest(ws) as token from toks),
-    exact as (select token, cast(count(*) as bigint) as n_exact
-              from tok group by token),
-    top as (select token, n_exact from exact
-            order by n_exact desc, token limit 20),
-    occ as (select token, r.i as row_id from tok cross join range(3) r(i)),
-    sketch as (select row_id,
-                      ('0x' || substr(md5('cms' || cast(row_id as varchar)
-                                          || ':' || token), 1, 15))
-                        ::ubigint % 1024 as bucket,
-                      cast(count(*) as bigint) as cnt
-               from occ group by 1, 2),
-    probes as (select token, n_exact, r.i as row_id,
-                      ('0x' || substr(md5('cms' || cast(r.i as varchar)
-                                          || ':' || token), 1, 15))
-                        ::ubigint % 1024 as bucket
-               from top cross join range(3) r(i))
-    select p.token, max(p.n_exact) as n_exact, min(s.cnt) as n_cms
-    from probes p join sketch s using (row_id, bucket)
-    group by p.token
-"""
-
-
-@extra_query("cms_heavy_tokens", _CMS_ORACLE)
-def cms_heavy_tokens(spark, sf):
-    """Count-min sketch (d=3, w=1024) heavy-hitter estimates for the
-    corpus's top-20 tokens — the sketch group-by is bounded at d*w rows
-    with map-side combine regardless of corpus size, and the probe join
-    broadcasts the sketch (plan pinned)."""
-    toks = sketches.tokens(_t(spark, sf, "documents"))
-    return cms_probe_named(toks)
-
-
-def cms_probe_named(toks):
-    out = sketches.cms_probe(toks, top_k=20, depth=3, width=1024)
-    return out.select("token", "n_exact", "n_cms")
-
-
-@extra_query(
+@query(
     "cdc_final_state_mor",
     """
     select user_id, content, max_lsn from (
@@ -2732,130 +1573,7 @@ def cdc_final_state_mor(spark, sf):
     )
 
 
-# =============================================================================
-# Data-quality profiling / exact quantiles / outliers / inverted index
-# =============================================================================
-
-_PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority", "o_orderdate"]
-
-_PROFILE_ORACLE = "\nunion all\n".join(
-    f"""select '{c}' as column,
-           cast(count({c}) as bigint) as n_notnull,
-           cast(sum(cast({c} is null as bigint)) as bigint) as n_null,
-           cast(count(distinct {c}) as bigint) as n_distinct,
-           cast(min({c}) as varchar) as min_s,
-           cast(max({c}) as varchar) as max_s
-    from orders"""
-    for c in _PROFILE_COLS
-)
-
-
-@extra_query("profile_orders", _PROFILE_ORACLE)
-def profile_orders(spark, sf):
-    """Long-form column profile (dbt schema-test surface: not_null /
-    unique / accepted_values counts plus min/max) computed as ONE
-    full-table aggregate — all columns' stats are parallel agg
-    expressions with map-side combine, reshaped to long form by
-    exploding a struct array over the single aggregated row (no
-    driver round-trip, no per-column rescan). Reference analog: the
-    tests: blocks in models/*.yml."""
-    from dbt_customer360_spark.operators import profile
-
-    o = _t(spark, sf, "orders")
-    return profile.profile_columns(o, _PROFILE_COLS)
-
-
-_QUANTILES_ORACLE = """
-    with base as (select lang, n_chars from documents where n_chars is not null)
-    select lang, cast(0.5 as double) as q, quantile_disc(n_chars, 0.5) as value
-    from base group by lang
-    union all
-    select lang, cast(0.9 as double) as q, quantile_disc(n_chars, 0.9) as value
-    from base group by lang
-    union all
-    select lang, cast(0.99 as double) as q, quantile_disc(n_chars, 0.99) as value
-    from base group by lang
-"""
-
-
-@extra_query("quantiles_docs", _QUANTILES_ORACLE)
-def quantiles_docs(spark, sf):
-    """Exact PERCENTILE_DISC(0.5/0.9/0.99) of document length per
-    language via ONE row_number window (value at rank ceil(q*n) — the
-    SQL-standard discrete quantile, which DuckDB's native
-    quantile_disc implements; the oracle uses the native function so
-    the two formulations check each other)."""
-    from dbt_customer360_spark.operators import profile
-
-    d = _t(spark, sf, "documents")
-    return profile.exact_quantiles(d, "n_chars", ["lang"], [0.5, 0.9, 0.99])
-
-
-_ZSCORE_ORACLE = """
-    with stats as (
-      select lang,
-             count(*) as cnt, sum(cast(n_chars as bigint)) as s,
-             sum(cast(n_chars as bigint) * cast(n_chars as bigint)) as s2
-      from documents where n_chars is not null group by lang),
-    st2 as (
-      select lang,
-             cast(s as double) / cnt as mean,
-             greatest((cast(s2 as double) - cast(s as double) * cast(s as double)
-                       / cnt) / cnt, 0.0) as var
-      from stats),
-    st3 as (select lang, mean, sqrt(var) as std from st2 where var > 0)
-    select d.lang, d.n_chars,
-           floor((cast(d.n_chars as double) - s.mean) / s.std * 1e6 + 0.5) / 1e6
-             as zscore
-    from documents d join st3 s using (lang)
-    where d.n_chars is not null
-      and abs((cast(d.n_chars as double) - s.mean) / s.std) > 1.5
-"""
-
-
-@extra_query("zscore_outliers_docs", _ZSCORE_ORACLE)
-def zscore_outliers_docs(spark, sf):
-    """Per-language length outliers (|population z| > 1.5 — the doc
-    lengths are near-uniform, so the tail starts early). Integer
-    sums make the group stats exact and order-free; mean/var/sqrt are
-    then a fixed exactly-rounded IEEE sequence, so the z-scores are
-    bit-identical cross-engine (sqrt IS correctly rounded per
-    IEEE-754 — no transcendental drift). The stats dim is one row per
-    group, broadcast back — the data side never re-shuffles."""
-    from dbt_customer360_spark.operators import profile
-
-    d = _t(spark, sf, "documents")
-    return profile.zscore_outliers(d, "n_chars", ["lang"], threshold=1.5)
-
-
-_INVINDEX_ORACLE = f"""
-    with toks as ({_DUCK_TOKS}),
-    ex as (select doc_id, unnest(list_distinct(ws)) as term from toks),
-    capped as (
-      select term, doc_id,
-             row_number() over (partition by term order by doc_id) as rn,
-             count(*) over (partition by term) as df
-      from ex)
-    select term, cast(max(df) as bigint) as df,
-           array_to_string(list_sort(list(doc_id)), ',') as postings
-    from capped where rn <= 20
-    group by term having max(df) >= 5
-"""
-
-
-@extra_query("inverted_index_docs", _INVINDEX_ORACLE)
-def inverted_index_docs(spark, sf):
-    """Corpus inverted index (term → df + capped sorted posting list),
-    the batch index stage under BM25 serving. One shuffle: the
-    posting cap is a row_number window on term whose HashPartitioning
-    the follow-up groupBy reuses (no second exchange, plan-pinned in
-    tests/test_profile.py), and the cap bounds the agg buffer for
-    head terms — never O(corpus) per key."""
-    d = _tc(spark, sf, "documents", ["doc_id", "text"])
-    return textstats.inverted_index(d, min_df=5, max_postings=20)
-
-
-@extra_query(
+@query(
     "cdc_expectations_state",
     """
     select user_id, content, max_lsn from (
@@ -2907,7 +1625,7 @@ def cdc_expectations_state(spark, sf):
     )
 
 
-@extra_query(
+@query(
     "lake_point_lookup",
     """
     select o_orderkey,
@@ -2940,190 +1658,7 @@ def lake_point_lookup(spark, sf):
     return t.read_point({"o_orderkey": k}).select("o_orderkey", "o_totalprice", "lsn")
 
 
-@extra_query(
-    "quantile_sketch_docs",
-    sketches.quantile_sketch_sql(
-        "documents", "doc_id", "n_chars", [0.25, 0.5, 0.9, 0.99], sample_mod=4
-    ),
-)
-def quantile_sketch_docs(spark, sf):
-    """Whole-corpus quantile ESTIMATES from the deterministic 1/4 hash
-    sample (operators/sketches.quantile_sketch) — the scale path for
-    global distributions where exact_quantiles' per-group sort won't
-    fit one task. Deterministic sampling makes the estimate itself
-    bit-reproducible, so the oracle replays it exactly (DuckDB native
-    quantile_disc over the identically-sampled rows)."""
-    d = _t(spark, sf, "documents")
-    return sketches.quantile_sketch(
-        d, "doc_id", "n_chars", [0.25, 0.5, 0.9, 0.99], sample_mod=4
-    )
-
-
-_SCD2_ASOF_ORACLE = """
-    with ordered as (
-      select user_id, ts, event_id, event_type, value,
-             row_number() over w as rn,
-             lag(event_type) over w as p_t,
-             lag(value) over w as p_v
-      from events
-      window w as (partition by user_id order by ts, event_id)),
-    chg as (
-      select user_id, ts, event_type, value
-      from ordered
-      where rn = 1 or event_type is distinct from p_t
-            or value is distinct from p_v),
-    facts as (
-      select user_id, event_id, ts from events where event_type = 'purchase'),
-    j as (
-      select f.user_id, f.event_id,
-             c.event_type as state_type, c.value as state_value,
-             row_number() over (partition by f.user_id, f.event_id
-                                order by c.ts desc) as rn
-      from facts f join chg c on c.user_id = f.user_id and c.ts <= f.ts)
-    select user_id, event_id, state_type, state_value from j where rn = 1
-"""
-
-
-@extra_query("scd2_asof_enrich", _SCD2_ASOF_ORACLE)
-def scd2_asof_enrich(spark, sf):
-    """Point-in-time dimension enrichment — the composition the SCD2
-    history exists FOR: each purchase fact picks up the user-state
-    version valid AT ITS OWN timestamp (scd2_history → asof_join
-    backward on valid_from). Neither side is re-scanned per version:
-    the asof is the union-sort single-window plan (no join node), so
-    the whole enrichment is two hash exchanges end-to-end. The oracle
-    replays it as the standard greatest-valid_from-≤-ts theta join +
-    rank filter."""
-    from dbt_customer360_spark.operators.asof import asof_join
-    from dbt_customer360_spark.operators.scd2 import scd2_history
-
-    e = _t(spark, sf, "events").select(
-        "user_id", "ts", "event_id", "event_type", "value"
-    )
-    hist = scd2_history(
-        e, ["user_id"], "ts", ["event_type", "value"], tiebreak="event_id"
-    )
-    dim = hist.select(
-        "user_id",
-        "valid_from",
-        F.col("event_type").alias("state_type"),
-        F.col("value").alias("state_value"),
-    )
-    facts = e.filter(F.col("event_type") == "purchase").select(
-        "user_id", "event_id", "ts"
-    )
-    out = asof_join(
-        facts,
-        dim,
-        on=["user_id"],
-        left_ts="ts",
-        right_ts="valid_from",
-        payload=["state_type", "state_value"],
-        direction="backward",
-    )
-    return out.select("user_id", "event_id", "state_type", "state_value")
-
-
-_DQTESTS_ORACLE = """
-    select 'not_null' as test, 'orders.o_orderkey' as target,
-           cast(sum(cast(o_orderkey is null as bigint)) as bigint) as n_violations
-    from orders
-    union all
-    select 'accepted_values', 'orders.o_orderstatus',
-           cast(sum(cast(o_orderstatus not in ('O', 'F')
-                         and o_orderstatus is not null as bigint)) as bigint)
-    from orders
-    union all
-    select 'unique', 'orders.o_orderkey',
-           cast(coalesce(sum(n - 1), 0) as bigint)
-    from (select o_orderkey, count(*) as n from orders
-          group by o_orderkey having count(*) > 1)
-    union all
-    select 'relationships', 'orders.o_custkey->customer.c_custkey',
-           cast(count(*) as bigint)
-    from (select distinct o_custkey from orders where o_custkey is not null) f
-    where not exists (select 1 from customer c where c.c_custkey = f.o_custkey)
-    union all
-    select 'unique', 'lineitem.l_orderkey+l_linenumber',
-           cast(coalesce(sum(n - 1), 0) as bigint)
-    from (select l_orderkey, l_linenumber, count(*) as n from lineitem
-          group by 1, 2 having count(*) > 1)
-"""
-
-
-@extra_query(
-    "dbt_schema_tests",
-    f"select test, target, n_violations, n_violations = 0 as passed from ({_DQTESTS_ORACLE})",
-)
-def dbt_schema_tests(spark, sf):
-    """dbt's four generic schema tests (`dbt test` — the framework the
-    reference's CI relies on) compiled Spark-side: not_null +
-    accepted_values fuse into ONE agg per table, unique is a per-key
-    groupBy, relationships a distinct-FK anti join (operators/
-    dqtests.py). accepted_values is deliberately restricted to
-    ('O','F') so the report exercises a FAILING row ('P' exists)."""
-    from dbt_customer360_spark.operators import dqtests
-
-    tables = {
-        "orders": _t(spark, sf, "orders"),
-        "customer": _t(spark, sf, "customer"),
-        "lineitem": _t(spark, sf, "lineitem"),
-    }
-    spec = {
-        "orders": {
-            "not_null": ["o_orderkey"],
-            "accepted_values": {"o_orderstatus": ["O", "F"]},
-            "unique": [["o_orderkey"]],
-            "relationships": [("o_custkey", "customer", "c_custkey")],
-        },
-        "lineitem": {"unique": [["l_orderkey", "l_linenumber"]]},
-    }
-    return dqtests.run_schema_tests(spark, tables, spec)
-
-
-_CAP_ORACLE = """
-    select doc_id, lang from (
-      select doc_id, lang,
-             row_number() over (
-               partition by lang
-               order by ('0x' || substr(md5('cap42:' || cast(doc_id as varchar)), 1, 15))::ubigint,
-                        doc_id) as rn
-      from documents)
-    where rn <= 50
-"""
-
-
-@extra_query("cap_per_group_docs", _CAP_ORACLE)
-def cap_per_group_docs(spark, sf):
-    """Per-group corpus cap (≤50 docs per language, hash-ordered) —
-    the docs-per-domain bound every web-corpus recipe applies so hot
-    hosts can't dominate the training mix; hash order makes the
-    survivors deterministic and unbiased rather than crawl-ordered.
-    One window shuffle, output bounded at k·|groups|."""
-    d = _t(spark, sf, "documents").select("doc_id", "lang")
-    return sketches.cap_per_group(d, ["lang"], "doc_id", 50)
-
-
-_SAMPLEK_ORACLE = """
-    select doc_id from documents
-    order by ('0x' || substr(md5('sk42:' || cast(doc_id as varchar)), 1, 15))::ubigint,
-             doc_id
-    limit 100
-"""
-
-
-@extra_query("sample_exact_k_docs", _SAMPLEK_ORACLE)
-def sample_exact_k_docs(spark, sf):
-    """Exactly-k uniform sample (deterministic reservoir semantics):
-    global ascending hash order, first 100 — planned as
-    TakeOrderedAndProject (per-partition local top-k, only k rows per
-    partition reach the merge; the corpus never globally sorts,
-    pinned in tests/test_sketches.py)."""
-    d = _t(spark, sf, "documents").select("doc_id")
-    return sketches.sample_exact_k(d, "doc_id", 100)
-
-
-@extra_query(
+@query(
     "lake_prefix_scan",
     """
     select o_custkey, o_orderkey, o_totalprice, cast(1 as bigint) as lsn
@@ -3179,7 +1714,7 @@ _JOINVIEW_ORACLE = """
 """
 
 
-@extra_query("ivm_join_view_orders", _JOINVIEW_ORACLE)
+@query("ivm_join_view_orders", _JOINVIEW_ORACLE)
 def ivm_join_view_orders(spark, sf):
     """Incremental JOIN view (lake/joinview.py): a materialized
     orders ⋈ customer enrichment maintained from BOTH tables' CDC

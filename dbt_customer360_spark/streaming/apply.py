@@ -139,6 +139,10 @@ class CDCApplier:
         update-heavy feeds whose every epoch touches most buckets."""
         if write_mode not in ("cow", "mor"):
             raise ValueError(f"write_mode must be 'cow' or 'mor': {write_mode!r}")
+        if lineage_grain not in ("epoch", "partition"):
+            raise ValueError(
+                f"lineage_grain must be 'epoch' or 'partition': {lineage_grain!r}"
+            )
         self.spark = spark
         self.table = LakeTable(
             spark, table_root, buckets=buckets, bucket_cols=bucket_cols

@@ -574,6 +574,10 @@ def test_expectations_config_validation(spark):
             quarantine_root=f"{root}/dl",
             expectations=[("x", "1=1", "quarantine"), ("x", "2=2", "fail")],
         )
+    with pytest.raises(ValueError, match="lineage_grain must be"):
+        CDCApplier(spark, f"{root}/e", lineage_grain="partitions")
+    with pytest.raises(ValueError, match="write_mode must be"):
+        CDCApplier(spark, f"{root}/f", write_mode="mo")
     # fail-only expectations need no quarantine table
     ap = CDCApplier(spark, f"{root}/d", buckets=2,
                     expectations=[("x", "lsn is not null", "fail")])

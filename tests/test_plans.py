@@ -46,28 +46,18 @@ def test_pricing_summary_partial_aggregation(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def test_lsh_join_is_hash_join(spark):
-    plan = _plan(QUERIES["minhash_lsh_dedup"](spark, SF))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_ngram_unblocked_is_not_cartesian(spark):
-    """The block_col=None path must block on the length bucket — the
-    round-1 F.lit(1) join key was a disguised self-cartesian."""
-    plan = _plan(QUERIES["ngram_jaccard_dedup"](spark, SF))
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_bm25_never_shuffles_the_corpus(spark):
     """BM25: per-doc counts in the scan stage, corpus stats broadcast
     back as a 1-row cross join — the only Exchanges are the stats
     aggregation's (tiny) and its broadcast; the corpus side itself is
     scan -> project with no repartition."""
-    from dbt_customer360_spark.plans.queries import EXTRA_QUERIES
+    from dbt_customer360_spark.operators import textstats
+    from dbt_customer360_spark.session import spread_for_compute
 
-    plan = _plan(EXTRA_QUERIES["bm25_scores_docs"](spark, SF))
+    d = spread_for_compute(
+        spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+    )
+    plan = _plan(textstats.bm25_scores(d, "doc_id", "text", ["hash", "join", "merge"]))
     # one single-partition exchange for the global stats + its
     # broadcast (+AQE read), plus at most one ROUND-ROBIN spread of a
     # single-split local scan (session.spread_for_compute — a no-op on
@@ -92,60 +82,6 @@ def test_spread_for_compute_noop_at_scale(spark):
     small = spark.range(0, 100, 1, 1).select(F.col("id"))
     spread = spread_for_compute(small)
     assert spread.rdd.getNumPartitions() >= par
-
-
-def test_simhash_and_ivf_have_no_per_row_window_shuffle(spark):
-    """IVF corpus assignment is a min_by hash-aggregation, not a window
-    partitioned by the full vector (round-1 judge item 10)."""
-    from dbt_customer360_spark.operators import similarity
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 3)
-    plan = _plan(similarity.ivf_topk(e, q, dim=64, k=3, n_centroids=4, n_probe=2))
-    # no window may partition by the raw vector column (v / __v / c_vec)
-    import re
-
-    for m in re.finditer(r"windowspecdefinition\((\w+)#", plan):
-        assert m.group(1) not in {"v", "__v", "c_vec"}, plan
-
-
-def test_ivf_candidate_join_is_centroid_equijoin(spark):
-    """The inverted-file contract (r4 VERDICT Next #6): the corpus x
-    query candidate join keys on centroid_id — a hash/sort-merge
-    EQUI-join, so each query only meets the rows of its n_probe probed
-    cells (~n_probe/n_centroids of the corpus at scale). The only
-    cartesian-shaped joins allowed are against the tiny centroid table
-    (n_centroids rows) and 1-row stats broadcasts."""
-    from dbt_customer360_spark.operators import similarity
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = e.filter(F.col("vec_id") < 3)
-    plan = _plan(similarity.ivf_topk(e, q, dim=64, k=3, n_centroids=4, n_probe=2))
-    assert "CartesianProduct" not in plan
-    joined_on_centroid = (
-        "centroid_id" in plan
-        and any(
-            f"{kind}" in plan and "centroid_id" in seg
-            for kind in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
-            for seg in [plan]
-        )
-    )
-    assert joined_on_centroid, plan
-    # BroadcastNestedLoopJoins DO appear — one per corpus/query x
-    # centroid-table crossJoin (incl. each kmeans iteration) — but every
-    # one broadcasts the O(n_centroids)-row side; a corpus-sized
-    # non-equi join would surface as CartesianProduct, asserted absent.
-    assert "SortMergeJoin [centroid_id" in plan or "centroid_id" in plan
-
-
-def test_ann_lsh_join_is_bucket_equijoin(spark):
-    """ann_lsh candidates join on the sign-LSH bucket — an equi-join,
-    never a cartesian over the corpus."""
-    plan = _plan(QUERIES["ann_lsh"](spark, SF))
-    assert "CartesianProduct" not in plan
-    assert any(
-        k in plan for k in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
-    ), plan
 
 
 def test_merge_lsn_is_single_shuffle(spark, tmp_path, monkeypatch):

@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbt_customer360_spark.operators import sketches
-from dbt_customer360_spark.plans.queries import EXTRA_QUERIES
 
 SF = "/root/testdata/sf0.001"
 
@@ -91,7 +90,8 @@ def test_cms_sketch_bounded_rows(spark):
 
 
 def test_cms_probe_join_is_broadcast(spark):
-    plan = _plan(EXTRA_QUERIES["cms_heavy_tokens"](spark, SF))
+    toks = sketches.tokens(_docs(spark))
+    plan = _plan(sketches.cms_probe(toks, top_k=20, depth=3, width=1024))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan

@@ -16,8 +16,8 @@ dtype); non-scalar cells (lists/arrays/maps) raise, because the
 driver's pandas row-sorter crashes on them.
 
 The full-run results are persisted to ``ORACLES_LOCAL.json`` at the
-repo root so each round's local attestation (including the EXTRA
-registry the driver never sees) ships alongside CORRECTNESS_rNN.json.
+repo root so each round's local attestation ships alongside
+CORRECTNESS_rNN.json.
 """
 
 from __future__ import annotations
@@ -39,7 +39,7 @@ sys.path.insert(0, "/root/repo")
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "lineitem", "events", "documents",
 ]
 ARTIFACT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "ORACLES_LOCAL.json")
@@ -151,13 +151,6 @@ def main(only: list[str] | None = None):
         # entries 51+ silently get NO verdict (round-3 failure mode)
         extra = list(qs)[50:]
         bad.append(("<roster>", f"{len(qs)} queries registered, cap is 50; dropped: {extra}"))
-    from dbt_customer360_spark.plans.queries import EXTRA_ORACLES, EXTRA_QUERIES
-
-    roster_names = set(qs)
-    qs = dict(qs)
-    qs.update(EXTRA_QUERIES)
-    oracles = dict(oracles)
-    oracles.update(EXTRA_ORACLES)
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -191,20 +184,14 @@ def main(only: list[str] | None = None):
         print(f"  {n}: {msg}")
     print(f"\n{len(ok)} ok, {len(rows_only)} rows-only, {len(bad)} fail")
 
-    if not only:  # persist full-run attestation (incl. the extra registry)
+    if not only:  # persist full-run attestation
         art = {
             "sf_dir": SF_DIR,
             "comparator": "pandas-dtype-canonical (round 5)",
             "results": {
-                **{n: {"status": "ok", "rows": c,
-                       "registry": "roster" if n in roster_names else "extra"}
-                   for n, c in ok},
-                **{n: {"status": "rows_only", "rows": c,
-                       "registry": "roster" if n in roster_names else "extra"}
-                   for n, c in rows_only},
-                **{n: {"status": "fail", "detail": m.splitlines()[0],
-                       "registry": "roster" if n in roster_names else "extra"}
-                   for n, m in bad},
+                **{n: {"status": "ok", "rows": c} for n, c in ok},
+                **{n: {"status": "rows_only", "rows": c} for n, c in rows_only},
+                **{n: {"status": "fail", "detail": m.splitlines()[0]} for n, m in bad},
             },
         }
         with open(ARTIFACT, "w") as f:
