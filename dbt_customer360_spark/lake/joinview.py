@@ -111,8 +111,7 @@ class IncrementalJoinView:
         tkeys = m.get("keys") or declared_keys
         bcols = table._layout_cols(m, tkeys)
         if bcols == [key_col] and m["files"]:
-            probe = keys_df.select(table._bucket_expr(tkeys, m).alias("__b"))
-            buckets = {str(r["__b"]) for r in probe.distinct().collect()}
+            buckets = table._touched_buckets(keys_df, tkeys, m)
             base_paths = [p for b in buckets for p in m["files"].get(b, [])]
             deltas = m.get("delta_files") or {}
             delta_paths = [p for b in buckets for p in deltas.get(b, [])]

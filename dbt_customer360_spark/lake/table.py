@@ -339,6 +339,21 @@ class LakeTable:
             h = F.xxhash64(*[F.col(k) for k in bcols])
         return F.pmod(h, F.lit(manifest.get("buckets", self.buckets)))
 
+    def bucket_column(self, keys: list[str], manifest: dict | None = None) -> F.Column:
+        """The bucket id of a row keyed by ``keys`` under the table's
+        committed layout (hash family, bucket count, layout columns):
+        the id every merge prunes by and every write lands the row in.
+        ``manifest`` defaults to the current snapshot's."""
+        m = manifest if manifest is not None else self._read_manifest()
+        return self._bucket_expr(keys, m)
+
+    def _touched_buckets(self, df: DataFrame, keys: list[str], m: dict) -> set[str]:
+        """Distinct bucket ids of ``df``'s rows: one job, column-pruned
+        to the layout columns."""
+        return {
+            str(r[0]) for r in df.select(self.bucket_column(keys, m)).distinct().collect()
+        }
+
     # --- reads ------------------------------------------------------------------
 
     def exists(self) -> bool:
@@ -411,7 +426,7 @@ class LakeTable:
         dirs instead of the table.
 
         The key's bucket id is computed with the SAME hash family the
-        layout was written under (``_bucket_expr`` over a 1-row JVM
+        layout was written under (``bucket_column`` over a 1-row JVM
         LocalRelation — murmur3/xxhash64 are not reimplemented
         driver-side, so the lookup can never drift from the writer).
         Bucket pruning is exact even while deltas are pending: deltas
@@ -432,20 +447,7 @@ class LakeTable:
                 f"read_point needs the FULL merge key {keys}, got "
                 f"{sorted(key_values)}"
             )
-        types = dict(m["schema"])
-        ddl = ", ".join(f"`{k}` {types[k]}" for k in keys)
-        probe = local_df(self.spark, [tuple(key_values[k] for k in keys)], ddl)
-        bucket = str(probe.select(self._bucket_expr(keys, m)).first()[0])
-        pred = None
-        for k in keys:
-            c = F.col(k).eqNullSafe(F.lit(key_values[k]))
-            pred = c if pred is None else (pred & c)
-        base = self._read_paths(m, m["files"].get(bucket, [])).filter(pred)
-        delta_rel = (m.get("delta_files") or {}).get(bucket, [])
-        if not delta_rel:
-            return base
-        delta = self._read_paths(m, delta_rel).filter(pred)
-        return self._mor_resolve(m, base, delta)
+        return self._read_bucket(m, keys, {k: key_values[k] for k in keys})
 
     def read_prefix(
         self, prefix_values: dict, snapshot_id: int | None = None
@@ -470,13 +472,20 @@ class LakeTable:
                 f"read_prefix needs exactly the layout columns {bcols} "
                 f"(table bucket_cols), got {sorted(prefix_values)}"
             )
+        return self._read_bucket(m, keys, {k: prefix_values[k] for k in bcols})
+
+    def _read_bucket(self, m: dict, keys: list[str], match: dict) -> DataFrame:
+        """Rows whose ``match`` columns equal (null-safe) its values,
+        read from the ONE bucket those values hash to; ``match`` covers
+        the layout columns. The single-bucket read behind
+        :meth:`read_point` and :meth:`read_prefix`."""
         types = dict(m["schema"])
-        ddl = ", ".join(f"`{k}` {types[k]}" for k in bcols)
-        probe = local_df(self.spark, [tuple(prefix_values[k] for k in bcols)], ddl)
-        bucket = str(probe.select(self._bucket_expr(keys, m)).first()[0])
+        ddl = ", ".join(f"`{k}` {types[k]}" for k in match)
+        probe = local_df(self.spark, [tuple(match.values())], ddl)
+        bucket = str(probe.select(self.bucket_column(keys, m)).first()[0])
         pred = None
-        for k in bcols:
-            c = F.col(k).eqNullSafe(F.lit(prefix_values[k]))
+        for k, v in match.items():
+            c = F.col(k).eqNullSafe(F.lit(v))
             pred = c if pred is None else (pred & c)
         base = self._read_paths(m, m["files"].get(bucket, [])).filter(pred)
         delta_rel = (m.get("delta_files") or {}).get(bucket, [])
@@ -887,12 +896,7 @@ class LakeTable:
         self._check_merge_keys(m, keys)
         self._merge_schema(m, batch.drop(delete_col) if delete_col else batch)
 
-        bucket_col = self._bucket_expr(keys, m)
-        batch = batch.withColumn("__bucket", bucket_col)
-        touched = sorted(
-            r["__bucket"] for r in batch.select("__bucket").distinct().collect()
-        )
-        touched_set = {str(b) for b in touched}
+        touched_set = self._touched_buckets(batch, keys, m)
 
         target_files = [
             os.path.join(self.root, "data", p)
@@ -1021,13 +1025,11 @@ class LakeTable:
                 m["batch_ids"].append(batch_id)
             return self._commit(m)
 
-        bucket_col = self._bucket_expr(keys, m)
-        if touched is None:
-            touched = sorted(
-                r["__b"]
-                for r in batch.select(bucket_col.alias("__b")).distinct().collect()
-            )
-        touched_set = {str(b) for b in touched}
+        touched_set = (
+            self._touched_buckets(batch, keys, m)
+            if touched is None
+            else {str(b) for b in touched}
+        )
         target_files = [
             os.path.join(self.root, "data", p)
             for b, paths in m["files"].items()
@@ -1147,12 +1149,7 @@ class LakeTable:
         if liveness_col not in val_cols:
             raise ValueError(f"liveness_col {liveness_col!r} not a value column")
 
-        bucket_col = self._bucket_expr(keys, m)
-        touched = sorted(
-            r["__b"]
-            for r in delta.select(bucket_col.alias("__b")).distinct().collect()
-        )
-        touched_set = {str(b) for b in touched}
+        touched_set = self._touched_buckets(delta, keys, m)
         target_files = [
             os.path.join(self.root, "data", p)
             for b, paths in m["files"].items()

@@ -27,7 +27,7 @@ from __future__ import annotations
 import time
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_customer360_spark.lake.table import LakeTable
@@ -70,12 +70,11 @@ class CDCApplier:
     ):
         """``assume_dense_batches``: declare that every micro-batch
         touches (essentially) every hash bucket — true for high-volume
-        streams whose batch key count >> bucket count. Skips the
-        per-batch touched-bucket discovery scan; the merge then reads
-        every target bucket, which it would have done anyway for a
-        dense batch (merge_lsn's stray-bucket guard still holds: the
-        declared set is the full bucket range). Leave False for sparse/
-        trickle streams where bucket pruning pays.
+        streams whose batch key count >> bucket count. The merge then
+        reads every target bucket instead of the touched set the
+        pre-merge aggregation found (merge_lsn's stray-bucket guard
+        still holds: the declared set is the full bucket range); the
+        epoch's job count is the same either way.
 
         ``hot_key_salt``: explicit two-phase salted merge (see
         LakeTable.merge_lsn) for streams where one (repo, path)
@@ -94,23 +93,24 @@ class CDCApplier:
         explicit manual compact(drop_tombstones_col=...) decision.
 
         ``lineage_grain``: 'epoch' (default) writes one lineage row per
-        micro-batch with global stats riding the merge Observation;
-        'partition' additionally writes one row per source partition
-        (``partition_col``, the feed's Kafka-partition analog) carrying
-        that partition's offset range / rows / deletes — the north_star's
-        per-partition lineage. Partition grain costs one extra
-        column-pruned aggregation job over the batch (Observations are
-        global-only); epochs stay the default for throughput.
+        micro-batch; 'partition' additionally writes one row per source
+        partition (``partition_col``, the feed's Kafka-partition analog)
+        carrying that partition's offset range / rows / deletes — the
+        north_star's per-partition lineage. Both grains come from the
+        same pre-merge aggregation (see ``apply_batch``), so partition
+        grain adds no job; a partition-grain batch without
+        ``partition_col`` raises before any write.
 
         ``quarantine_root``: dead-letter table for malformed events.
         When set, rows that cannot merge (NULL lsn, NULL merge key,
         unknown op) are appended there with a ``__reason`` + ``epoch``
         instead of poisoning or failing the batch; valid rows proceed.
         Exactly-once: the quarantine append carries its own idempotent
-        batch id, so a replayed epoch re-quarantines nothing. Cost: one
-        extra column-pruned validation job per batch (keys/lsn/op only,
-        never content); a clean batch adds NO filter to the merge plan,
-        and None (default) skips validation entirely.
+        batch id, so a replayed epoch re-quarantines nothing. The
+        violation counts come from the pre-merge aggregation every epoch
+        runs; only an epoch that quarantines rows pays one more job (the
+        dead-letter append), and a clean batch adds NO filter to the
+        merge plan.
 
         ``expectations``: user data-quality rules evaluated per batch —
         ``(name, sql_predicate, action)`` with action ``'quarantine'``
@@ -122,8 +122,8 @@ class CDCApplier:
         a violation (ingest gates want missing-data rows caught, unlike
         SQL CHECK's pass-on-NULL). Rules are checked in order after the
         built-in malformed-event rules, and per-rule violation counts
-        ride the lineage stats (``violations``) from the same single
-        validation job the quarantine path already pays for.
+        ride the lineage stats (``violations``) from the pre-merge
+        aggregation.
 
         ``bucket_cols``: bucket the repos table on a key-subset prefix
         (e.g. ['repo']) for prefix locality — see LakeTable.bucket_cols;
@@ -202,40 +202,30 @@ class CDCApplier:
 
     # --- one micro-batch ---------------------------------------------------------
 
-    def apply_batch(
-        self, batch: DataFrame, epoch_id: int | str, use_observation: bool = True
-    ) -> dict:
+    def apply_batch(self, batch: DataFrame, epoch_id: int | str) -> dict:
         """Apply one micro-batch exactly-once; returns lineage stats.
 
-        Four Spark jobs per pruned batch, none a full-width re-scan —
-        under AQE every shuffle's map side runs as its own job, so each
-        of the two steps below is a map job plus a result job:
-          1. distinct touched hash-buckets (inside ``merge_lsn``): the
-             scan is column-pruned to the merge KEYS + (lsn, op) for the
-             riding observation — never the content payload. Skipped
-             under ``assume_dense_batches`` and ``write_mode='mor'``,
-             which leaves two jobs per batch;
+        Four Spark jobs per epoch on every path (batch replay or
+        foreachBatch, either lineage grain, dense or pruned, CoW or
+        MoR) — under AQE each shuffle's map side runs as its own job,
+        so each of the two steps below is a map job plus a result job:
+          1. ONE aggregation of the batch, before any write, column-
+             pruned to the merge keys, (lsn, op), ``partition_col`` and
+             the expectation inputs — never the content payload. Its
+             grouping sets return, together, the per-reason violation
+             counts, the touched hash-buckets of the valid rows, and
+             their epoch and per-partition (rows, deletes, LSN range):
+             O(buckets + partitions x reasons) rows on the driver;
           2. the LSN merge itself (union touched target + batch,
              ``max_by`` reduce, bucketed write) — within-batch dedup,
              stale-replay rejection (high-watermark), and the upsert are
              all one comparator; map-side partial aggregation absorbs
              hot-key skew (see LakeTable.merge_lsn).
-        Lineage stats (row counts, LSN range, deletes) ride the merge
-        job itself via ``Observation``, and the lineage rows are written
-        by pyarrow on the driver — no job. Options add jobs: the
-        explicit stats aggregation below (two), validation for
-        quarantine/expectations (two, plus one quarantine append when
-        rows are rejected), per-partition lineage on the batch path
-        (two), and the rollup refresh and maintenance when they are due.
-
-        ``use_observation=False`` computes those stats with an explicit
-        column-pruned (lsn, op) aggregation job instead. The streaming
-        path REQUIRES this: ``Observation.get`` completes via a
-        QueryExecutionListener event, and listener events for actions
-        run inside a foreachBatch callback are not reliably delivered
-        (micro-batch executions are tagged streaming) — observed hang:
-        ``obs.get`` blocks forever mid-stream. Batch replay keeps the
-        free Observation.
+        The lineage rows are written by pyarrow on the driver — no job.
+        A fail-expectation raises after step 1, before any write; an
+        epoch that quarantines rows adds one job for the dead-letter
+        append, and the rollup refresh and maintenance add theirs when
+        they are due.
 
         Deletes become TOMBSTONES (not physical removals): the row keeps
         carrying its __max_lsn watermark so a stale replayed update with
@@ -247,192 +237,137 @@ class CDCApplier:
             return {"epoch": str(epoch_id), "skipped": True, "rows_applied": 0}
 
         batch = self.table.resolve_feed_columns(batch)
-        n_quarantined = 0
-        violations: dict[str, int] = {}
-        fail_names = {n for n, _p, a in self.expectations if a == "fail"}
-        if self.quarantine is not None or fail_names:
-            # ONE reason chain, first match wins: fail-rules outrank
-            # drop-rules (a row violating both must abort, not slip
-            # into the dead-letter table), built-ins rank between.
-            reason = F.lit(None).cast("string")
+        partition_rows = self.lineage is not None and self.lineage_grain == "partition"
+        if partition_rows and self.partition_col not in batch.columns:
+            raise ValueError(
+                f"epoch {epoch_id}: lineage_grain='partition' needs the batch "
+                f"column {self.partition_col!r}; nothing written"
+            )
+        # ONE reason chain, first match wins: fail-rules outrank
+        # drop-rules (a row violating both must abort, not slip into
+        # the dead-letter table), built-ins rank between. NULL = valid.
+        reason = F.lit(None).cast("string")
+        for name, pred, action in self.expectations:
+            if action != "fail":
+                continue
+            reason = F.when(reason.isNotNull(), reason).otherwise(
+                F.when(~F.coalesce(F.expr(pred), F.lit(False)), F.lit(name))
+            )
+        if self.quarantine is not None:
+            chain = F.when(F.col("lsn").isNull(), F.lit("null_lsn"))
+            for k in KEYS:
+                chain = chain.when(F.col(k).isNull(), F.lit(f"null_key_{k}"))
+            chain = chain.when(
+                F.col("op").isNull() | ~F.col("op").isin("insert", "update", "delete"),
+                F.lit("bad_op"),
+            )
             for name, pred, action in self.expectations:
-                if action != "fail":
+                if action != "quarantine":
                     continue
-                reason = F.when(
-                    reason.isNotNull(), reason
-                ).otherwise(
-                    F.when(~F.coalesce(F.expr(pred), F.lit(False)), F.lit(name))
-                )
-            if self.quarantine is not None:
-                chain = F.when(F.col("lsn").isNull(), F.lit("null_lsn"))
-                for k in KEYS:
-                    chain = chain.when(F.col(k).isNull(), F.lit(f"null_key_{k}"))
-                chain = chain.when(
-                    F.col("op").isNull()
-                    | ~F.col("op").isin("insert", "update", "delete"),
-                    F.lit("bad_op"),
-                )
-                for name, pred, action in self.expectations:
-                    if action != "quarantine":
-                        continue
-                    chain = chain.when(
-                        ~F.coalesce(F.expr(pred), F.lit(False)), F.lit(name)
-                    )
-                reason = F.when(reason.isNotNull(), reason).otherwise(chain)
+                chain = chain.when(~F.coalesce(F.expr(pred), F.lit(False)), F.lit(name))
+            reason = F.when(reason.isNotNull(), reason).otherwise(chain)
+        # grouping set (reason, partition) carries the violation counts
+        # and the valid rows' stats; grouping set (bucket) the touched
+        # buckets (a NULL bucket is the invalid rows'). Epoch grain
+        # groups on a constant partition, so the stats are one row.
+        part = F.col(self.partition_col) if partition_rows else F.lit(None).cast("string")
+        groups = (
+            batch.select(
+                reason.alias("__reason"),
+                part.alias("__part"),
+                F.when(reason.isNull(), self.table.bucket_column(KEYS)).alias("__bucket"),
+                "lsn",
+                F.when(F.col("op") == "delete", 1).otherwise(0).alias("__del"),
+            )
+            .groupingSets([["__reason", "__part"], ["__bucket"]], "__reason", "__part", "__bucket")
+            .agg(
+                F.grouping("__bucket").alias("by_part"),
+                F.count(F.lit(1)).alias("n"),
+                F.sum("__del").alias("d"),
+                F.min("lsn").alias("lo"),
+                F.max("lsn").alias("hi"),
+            )
+            .collect()
+        )
+        by_part = [r for r in groups if r["by_part"]]
+        per_part = [r for r in by_part if r["__reason"] is None]
+        violations: dict[str, int] = {}
+        for r in by_part:
+            if r["__reason"] is not None:
+                violations[r["__reason"]] = violations.get(r["__reason"], 0) + r["n"]
+        fail_names = {n for n, _p, a in self.expectations if a == "fail"}
+        failed = {k: v for k, v in violations.items() if k in fail_names}
+        if failed:
+            raise ValueError(
+                f"epoch {epoch_id}: fail-expectation violated, nothing "
+                f"written: {failed}"
+            )
+        n_quarantined = sum(violations.values())
+        if n_quarantined:
             flagged = batch.withColumn("__reason", reason)
-            bad = flagged.filter(F.col("__reason").isNotNull())
-            # one validation job: per-reason counts (column-pruned to
-            # keys/lsn/op + expectation inputs)
-            violations = {
-                r["__reason"]: r["n"]
-                for r in bad.groupBy("__reason").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            failed = {k: v for k, v in violations.items() if k in fail_names}
-            if failed:
-                raise ValueError(
-                    f"epoch {epoch_id}: fail-expectation violated, nothing "
-                    f"written: {failed}"
-                )
-            n_quarantined = sum(violations.values())
-            if n_quarantined:
-                self.quarantine.append(
-                    bad.withColumn("epoch", F.lit(str(epoch_id))),
-                    batch_id=f"quarantine-{batch_id}",
-                )
-                batch = flagged.filter(F.col("__reason").isNull()).drop("__reason")
-            # clean batch: keep the original plan — no residual filter
-        stat_aggs = [
-            F.count(F.lit(1)).alias("rows_applied"),
-            F.min("lsn").alias("min_lsn"),
-            F.max("lsn").alias("max_lsn"),
-            F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("deletes"),
-        ]
-        if use_observation:
-            obs = Observation(f"cdc-{batch_id}")
-            observed = batch.observe(obs, *stat_aggs)
+            self.quarantine.append(
+                flagged.filter(F.col("__reason").isNotNull()).withColumn(
+                    "epoch", F.lit(str(epoch_id))
+                ),
+                batch_id=f"quarantine-{batch_id}",
+            )
+            batch = flagged.filter(F.col("__reason").isNull()).drop("__reason")
+        # clean batch: keep the original plan — no residual filter
+        if self.assume_dense_batches:
+            touched = list(range(self.table.bucket_count()))
         else:
-            obs = None
-            observed = batch
+            touched = [r["__bucket"] for r in groups if r["__bucket"] is not None]
         upserts = (
-            observed.withColumn("__deleted", F.col("op") == "delete")
+            batch.withColumn("__deleted", F.col("op") == "delete")
             .withColumn("__max_lsn", F.col("lsn"))
             .drop("op", "lsn")
         )
-        mor = self.write_mode == "mor"
         sid = self.table.merge_lsn(
             upserts,
             KEYS,
             lsn_col="__max_lsn",
             batch_id=batch_id,
-            touched=None
-            if mor
-            else (
-                list(range(self.table.bucket_count()))
-                if self.assume_dense_batches
-                else None
-            ),
+            touched=touched,
             salt=self.hot_key_salt,
-            mor=mor,
+            mor=self.write_mode == "mor",
         )
-        want_partition_rows = (
-            self.lineage is not None
-            and self.lineage_grain == "partition"
-            and self.partition_col in batch.columns
-        )
-        per_part = None
-        if obs is not None:
-            stats = obs.get  # blocks until the merge's first action finishes
-        else:
-            if want_partition_rows:
-                # ONE rollup job yields the per-partition rows AND the
-                # grand total (grouping()==1 distinguishes the total row
-                # from a genuine NULL-partition group) — instead of a
-                # stats agg plus a separate per-partition agg per batch
-                rolled = (
-                    batch.rollup(self.partition_col)
-                    .agg(
-                        F.grouping(self.partition_col).alias("gid"),
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(
-                            F.when(F.col("op") == "delete", 1).otherwise(0)
-                        ).alias("d"),
-                        F.min("lsn").alias("lo"),
-                        F.max("lsn").alias("hi"),
-                    )
-                    .collect()
-                )
-                total = next(r for r in rolled if r["gid"] == 1)
-                per_part = [r for r in rolled if r["gid"] == 0]
-                stats = {
-                    "rows_applied": total["n"],
-                    "deletes": total["d"],
-                    "min_lsn": total["lo"],
-                    "max_lsn": total["hi"],
-                }
-            else:
-                stats = batch.select("lsn", "op").agg(*stat_aggs).first().asDict()
-
+        los = [r["lo"] for r in per_part if r["lo"] is not None]
+        his = [r["hi"] for r in per_part if r["hi"] is not None]
         lineage = {
             "epoch": str(epoch_id),
             "skipped": False,
-            "rows_applied": stats["rows_applied"] or 0,
+            "rows_applied": sum(r["n"] for r in per_part),
             "quarantined": n_quarantined,
             "violations": violations,
-            "deletes": stats["deletes"] or 0,
-            "min_lsn": stats["min_lsn"],
-            "max_lsn": stats["max_lsn"],
+            "deletes": sum(r["d"] for r in per_part),
+            "min_lsn": min(los, default=None),
+            "max_lsn": max(his, default=None),
             "snapshot_id": sid,
             "committed_at": time.time(),
         }
         if self.lineage is not None:
             rows = [
                 (
-                    str(epoch_id),
                     "epoch",  # row_kind: the epoch-total row
                     None,
-                    int(lineage["rows_applied"]),
-                    int(lineage["deletes"]),
-                    int(lineage["min_lsn"]) if lineage["min_lsn"] is not None else None,
-                    int(lineage["max_lsn"]) if lineage["max_lsn"] is not None else None,
-                    int(sid),
+                    lineage["rows_applied"],
+                    lineage["deletes"],
+                    lineage["min_lsn"],
+                    lineage["max_lsn"],
                 )
             ]
-            if want_partition_rows:
-                if per_part is None:
-                    # batch path: the epoch totals rode the merge via
-                    # Observation (free), so per-partition offset ranges
-                    # are the ONE extra aggregation job — column-pruned
-                    # to (partition_col, lsn, op), never the content
-                    # payload. (The streaming path already collected
-                    # them in the single rollup job above.)
-                    per_part = (
-                        batch.groupBy(self.partition_col)
-                        .agg(
-                            F.count(F.lit(1)).alias("n"),
-                            F.sum(
-                                F.when(F.col("op") == "delete", 1).otherwise(0)
-                            ).alias("d"),
-                            F.min("lsn").alias("lo"),
-                            F.max("lsn").alias("hi"),
-                        )
-                        .collect()
-                    )
+            if partition_rows:
+                # row_kind distinguishes these from the epoch-total row,
+                # so a genuinely-NULL partition value stays NULL; a
+                # partition whose lsn values are all NULL keeps NULL lo/hi
                 rows += [
                     (
-                        str(epoch_id),
-                        # row_kind distinguishes these from the epoch-total
-                        # row, so a genuinely-NULL partition value stays
-                        # NULL (the r4 '__null_partition__' sentinel could
-                        # collide with a real partition of that name)
                         "partition",
-                        str(r[0]) if r[0] is not None else None,
-                        int(r["n"]),
-                        int(r["d"]),
-                        # a partition whose lsn values are all NULL yields
-                        # NULL lo/hi — mirror the epoch-total row's guards
-                        int(r["lo"]) if r["lo"] is not None else None,
-                        int(r["hi"]) if r["hi"] is not None else None,
-                        int(sid),
+                        str(r["__part"]) if r["__part"] is not None else None,
+                        r["n"],
+                        r["d"],
+                        r["lo"],
+                        r["hi"],
                     )
                     for r in per_part
                 ]
@@ -440,7 +375,7 @@ class CDCApplier:
             # them in-process: no Spark job per epoch
             self.lineage.append(
                 pa.Table.from_pylist(
-                    [dict(zip(LINEAGE_SCHEMA.names, r)) for r in rows],
+                    [dict(zip(LINEAGE_SCHEMA.names, (str(epoch_id), *r, sid))) for r in rows],
                     schema=LINEAGE_SCHEMA,
                 ),
                 batch_id=f"lineage-{batch_id}",
@@ -489,11 +424,7 @@ class CDCApplier:
             reader = reader.schema(schema)
         events = reader.parquet(events_path)
         return (
-            events.writeStream.foreachBatch(
-                lambda df, epoch_id: self.apply_batch(
-                    df, epoch_id, use_observation=False
-                )
-            )
+            events.writeStream.foreachBatch(self.apply_batch)
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()

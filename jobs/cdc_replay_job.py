@@ -62,7 +62,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--dense-batches", action="store_true",
-        help="batches touch every bucket: skip the touched-bucket discovery scan",
+        help="batches touch every bucket: merge reads every bucket, not the touched set",
     )
     ap.add_argument(
         "--write-mode", choices=["cow", "mor"], default="cow",

@@ -108,8 +108,8 @@ def test_streaming_foreachbatch_with_checkpoint(spark, tmp_path):
     root = str(tmp_path / "lake")
     ap = CDCApplier(spark, f"{root}/repos", buckets=4)
     q = ap.stream(src, str(tmp_path / "ckpt"), schema=schema, max_files_per_trigger=2)
-    # MUST terminate: availableNow + the no-Observation streaming stats
-    # path (Observation.get inside foreachBatch hung the query, round 3)
+    # MUST terminate: availableNow + stats from the pre-merge aggregation
+    # (Observation.get inside foreachBatch hung the query, round 3)
     assert q.awaitTermination(300) is True
     oracle = _python_oracle(events.collect())
     assert _sha(_engine_state(ap)) == _sha(oracle)
@@ -215,6 +215,23 @@ def test_partition_grain_lineage(spark):
         assert min(p.min_lsn for p in parts) == total[0].min_lsn
         assert max(p.max_lsn for p in parts) == total[0].max_lsn
         assert all(p.snapshot_id == total[0].snapshot_id for p in parts)
+
+
+def test_partition_grain_without_partition_column_raises_before_write(spark, tmp_path):
+    """A partition-grain applier fed a batch that lacks ``partition_col``
+    refuses the epoch instead of writing only the epoch-total row."""
+    ap = CDCApplier(
+        spark, str(tmp_path / "repos"), str(tmp_path / "lineage"), buckets=2,
+        lineage_grain="partition",
+    )
+    df = spark.createDataFrame(
+        [(1, "insert", "r", "p", "c")],
+        "lsn long, op string, repo string, path string, content string",
+    )
+    with pytest.raises(ValueError, match="source_connector"):
+        ap.apply_batch(df, 0)
+    assert ap.table.current_snapshot_id() == 0
+    assert ap.lineage.current_snapshot_id() == 0
 
 
 def test_merge_lsn_property_random_streams(spark):
@@ -593,7 +610,7 @@ def test_expectations_through_streaming(spark, tmp_path):
     """expect_or_drop runs inside the real foreachBatch stream: the
     violating rows dead-letter per micro-batch, the survivors' final
     state matches the oracle over the FILTERED feed, and the query
-    terminates (the validation path must not add an Observation)."""
+    terminates (validation rides the one pre-merge aggregation)."""
     events = _events(spark, 1200)
     src = str(tmp_path / "events")
     events.repartition(4).write.parquet(src)

@@ -124,23 +124,55 @@ def test_salted_and_mor_writes_keep_one_file_per_bucket(spark, tmp_path, mode):
     assert _state(t) == _oracle(first, batch)
 
 
-def test_pruned_epoch_launches_at_most_four_jobs(spark, tmp_path):
-    """Discovery plus merge, each a map job and a result job under AQE;
-    the lineage row is written on the driver and adds none."""
+@pytest.mark.parametrize("quarantine", [False, True], ids=["clean", "quarantine"])
+@pytest.mark.parametrize("dense", [False, True], ids=["pruned", "dense"])
+@pytest.mark.parametrize("grain", ["epoch", "partition"])
+def test_pruned_epoch_launches_at_most_four_jobs(spark, tmp_path, grain, dense, quarantine):
+    """One pre-merge aggregation (validation, touched buckets and lineage
+    stats together) plus the merge, each a map job and a result job under
+    AQE, at either lineage grain, dense or pruned; the lineage rows are
+    written on the driver and add none. Quarantining a row adds the one
+    dead-letter append."""
     applier = CDCApplier(
-        spark, str(tmp_path / "repos"), lineage_root=str(tmp_path / "lineage"), buckets=16
+        spark,
+        str(tmp_path / "repos"),
+        lineage_root=str(tmp_path / "lineage"),
+        buckets=16,
+        assume_dense_batches=dense,
+        lineage_grain=grain,
+        quarantine_root=str(tmp_path / "dl") if quarantine else None,
     )
-    ev_ddl = "lsn long, op string, repo string, path string, content string"
-    pre = [(i, "insert", f"r{i % 5}", f"p{i}", f"c{i}") for i in range(300)]
+    ev_ddl = (
+        "lsn long, op string, repo string, path string, content string, "
+        "source_connector string"
+    )
+    pre = [(i, "insert", f"r{i % 5}", f"p{i}", f"c{i}", f"k{i % 2}") for i in range(300)]
     applier.apply_batch(local_df(spark, pre, ev_ddl), 0)
-    epoch = [(1000 + i, "update", f"r{i % 5}", f"p{i}", "new") for i in range(3)]
-    batch = local_df(spark, epoch, ev_ddl)
-    with counted(spark, "one-epoch") as c:
-        out = applier.apply_batch(batch, 1)
+    epoch = [(1000 + i, "update", f"r{i % 5}", f"p{i}", "new", f"k{i % 2}") for i in range(3)]
+    if quarantine:
+        epoch.append((None, "update", "r9", "p9", "bad", "k1"))
+    with counted(spark, f"one-epoch-{grain}-{dense}-{quarantine}") as c:
+        out = applier.apply_batch(local_df(spark, epoch, ev_ddl), 1)
     assert out["rows_applied"] == 3
-    assert len(c["jobs"]) <= 4, c["jobs"]
-    lineage = {r.epoch: r.rows_applied for r in applier.lineage.read().collect()}
-    assert lineage == {"0": 300, "1": 3}
+    assert out["quarantined"] == int(quarantine)
+    assert out["violations"] == ({"null_lsn": 1} if quarantine else {})
+    assert len(c["jobs"]) <= 4 + quarantine, c["jobs"]
+    sid0 = applier.table.current_snapshot_id() - 1
+    want = {
+        ("0", "epoch", None, 300, 0, 0, 299, sid0),
+        ("1", "epoch", None, 3, 0, 1000, 1002, sid0 + 1),
+    }
+    if grain == "partition":
+        want |= {
+            ("0", "partition", "k0", 150, 0, 0, 298, sid0),
+            ("0", "partition", "k1", 150, 0, 1, 299, sid0),
+            ("1", "partition", "k0", 2, 0, 1000, 1002, sid0 + 1),
+            ("1", "partition", "k1", 1, 0, 1001, 1001, sid0 + 1),
+        }
+    got = [tuple(r) for r in applier.lineage.read().collect()]
+    assert sorted(got, key=str) == sorted(want, key=str)
+    if quarantine:
+        assert [r.path for r in applier.quarantined().collect()] == ["p9"]
 
 
 def test_arrow_lineage_append_round_trips(spark, tmp_path):

@@ -194,8 +194,7 @@ def test_applier_mor_equals_cow(spark):
             buckets=4, write_mode=mode,
         )
         for i, chunk in enumerate([rows[:3], rows[3:]]):
-            app.apply_batch(spark.createDataFrame(chunk, ddl), i,
-                            use_observation=False)
+            app.apply_batch(spark.createDataFrame(chunk, ddl), i)
         return app
 
     cow, mor = run("cow"), run("mor")
