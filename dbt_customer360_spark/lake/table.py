@@ -19,13 +19,15 @@ on a cluster (the call-sites only use the API below):
   re-applying an already-committed ``batch_id`` is a no-op. This is
   the exactly-once half that Structured Streaming's at-least-once
   ``foreachBatch`` needs (SURVEY.md §2.10).
-- **MERGE upsert**: ``merge(batch, keys)`` rewrites the table as
-  ``(target anti-join batch-keys) union (batch upserts)`` — a
-  copy-on-write MERGE, which is exactly what Iceberg CoW does, minus
-  file-level pruning. Partition-level pruning is kept: data files are
-  written bucketed by hash of the merge keys, and only buckets
-  touched by the batch are rewritten (the untouched buckets'
-  files are carried over into the new snapshot unchanged).
+- **MERGE upsert**: ``merge``, ``merge_lsn`` and ``merge_additive``
+  share one copy-on-write rewrite: ``(touched target rows) union
+  (batch rows)``, grouped by the merge keys and reduced per key —
+  batch row beats target row, last LSN wins, or signed sums — which
+  is exactly what Iceberg CoW does, minus file-level pruning.
+  Partition-level pruning is kept: data files are written bucketed
+  by the murmur3 hash of the merge keys, and only buckets touched by
+  the batch are rewritten (the untouched buckets' files are carried
+  over into the new snapshot unchanged).
 - **schema evolution**: new columns in a batch are added to the table
   schema (NULL-backfilled lazily at read), and renames are resolved
   through a versioned column-mapping (``rename_column``), mirroring
@@ -54,6 +56,8 @@ from pyspark.sql import functions as F
 from dbt_customer360_spark.session import local_df
 
 if TYPE_CHECKING:
+    from collections.abc import Callable
+
     import pyarrow as pa
 
 
@@ -131,8 +135,8 @@ class LakeTable:
                 "mapping_version": 0,
                 # murmur3 == Spark's shuffle HashPartitioning hash, so a
                 # repartition(buckets, *keys) IS the bucket layout and the
-                # merge write needs no second shuffle; tables created
-                # before this field default to the legacy xxhash64 layout
+                # merge write needs no second shuffle; the only layout
+                # this module reads or writes
                 "bucket_fn": "murmur3",
                 # the bucket COUNT is part of the physical layout and
                 # rides the manifest: a writer opening the table with a
@@ -148,14 +152,17 @@ class LakeTable:
         with open(os.path.join(self.root, "snapshots", f"{sid}.json")) as f:
             return json.load(f)
 
-    def _commit(self, manifest: dict) -> int:
+    def _commit(self, manifest: dict, batch_id: str | None = None) -> int:
         """Atomic optimistic-concurrency publish (Iceberg-style): the
         new snapshot file is linked into place with an O_EXCL-like
         primitive that FAILS if the id was taken, so a concurrent
         writer that committed since this writer read its manifest
         surfaces as CommitConflict instead of silently overwriting a
         snapshot — the caller re-reads and re-applies (CDC epochs are
-        idempotent, so a retry is safe)."""
+        idempotent, so a retry is safe). A ``batch_id`` joins the
+        manifest's ledger in the same commit."""
+        if batch_id is not None:
+            manifest["batch_ids"].append(batch_id)
         # target id = BASE + 1 (not current + 1): a manifest derived from
         # snapshot N must land exactly at N+1, so a writer that raced
         # past us fails the create instead of silently discarding the
@@ -207,7 +214,8 @@ class LakeTable:
 
     def _reconcile_file_stats(self, manifest: dict) -> None:
         """Commit-time hook: drop stats of removed file entries, read
-        footer min/max for live entries that lack them. Footer-only —
+        footer min/max for live entries (each a dir of parquet parts)
+        that lack them. Footer-only —
         pyarrow metadata reads, NO Spark job, O(new entries)."""
         cols = manifest.get("stats_cols") or []
         if not cols:
@@ -223,15 +231,9 @@ class LakeTable:
             if rel in fs:
                 continue
             root = os.path.join(self.root, "data", rel)
-            parts = (
-                [
-                    os.path.join(root, f)
-                    for f in os.listdir(root)
-                    if f.endswith(".parquet")
-                ]
-                if os.path.isdir(root)
-                else [root]
-            )
+            parts = [
+                os.path.join(root, f) for f in os.listdir(root) if f.endswith(".parquet")
+            ]
             mins: dict[str, object] = {}
             maxs: dict[str, object] = {}
             dropped: set[str] = set()
@@ -326,22 +328,18 @@ class LakeTable:
         return list(manifest.get("bucket_cols") or keys)
 
     def _bucket_expr(self, keys: list[str], manifest: dict) -> F.Column:
-        """bucket id for a row, per the manifest's recorded hash family
-        and layout columns. murmur3 (F.hash, seed 42) is bit-identical
-        to the hash inside Spark's HashPartitioning, so
+        """bucket id for a row, per the manifest's layout columns and
+        bucket count. murmur3 (F.hash, seed 42) is bit-identical to the
+        hash inside Spark's HashPartitioning, so
         pmod(hash(layout_cols), buckets) equals the partition id of
         repartition(buckets, *layout_cols) — the property the
         one-shuffle merge write relies on."""
-        bcols = self._layout_cols(manifest, keys)
-        if manifest.get("bucket_fn", "xxhash64") == "murmur3":
-            h = F.hash(*[F.col(k) for k in bcols])
-        else:
-            h = F.xxhash64(*[F.col(k) for k in bcols])
+        h = F.hash(*[F.col(k) for k in self._layout_cols(manifest, keys)])
         return F.pmod(h, F.lit(manifest.get("buckets", self.buckets)))
 
     def bucket_column(self, keys: list[str], manifest: dict | None = None) -> F.Column:
         """The bucket id of a row keyed by ``keys`` under the table's
-        committed layout (hash family, bucket count, layout columns):
+        committed layout (bucket count, layout columns):
         the id every merge prunes by and every write lands the row in.
         ``manifest`` defaults to the current snapshot's."""
         m = manifest if manifest is not None else self._read_manifest()
@@ -425,10 +423,10 @@ class LakeTable:
         (~32–64k buckets, a few GB each) that's one or two parquet
         dirs instead of the table.
 
-        The key's bucket id is computed with the SAME hash family the
+        The key's bucket id is computed with the SAME expression the
         layout was written under (``bucket_column`` over a 1-row JVM
-        LocalRelation — murmur3/xxhash64 are not reimplemented
-        driver-side, so the lookup can never drift from the writer).
+        LocalRelation — murmur3 is not reimplemented driver-side, so
+        the lookup can never drift from the writer).
         Bucket pruning is exact even while deltas are pending: deltas
         are bucket-aligned by the same expression, so every version of
         the key lives in this one bucket — unlike value-stats pruning,
@@ -519,7 +517,7 @@ class LakeTable:
         keys-partitioning exchange. Net-effect semantics: a row
         inserted then deleted inside the span emits nothing; replaying
         per-commit history is ``changelog(s-1, s)`` per snapshot.
-        ``compact()``/``overwrite`` rewrite file lists wholesale, so a
+        ``compact()``/``rebucket()`` rewrite file lists wholesale, so a
         span crossing them degrades to a full diff (correct, just not
         pruned). Physical-row semantics: merge-on-read tombstones kept
         by ``merge_lsn`` surface as updates to their op column, like
@@ -695,22 +693,19 @@ class LakeTable:
         keys: list[str],
         manifest: dict | None = None,
         pre_partitioned: bool = False,
-        max_records_per_file: int | None = None,
     ) -> dict[str, list[str]]:
         """Write df as one parquet dir per hash-bucket of the merge keys.
 
         One Spark write job partitioned by bucket id; each bucket's rows
-        land under ``__bucket=<i>/``. On a murmur3-layout table the
-        repartition is by the KEYS themselves (partition i == bucket i,
-        see _bucket_expr), so a caller whose plan is already
-        hash-partitioned on the keys — merge_lsn repartitions BEFORE its
-        aggregation — passes ``pre_partitioned=True`` and the write adds
-        NO shuffle at all; the legacy xxhash64 layout shuffles on the
-        computed bucket column as before.
+        land under ``__bucket=<i>/``. The repartition is by the layout
+        columns themselves (partition i == bucket i, see _bucket_expr),
+        so a caller whose plan is already hash-partitioned on them — the
+        copy-on-write rewrite repartitions BEFORE its reduce — passes
+        ``pre_partitioned=True`` and the write adds NO shuffle at all.
 
-        Each bucket is written by exactly one task, as one file (or one
-        run of ``max_records_per_file`` parts). The B bucket partitions
-        are coalesced — whole partitions merged, never split — into
+        Each bucket is written by exactly one task, as one file. The B
+        bucket partitions are coalesced — whole partitions merged, never
+        split — into
         ``k = min(B, max(defaultParallelism, ceil(est / advisory)))``
         write tasks, where ``est`` is Spark's ``sizeInBytes`` estimate
         for ``df`` and ``advisory`` is
@@ -720,126 +715,23 @@ class LakeTable:
         ``defaultParallelism`` task launches instead of B; an unknown
         estimate (Spark's default-size sentinel) or GB-sized buckets
         keep one task per bucket.
-
-        When the manifest carries a ``sort_order`` (set by
-        ``compact(sort_by=...)``) every write — merges included — sorts
-        rows WITHIN each bucket partition on those columns before
-        writing (a per-partition sort, no extra exchange), so parquet
-        row groups stay range-disjoint on the sort columns and the
-        scan-side predicate pushdown keeps skipping row groups between
-        compactions. ``max_records_per_file`` additionally splits each
-        bucket into several part files and records EACH PART as its own
-        manifest entry, giving the commit-time footer stats — and
-        therefore :meth:`read_where`'s manifest prune — split-level
-        grain (Iceberg sort-order + split-planning analogue).
         """
         manifest = manifest if manifest is not None else self._read_manifest()
-        out_id = uuid.uuid4().hex[:12]
-        out_rel = f"w{out_id}"
+        out_rel = f"w{uuid.uuid4().hex[:12]}"
         out_abs = os.path.join(self.root, "data", out_rel)
         n_buckets = manifest.get("buckets", self.buckets)
         tasks = self._write_tasks(df, n_buckets)
-        bucket_col = self._bucket_expr(keys, manifest)
-        df = df.withColumn("__bucket", bucket_col)
+        df = df.withColumn("__bucket", self._bucket_expr(keys, manifest))
         if not pre_partitioned:
-            if manifest.get("bucket_fn", "xxhash64") == "murmur3":
-                df = df.repartition(n_buckets, *self._layout_cols(manifest, keys))
-            else:
-                df = df.repartition(n_buckets, "__bucket")
+            df = df.repartition(n_buckets, *self._layout_cols(manifest, keys))
         if tasks < n_buckets:
             df = df.coalesce(tasks)
-        sort_by = manifest.get("sort_order") or []
-        if sort_by:
-            df = df.sortWithinPartitions("__bucket", *sort_by)
-        elif manifest.get("zorder"):
-            df = (
-                df.withColumn("__zv", self._zorder_expr(manifest))
-                .sortWithinPartitions("__bucket", "__zv")
-                .drop("__zv")
-            )
-        writer = df.write.partitionBy("__bucket").mode("overwrite")
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.parquet(out_abs)
-        split_entries = bool(max_records_per_file)
-        files: dict[str, list[str]] = {}
-        for entry in os.listdir(out_abs):
-            if entry.startswith("__bucket="):
-                b = entry.split("=")[1]
-                if split_entries:
-                    parts = sorted(
-                        f
-                        for f in os.listdir(os.path.join(out_abs, entry))
-                        if f.endswith(".parquet")
-                    )
-                    files[b] = [f"{out_rel}/{entry}/{p}" for p in parts]
-                else:
-                    files[b] = [f"{out_rel}/{entry}"]
-        return files
-
-    @staticmethod
-    def _znum(col: str, typ: str) -> F.Column:
-        # boundary/rank space is epoch-seconds double for timestamps,
-        # plain double otherwise (exact for the long/int/double cols
-        # z-ordering supports)
-        c = F.col(col)
-        if "timestamp" in typ:
-            return c.cast("timestamp").cast("double")
-        return c.cast("double")
-
-    def _estimate_zorder(
-        self, df: DataFrame, cols: list[str], bits: int, manifest: dict
-    ) -> dict:
-        """Quantile boundaries per z-column, estimated from the current
-        table contents (one approxQuantile pass) and persisted so later
-        merges rank against the SAME space."""
-        types = dict(manifest["schema"])
-        bad = [c for c in cols if c not in types]
-        if bad:
-            raise ValueError(f"zorder_by columns not in table schema: {bad}")
-        nonnum = [
-            c
-            for c in cols
-            if not (
-                "timestamp" in types[c]
-                or any(t in types[c] for t in ("int", "long", "float", "double", "decimal", "short", "byte"))
-            )
-        ]
-        if nonnum:
-            raise ValueError(
-                f"zorder_by supports numeric/timestamp columns only, got: "
-                f"{[(c, types[c]) for c in nonnum]}"
-            )
-        if not 1 <= bits <= 8 or bits * len(cols) > 63:
-            raise ValueError(f"zorder bits={bits} x {len(cols)} cols out of range")
-        probs = [i / (1 << bits) for i in range(1, 1 << bits)]
-        proj = df.select(
-            *[self._znum(c, types[c]).alias(f"__zq_{i}") for i, c in enumerate(cols)]
-        )
-        qs = proj.approxQuantile(
-            [f"__zq_{i}" for i in range(len(cols))], probs, 0.001
-        )
-        return {"cols": cols, "bits": bits, "boundaries": qs}
-
-    def _zorder_expr(self, manifest: dict) -> F.Column:
-        """Morton key from the persisted quantile boundaries: rank each
-        column (monotone sum of `value > boundary` flags — a flat
-        comparison chain, codegen-friendly), then interleave rank bits.
-        NULLs rank 0 (cluster together at the low end)."""
-        z = manifest["zorder"]
-        types = dict(manifest["schema"])
-        cols, bits = z["cols"], z["bits"]
-        key = F.lit(0).cast("long")
-        for j, (c, bounds) in enumerate(zip(cols, z["boundaries"])):
-            v = self._znum(c, types[c])
-            rank = F.lit(0)
-            for b in bounds:
-                rank = rank + F.when(v > F.lit(b), 1).otherwise(0)
-            rank = rank.cast("long")
-            for i in range(bits):
-                bit = F.shiftright(rank, i).bitwiseAND(F.lit(1).cast("long"))
-                key = key + F.shiftleft(bit, i * len(cols) + j)
-        return key
+        df.write.partitionBy("__bucket").mode("overwrite").parquet(out_abs)
+        return {
+            entry.split("=")[1]: [f"{out_rel}/{entry}"]
+            for entry in os.listdir(out_abs)
+            if entry.startswith("__bucket=")
+        }
 
     def _merge_schema(self, manifest: dict, df: DataFrame) -> list[str]:
         known = {n for n, _ in manifest["schema"]}
@@ -848,25 +740,75 @@ class LakeTable:
                 manifest["schema"].append([field.name, field.dataType.simpleString()])
         return [n for n, _ in manifest["schema"]]
 
-    def overwrite(self, df: DataFrame, keys: list[str], batch_id: str | None = None) -> int:
-        m = self._read_manifest()
-        if batch_id is not None and batch_id in m["batch_ids"]:
-            return m["snapshot_id"]
-        cols = self._merge_schema(m, df)
-        df = self._conform(df, m)
-        m["files"] = self._write_bucket_files(df.select(cols), keys, m)
-        m["delta_files"] = {}
-        m["lsn_col"] = None
-        m["keys"] = keys
-        if batch_id is not None:
-            m["batch_ids"].append(batch_id)
-        return self._commit(m)
-
-    def _conform(self, df: DataFrame, manifest: dict) -> DataFrame:
+    def _conform(self, df: DataFrame, manifest: dict, *extra: str) -> DataFrame:
+        """``df`` in the manifest schema (missing columns NULL-filled),
+        plus the ``extra`` columns a merge reduce reads."""
         for n, t in manifest["schema"]:
             if n not in df.columns:
                 df = df.withColumn(n, F.lit(None).cast(t))
-        return df.select(*[n for n, _ in manifest["schema"]])
+        return df.select(*[n for n, _ in manifest["schema"]], *extra)
+
+    def _rewrite(
+        self,
+        op: str,
+        m: dict,
+        batch: DataFrame,
+        keys: list[str],
+        reduce: Callable[[DataFrame], DataFrame],
+        batch_id: str | None,
+        touched: set[str] | None = None,
+        pre_partition: bool = True,
+    ) -> int:
+        """The copy-on-write rewrite behind :meth:`merge`,
+        :meth:`merge_lsn` and :meth:`merge_additive`; each supplies only
+        ``reduce``, a per-key aggregation from the union to rows in the
+        table schema.
+
+        Reads the touched buckets' target files, unions them with
+        ``batch`` (a column ``__is_target`` tells target rows, 1, from
+        batch rows, 0; an empty target is an empty union side),
+        hash-partitions the union ONCE on the layout columns, reduces,
+        writes the buckets and commits their files in place of the
+        touched buckets'. The reduce's groupBy on the merge keys adds no
+        exchange (HashPartitioning on the layout columns, a subset of
+        the keys, satisfies its clustering) and, since partition i ==
+        bucket i, neither does the bucketed write. This trades away
+        map-side combine, which only ever helped within-batch duplicate
+        keys (target rows are unique per key) and measured 1.7x faster
+        end-to-end; ``pre_partition=False`` (the salted merge_lsn
+        reduce) keeps the combine-first shape and lets the write
+        shuffle.
+
+        ``touched`` defaults to the batch's buckets (one job). A
+        caller-supplied set that misses a bucket the batch lands in
+        fails the commit: that bucket's target rows were never read, so
+        replacing its file list would silently drop them."""
+        if touched is None:
+            touched = self._touched_buckets(batch, keys, m)
+        target = self._read_paths(
+            m, [p for b, paths in m["files"].items() if b in touched for p in paths]
+        )
+        unioned = target.withColumn("__is_target", F.lit(1)).unionByName(
+            batch.withColumn("__is_target", F.lit(0)), allowMissingColumns=True
+        )
+        if pre_partition:
+            unioned = unioned.repartition(
+                m.get("buckets", self.buckets),
+                *[F.col(k) for k in self._layout_cols(m, keys)],
+            )
+        new_files = self._write_bucket_files(reduce(unioned), keys, m, pre_partition)
+        stray = set(new_files) - touched
+        if stray:
+            raise ValueError(
+                f"{op}: batch rows landed in buckets {sorted(stray)} outside "
+                f"the touched set {sorted(touched)}; refusing to commit a "
+                "merge that would overwrite unread target buckets"
+            )
+        files = {b: p for b, p in m["files"].items() if b not in touched}
+        files.update(new_files)
+        m["files"] = files
+        m["keys"] = keys
+        return self._commit(m, batch_id)
 
     def merge(
         self,
@@ -878,55 +820,46 @@ class LakeTable:
         """Copy-on-write MERGE: upsert ``batch`` rows by ``keys``.
 
         Rows where ``delete_col`` is true delete the matching target
-        row. Only hash-buckets containing batch keys are rewritten;
-        untouched buckets' files carry over. Re-running with an
-        already-committed ``batch_id`` is a no-op (exactly-once).
+        row. Keys group null-safely, as in every merge here. Within one
+        key, a batch upsert beats a batch delete, which beats the target
+        row; two upserts of one key in one batch fail the write before
+        it commits (SQL MERGE's cardinality rule). Only hash-buckets
+        containing batch keys are rewritten; untouched buckets' files
+        carry over. Re-running with an already-committed ``batch_id`` is
+        a no-op (exactly-once).
         """
         m = self._read_manifest()
         if batch_id is not None and batch_id in m["batch_ids"]:
             return m["snapshot_id"]
         self._refuse_pending_deltas(m, "merge")
-        if not self.exists() or not m["files"]:
-            if delete_col is not None:
-                batch = batch.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
-                    delete_col
-                )
-            return self.overwrite(batch, keys, batch_id)
-
         self._check_merge_keys(m, keys)
         self._merge_schema(m, batch.drop(delete_col) if delete_col else batch)
+        is_del = F.coalesce(F.col(delete_col), F.lit(False)) if delete_col else F.lit(False)
+        batch = self._conform(batch.withColumn("__del", is_del), m, "__del")
+        row = F.struct(*[F.col(n) for n, _ in m["schema"]])
 
-        touched_set = self._touched_buckets(batch, keys, m)
-
-        target_files = [
-            os.path.join(self.root, "data", p)
-            for b, paths in m["files"].items()
-            if b in touched_set
-            for p in paths
-        ]
-        upserts = batch
-        if delete_col is not None:
-            upserts = batch.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(
-                delete_col
+        def reduce(unioned: DataFrame) -> DataFrame:
+            # 0 target row, 1 batch delete, 2 batch upsert
+            rank = F.when(F.col("__is_target") == 1, 0).when(F.col("__del"), 1).otherwise(2)
+            won = (
+                unioned.withColumn("__rank", rank)
+                .groupBy(*[F.col(k) for k in keys])
+                .agg(
+                    F.max_by(row, F.col("__rank")).alias("__w"),
+                    F.max("__rank").alias("__rank"),
+                    F.count_if(F.col("__rank") == 2).alias("__upserts"),
+                )
             )
-        upserts = self._conform(upserts, m)
+            dup = F.raise_error(
+                F.concat(
+                    F.lit("merge: batch upserts one key more than once: "),
+                    F.to_json(F.struct(*[F.col(k) for k in keys])),
+                )
+            )
+            keep = F.when(F.col("__upserts") > 1, dup).otherwise(F.col("__rank") != 1)
+            return won.filter(keep).select("__w.*")
 
-        if target_files:
-            ddl = ", ".join(f"`{n}` {t}" for n, t in m["schema"])
-            target = self.spark.read.schema(ddl).parquet(*target_files)
-            keep = target.join(batch.select(*keys).distinct(), on=keys, how="left_anti")
-            merged = keep.unionByName(upserts)
-        else:
-            merged = upserts
-
-        new_files = self._write_bucket_files(merged, keys, m)
-        files = {b: paths for b, paths in m["files"].items() if b not in touched_set}
-        files.update(new_files)
-        m["files"] = files
-        m["keys"] = keys
-        if batch_id is not None:
-            m["batch_ids"].append(batch_id)
-        return self._commit(m)
+        return self._rewrite("merge", m, batch, keys, reduce, batch_id)
 
     def merge_lsn(
         self,
@@ -944,11 +877,11 @@ class LakeTable:
         ``union(touched target rows, batch rows)`` is grouped by key and
         reduced with ``max_by(row, (lsn, is_target))`` — so within-batch
         duplicates, stale replays (lower LSN than the stored watermark),
-        and the upsert itself are all decided by one comparator. Because
-        it is a hash aggregation, Spark applies map-side partial
-        aggregation: hot keys combine locally before the shuffle. Ties
+        and the upsert itself are all decided by one comparator. Ties
         (same LSN, e.g. exact replay under a new epoch) go to the
-        target row, keeping replays byte-stable.
+        target row, keeping replays byte-stable. ``touched``: the
+        batch's bucket ids when the caller already knows them (see
+        :meth:`_rewrite`).
 
         ``salt``: explicit two-phase salted reduce for pathological hot
         keys (north_star: "skewed hot repos are split via key salting
@@ -960,9 +893,9 @@ class LakeTable:
         disjoint row sets; ties on LSN are impossible within a key and
         the target-preference bit rides the comparator into phase 2);
         the per-key shuffle weight drops from #rows to ``salt``. The
-        default (None) relies on map-side partial aggregation + AQE
-        skew handling, which is the right call when keys are merely
-        warm; reach for salt when one key dominates whole partitions.
+        default (None) hash-partitions the union up front, which is the
+        right call when keys are merely warm; reach for salt when one
+        key dominates whole partitions.
 
         ``mor=True`` switches this commit to MERGE-ON-READ (Hudi MoR /
         Iceberg v2 positional-delta analogue): the deduped batch is
@@ -978,8 +911,7 @@ class LakeTable:
         freely interleaved on one table and produce byte-identical
         state (tests/test_lake_mor.py pins CoW ≡ MoR ≡ oracle).
         ``salt`` is a CoW-path knob and is ignored under ``mor``: the
-        MoR aggregation reduces only the batch (map-side combine
-        absorbs within-batch hot keys); plain non-LSN writes
+        MoR aggregation reduces only the batch; plain non-LSN writes
         (``merge``/``merge_additive``) refuse while deltas are pending.
         """
         m = self._read_manifest()
@@ -988,6 +920,8 @@ class LakeTable:
         self._check_merge_keys(m, keys)
         self._merge_schema(m, batch)
         batch = self._conform(batch, m)
+        row = F.struct(*[F.col(n) for n, _ in m["schema"]])
+        by_key = [F.col(k) for k in keys]
 
         if mor:
             prev_lsn = m.get("lsn_col")
@@ -996,113 +930,57 @@ class LakeTable:
                     f"merge_lsn(mor): table's pending deltas use lsn_col "
                     f"{prev_lsn!r}, got {lsn_col!r}; compact() before switching"
                 )
-            cols = [n for n, _ in m["schema"]]
-            row = F.struct(*[F.col(c) for c in cols])
-            pre_part = m.get("bucket_fn", "xxhash64") == "murmur3"
-            if pre_part:
-                batch = batch.repartition(
-                    m.get("buckets", self.buckets),
-                    *[F.col(k) for k in self._layout_cols(m, keys)],
-                )
+            batch = batch.repartition(
+                m.get("buckets", self.buckets),
+                *[F.col(k) for k in self._layout_cols(m, keys)],
+            )
             # within-batch dedup only — the target is never read; stale
             # replays below a key's stored LSN are suppressed at read
             # time by the same comparator
             deduped = (
-                batch.groupBy(*[F.col(k) for k in keys])
+                batch.groupBy(*by_key)
                 .agg(F.max_by(row, F.col(lsn_col)).alias("__w"))
                 .select("__w.*")
             )
-            new_files = self._write_bucket_files(
-                deduped, keys, m, pre_partitioned=pre_part
-            )
+            new_files = self._write_bucket_files(deduped, keys, m, pre_partitioned=True)
             deltas = m.get("delta_files") or {}
             for b, paths in new_files.items():
                 deltas[b] = deltas.get(b, []) + paths
             m["delta_files"] = deltas
             m["lsn_col"] = lsn_col
             m["keys"] = keys
-            if batch_id is not None:
-                m["batch_ids"].append(batch_id)
-            return self._commit(m)
+            return self._commit(m, batch_id)
 
-        touched_set = (
-            self._touched_buckets(batch, keys, m)
-            if touched is None
-            else {str(b) for b in touched}
-        )
-        target_files = [
-            os.path.join(self.root, "data", p)
-            for b, paths in m["files"].items()
-            if b in touched_set
-            for p in paths
-        ]
-        cols = [n for n, _ in m["schema"]]
-        batch_side = batch.withColumn("__is_target", F.lit(0))
-        if target_files:
-            ddl = ", ".join(f"`{n}` {t}" for n, t in m["schema"])
-            target = self.spark.read.schema(ddl).parquet(*target_files)
-            unioned = target.withColumn("__is_target", F.lit(1)).unionByName(batch_side)
-        else:
-            unioned = batch_side
-        row = F.struct(*[F.col(c) for c in cols])
         order = F.struct(F.col(lsn_col), F.col("__is_target"))
-        pre_part = False
-        if salt and salt > 1:
-            # phase 1: per-(key, salt) partial winners — hot keys fan
-            # out over `salt` reducers
-            salt_col = F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(salt))
-            phase1 = (
-                unioned.withColumn("__salt", salt_col)
-                .groupBy(*[F.col(k) for k in keys], F.col("__salt"))
-                .agg(F.max_by(row, order).alias("__w"), F.max(order).alias("__o"))
-            )
-            # phase 2: collapse the <= salt candidates per key
-            merged = (
-                phase1.groupBy(*[F.col(k) for k in keys])
-                .agg(F.max_by(F.col("__w"), F.col("__o")).alias("__w"))
-                .select("__w.*")
-            )
-        else:
-            pre_part = m.get("bucket_fn", "xxhash64") == "murmur3"
-            if pre_part:
-                # ONE shuffle for the whole merge: hash-partition the
-                # union by the merge keys up front — the groupBy then
-                # adds no exchange (HashPartitioning(keys) satisfies its
-                # clustering) and, since partition i == bucket i under
-                # the murmur3 layout, neither does the bucketed write.
-                # This trades away map-side combine, which only ever
-                # helped within-batch duplicate keys (target rows are
-                # unique per key) and measured 1.7x faster end-to-end;
-                # a stream with one pathological hot key should use
-                # ``salt``, which keeps the combine-first shape.
-                unioned = unioned.repartition(
-                    m.get("buckets", self.buckets),
-                    *[F.col(k) for k in self._layout_cols(m, keys)],
+        salted = bool(salt and salt > 1)
+
+        def reduce(unioned: DataFrame) -> DataFrame:
+            if salted:
+                # phase 1: per-(key, salt) partial winners — hot keys
+                # fan out over `salt` reducers
+                unioned = (
+                    unioned.withColumn(
+                        "__salt", F.pmod(F.xxhash64(F.col(lsn_col)), F.lit(salt))
+                    )
+                    .groupBy(*by_key, F.col("__salt"))
+                    .agg(F.max_by(row, order).alias("__w"), F.max(order).alias("__o"))
                 )
-            merged = (
-                unioned.groupBy(*[F.col(k) for k in keys])
-                .agg(F.max_by(row, order).alias("__w"))
-                .select("__w.*")
-            )
-        new_files = self._write_bucket_files(merged, keys, m, pre_partitioned=pre_part)
-        # guard against a caller-supplied `touched` that misses buckets
-        # actually present in the batch: those buckets' target rows were
-        # never read, so replacing their file lists would silently drop
-        # pre-existing rows. Fail the commit instead (round-1 advice).
-        stray = set(new_files.keys()) - touched_set
-        if stray:
-            raise ValueError(
-                f"merge_lsn: batch rows landed in buckets {sorted(stray)} outside "
-                f"the declared touched set {sorted(touched_set)}; refusing to "
-                "commit a merge that would overwrite unread target buckets"
-            )
-        files = {b: p for b, p in m["files"].items() if b not in touched_set}
-        files.update(new_files)
-        m["files"] = files
-        m["keys"] = keys
-        if batch_id is not None:
-            m["batch_ids"].append(batch_id)
-        return self._commit(m)
+                # phase 2: collapse the <= salt candidates per key
+                won = F.max_by(F.col("__w"), F.col("__o"))
+            else:
+                won = F.max_by(row, order)
+            return unioned.groupBy(*by_key).agg(won.alias("__w")).select("__w.*")
+
+        return self._rewrite(
+            "merge_lsn",
+            m,
+            batch,
+            keys,
+            reduce,
+            batch_id,
+            touched=None if touched is None else {str(b) for b in touched},
+            pre_partition=not salted,
+        )
 
     def merge_additive(
         self,
@@ -1125,79 +1003,34 @@ class LakeTable:
         physically deleted, so a fully-retracted group vanishes instead
         of lingering as a zero row.
 
-        Same one-shuffle shape as :meth:`merge_lsn`: union (touched
-        target rows ∪ delta rows), pre-partition by the keys on the
-        murmur3 bucket layout, and ONE groupBy-sum both combines and
-        lands rows in their write buckets — NULL group keys fold
-        together natively (groupBy, not a join, so no null-safe
-        equality dance). Only buckets containing delta keys are
-        rewritten; exactly-once via the ``batch_id`` ledger, which is
-        what makes at-least-once changelog redelivery safe upstream.
+        The reduce of the shared copy-on-write rewrite is ONE
+        groupBy-sum over (touched target rows ∪ delta rows) — NULL group
+        keys fold together natively (groupBy, not a join, so no
+        null-safe equality dance). Only buckets containing delta keys
+        are rewritten; exactly-once via the ``batch_id`` ledger, which
+        is what makes at-least-once changelog redelivery safe upstream.
         """
         m = self._read_manifest()
         if batch_id is not None and batch_id in m["batch_ids"]:
             return m["snapshot_id"]
         self._refuse_pending_deltas(m, "merge_additive")
-        if not self.exists() or not m["files"]:
-            live = delta.filter(F.col(liveness_col) > 0)
-            return self.overwrite(live, keys, batch_id)
         self._check_merge_keys(m, keys)
         self._merge_schema(m, delta)
         delta = self._conform(delta, m)
-        schema = m["schema"]
-        val_cols = [n for n, _ in schema if n not in keys]
+        types = dict(m["schema"])
+        val_cols = [n for n in types if n not in keys]
         if liveness_col not in val_cols:
             raise ValueError(f"liveness_col {liveness_col!r} not a value column")
 
-        touched_set = self._touched_buckets(delta, keys, m)
-        target_files = [
-            os.path.join(self.root, "data", p)
-            for b, paths in m["files"].items()
-            if b in touched_set
-            for p in paths
-        ]
-        if target_files:
-            ddl = ", ".join(f"`{n}` {t}" for n, t in schema)
-            unioned = (
-                self.spark.read.schema(ddl)
-                .parquet(*target_files)
-                .unionByName(delta)
+        def reduce(unioned: DataFrame) -> DataFrame:
+            return (
+                unioned.groupBy(*[F.col(k) for k in keys])
+                .agg(*[F.sum(F.col(c)).cast(types[c]).alias(c) for c in val_cols])
+                .filter(F.col(liveness_col) > 0)
+                .select(*types)
             )
-        else:
-            unioned = delta
-        types = dict(schema)
-        pre_part = m.get("bucket_fn", "xxhash64") == "murmur3"
-        if pre_part:
-            unioned = unioned.repartition(
-                m.get("buckets", self.buckets),
-                *[F.col(k) for k in self._layout_cols(m, keys)],
-            )
-        combined = (
-            unioned.groupBy(*[F.col(k) for k in keys])
-            .agg(
-                *[
-                    F.sum(F.col(c)).cast(types[c]).alias(c)
-                    for c in val_cols
-                ]
-            )
-            .filter(F.col(liveness_col) > 0)
-            .select(*[n for n, _ in schema])
-        )
-        new_files = self._write_bucket_files(combined, keys, m, pre_partitioned=pre_part)
-        stray = set(new_files.keys()) - touched_set
-        if stray:
-            raise ValueError(
-                f"merge_additive: delta rows landed in buckets {sorted(stray)} "
-                f"outside the touched set {sorted(touched_set)}; refusing to "
-                "overwrite unread target buckets"
-            )
-        files = {b: p for b, p in m["files"].items() if b not in touched_set}
-        files.update(new_files)
-        m["files"] = files
-        m["keys"] = keys
-        if batch_id is not None:
-            m["batch_ids"].append(batch_id)
-        return self._commit(m)
+
+        return self._rewrite("merge_additive", m, delta, keys, reduce, batch_id)
 
     def append(self, df: DataFrame | pa.Table, batch_id: str | None = None) -> int:
         """Append-only commit (no key semantics): one new file added to
@@ -1228,9 +1061,7 @@ class LakeTable:
         else:
             self._write_arrow(df, m, out_abs)
         m["files"].setdefault("0", []).append(out_rel)
-        if batch_id is not None:
-            m["batch_ids"].append(batch_id)
-        return self._commit(m)
+        return self._commit(m, batch_id)
 
     def _write_arrow(self, tbl: pa.Table, manifest: dict, out_abs: str) -> None:
         """Driver-side twin of the Spark append write: add ``tbl``'s new
@@ -1268,77 +1099,19 @@ class LakeTable:
         self,
         keys: list[str] | None = None,
         drop_tombstones_col: str | None = None,
-        sort_by: list[str] | None = None,
-        max_records_per_file: int | None = None,
-        zorder_by: list[str] | None = None,
-        zorder_bits: int = 4,
     ) -> int:
         """Rewrite the table into fresh bucket files: merges the small
         files accumulated by appends/merges and optionally drops
         merge-on-read tombstone rows (physical cleanup of logical
         deletes — safe once no replayable stream can carry LSNs at or
-        below the live watermark).
-
-        ``sort_by`` declares a PERSISTED secondary sort order (Iceberg
-        sort-order analogue): this rewrite and every later write sort
-        rows within each bucket on those columns (per-partition sort,
-        no extra shuffle), so scans filtering on them skip parquet row
-        groups. ``max_records_per_file`` splits each bucket into
-        range-disjoint part files recorded as individual manifest
-        entries, so :meth:`read_where` prunes at split grain — a point
-        or range lookup on the sort column opens ~one part per bucket
-        instead of the whole bucket. Pass ``sort_by=[]`` to drop a
-        previously persisted order.
-
-        ``zorder_by`` persists MULTI-column clustering instead
-        (Iceberg/Delta Z-ORDER analogue): each column is quantile-
-        bucketed into ``2**zorder_bits`` ranks (boundaries estimated
-        once here, stored in the manifest) and the rank bits are
-        interleaved into one Morton key the within-bucket sort runs
-        on — so part files stay simultaneously tight on EVERY listed
-        column and :meth:`read_where` prunes on any of them, where a
-        lexicographic ``sort_by`` only ever helps its prefix. Numeric/
-        timestamp columns only; quantile (not min/max) ranks keep
-        skewed distributions from collapsing into one bucket. Later
-        merges recompute the Morton key from the STORED boundaries —
-        cheap, shuffle-free, and consistent until the next compact
-        re-estimates. Mutually exclusive with ``sort_by``;
-        ``zorder_by=[]`` clears it."""
+        below the live watermark)."""
         m = self._read_manifest()
         explicit = keys is not None
         keys = keys or m.get("keys") or [m["schema"][0][0]]
-        if sort_by is not None and zorder_by:
-            raise ValueError("sort_by and zorder_by are mutually exclusive")
-        if sort_by is not None:
-            known = {n for n, _ in m["schema"]}
-            bad = [c for c in sort_by if c not in known]
-            if bad:
-                raise ValueError(f"sort_by columns not in table schema: {bad}")
-            m["sort_order"] = sort_by
-            if sort_by:
-                m["zorder"] = None
-            # a sort order without footer stats on its columns can't feed
-            # the manifest prune — record them from this commit onward
-            missing_stats = [c for c in sort_by if c not in (m.get("stats_cols") or [])]
-            if missing_stats:
-                m["stats_cols"] = (m.get("stats_cols") or []) + missing_stats
         df = self.read()
-        if zorder_by is not None:
-            if not zorder_by:
-                m["zorder"] = None
-            else:
-                m["zorder"] = self._estimate_zorder(df, zorder_by, zorder_bits, m)
-                m["sort_order"] = []
-                missing_stats = [
-                    c for c in zorder_by if c not in (m.get("stats_cols") or [])
-                ]
-                if missing_stats:
-                    m["stats_cols"] = (m.get("stats_cols") or []) + missing_stats
         if drop_tombstones_col and drop_tombstones_col in df.columns:
             df = df.filter(~F.coalesce(F.col(drop_tombstones_col), F.lit(False)))
-        m["files"] = self._write_bucket_files(
-            df, keys, m, max_records_per_file=max_records_per_file
-        )
+        m["files"] = self._write_bucket_files(df, keys, m)
         # self.read() above resolved any pending merge-on-read deltas,
         # so this rewrite folds them into the base — clear the ledger
         m["delta_files"] = {}
@@ -1433,24 +1206,15 @@ class LakeTable:
         churn / lineage tables). Returns the new snapshot id, or None
         when the layout is already tight — the maintenance hook a
         streaming job calls every N epochs without paying a rewrite
-        each time.
-
-        Split part files (``compact(max_records_per_file=...)``, entries
-        ending in .parquet) are an INTENTIONAL layout, not debt — a
-        bucket's split parts count as one; only dir entries (merge
-        rewrites, appends) accumulate toward the threshold."""
+        each time. Every pending merge-on-read delta file counts too:
+        it is read tax on EACH scan of its bucket."""
         m = self._read_manifest()
         deltas = m.get("delta_files") or {}
-
-        def debt(b: str, paths: list[str]) -> int:
-            dirs = sum(1 for p in paths if not p.endswith(".parquet"))
-            has_split_parts = dirs < len(paths)
-            # every pending merge-on-read delta file is read tax on
-            # EACH scan of its bucket — full debt, never layout
-            return dirs + (1 if has_split_parts else 0) + len(deltas.get(b, []))
-
         worst = max(
-            (debt(b, m["files"].get(b, [])) for b in set(m["files"]) | set(deltas)),
+            (
+                len(m["files"].get(b, [])) + len(deltas.get(b, []))
+                for b in set(m["files"]) | set(deltas)
+            ),
             default=0,
         )
         if worst <= max_files_per_bucket:
@@ -1558,8 +1322,6 @@ class LakeTable:
             "mapping_version": m.get("mapping_version", 0),
             "keys": m.get("keys"),
             "stats_cols": m.get("stats_cols"),
-            "sort_order": m.get("sort_order"),
-            "zorder": (m.get("zorder") or {}).get("cols"),
         }
         if count_tombstones_col and any(
             n == count_tombstones_col for n, _ in m["schema"]

@@ -143,11 +143,16 @@ def local_df(spark: SparkSession, rows: list, ddl: str):
     produces a JVM ``LocalRelation`` (warm writes ~0.2s): all-object
     dtype keeps None as proper nulls, and the explicit DDL schema drives
     Arrow's type coercion so nullable longs never become float NaNs.
+    ``createDataFrame`` skips Arrow for an EMPTY pandas frame, so no
+    rows go in as an empty Arrow table instead: an empty
+    ``LocalRelation``, which the optimizer drops from a union.
     """
     import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     schema = StructType.fromDDL(ddl)
-    names = schema.fieldNames()
-    pdf = pd.DataFrame(rows if rows else None, columns=names, dtype=object)
+    if not rows:
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema=schema)
+    pdf = pd.DataFrame(rows, columns=schema.fieldNames(), dtype=object)
     return spark.createDataFrame(pdf, schema=schema)

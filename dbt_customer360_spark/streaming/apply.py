@@ -219,8 +219,8 @@ class CDCApplier:
           2. the LSN merge itself (union touched target + batch,
              ``max_by`` reduce, bucketed write) — within-batch dedup,
              stale-replay rejection (high-watermark), and the upsert are
-             all one comparator; map-side partial aggregation absorbs
-             hot-key skew (see LakeTable.merge_lsn).
+             all one comparator (hot-key skew: ``salt`` in
+             LakeTable.merge_lsn).
         The lineage rows are written by pyarrow on the driver — no job.
         A fail-expectation raises after step 1, before any write; an
         epoch that quarantines rows adds one job for the dead-letter

@@ -1,6 +1,7 @@
 import pytest
 import tempfile
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from dbt_customer360_spark.lake.table import LakeTable
@@ -23,6 +24,36 @@ def test_merge_upsert_and_delete(spark):
     t.merge(batch, ["repo", "path"], batch_id="b1", delete_col="is_del")
     got = {(r.repo, r.path): r.v for r in t.read().collect()}
     assert got == {("r1", "a"): 10, ("r1", "b"): 2, ("r3", "z"): 7}
+
+
+def test_merge_stores_one_row_per_key(spark):
+    """merge groups keys null-safely, like merge_lsn: re-merging
+    (r1, NULL) replaces its row and a delete row for it removes it. Two
+    upserts of one key in one batch fail before commit (SQL MERGE's
+    cardinality rule)."""
+    t = _table(spark)
+    keys = ["repo", "path"]
+
+    def batch(*rows):
+        return spark.createDataFrame(
+            list(rows), "repo string, path string, v int, is_del boolean"
+        )
+
+    t.merge(batch(("r1", None, 1, False)), keys, batch_id="b0", delete_col="is_del")
+    t.merge(batch(("r1", None, 2, False)), keys, batch_id="b1", delete_col="is_del")
+    assert [(r.repo, r.path, r.v) for r in t.read().collect()] == [("r1", None, 2)]
+    t.merge(batch(("r1", None, None, True)), keys, batch_id="b2", delete_col="is_del")
+    assert t.read().count() == 0
+
+    sid = t.current_snapshot_id()
+    with pytest.raises(SparkRuntimeException, match="more than once"):
+        t.merge(
+            batch(("r1", "a", 1, False), ("r1", "a", 2, False)),
+            keys,
+            batch_id="b3",
+            delete_col="is_del",
+        )
+    assert t.current_snapshot_id() == sid and t.read().count() == 0
 
 
 def test_rollback_to_restores_state_and_replay_ledger(spark):
@@ -272,29 +303,6 @@ def test_murmur3_merge_one_file_per_bucket(spark):
         assert len(paths) == 1
         parts = glob.glob(os.path.join(t.root, "data", paths[0], "part-*"))
         assert len(parts) == 1, (b, parts)
-
-
-def test_legacy_xxhash64_layout_still_merges(spark):
-    """A manifest without bucket_fn (pre-murmur3 table) keeps the
-    xxhash64 layout for discovery AND writes — mixed-version tables
-    never mis-bucket."""
-    t = _table(spark, buckets=4)
-    m = t._read_manifest()
-    m.pop("bucket_fn")
-    t._commit(m)  # snapshot 1: legacy manifest, no data
-    df1 = spark.createDataFrame(
-        [("r1", "a", 1, False), ("r2", "b", 2, False)],
-        "repo string, path string, __max_lsn long, __deleted boolean",
-    )
-    t.merge_lsn(df1, ["repo", "path"], batch_id="b1")
-    assert "bucket_fn" not in t._read_manifest()
-    df2 = spark.createDataFrame(
-        [("r1", "a", 5, False), ("r3", "c", 3, False)],
-        "repo string, path string, __max_lsn long, __deleted boolean",
-    )
-    t.merge_lsn(df2, ["repo", "path"], batch_id="b2")
-    got = {(r.repo, r.path): r["__max_lsn"] for r in t.read().collect()}
-    assert got == {("r1", "a"): 5, ("r2", "b"): 2, ("r3", "c"): 3}
 
 
 def test_commit_conflict_detected_not_overwritten(spark):
@@ -735,161 +743,3 @@ def test_append_refuses_key_merged_table_and_ops_report(spark):
     lin = _table(spark)
     lin.append(spark.createDataFrame([(1,)], "n int"), batch_id="a0")
     assert lin.ops_report()["committed_batches"] == 1
-
-
-def test_sorted_split_compaction_prunes_at_split_grain(spark):
-    """compact(sort_by=..., max_records_per_file=...) — the Iceberg
-    sort-order + split-planning analogue: each bucket is rewritten as
-    range-disjoint part files with their own manifest entries, so a
-    range lookup on the sort column opens ~one part per bucket; later
-    merges keep sorting within buckets (sort_order persists)."""
-    import pyarrow.parquet as pq
-    import os as _os
-
-    t = _table(spark, buckets=2)
-    rows = [(f"r{i}", "p", i, 1000 + i) for i in range(200)]
-    t.merge_lsn(
-        spark.createDataFrame(rows, "repo string, path string, ts long, __max_lsn long"),
-        ["repo", "path"],
-        batch_id="b0",
-    )
-    t.compact(sort_by=["ts"], max_records_per_file=25)
-    m = t._read_manifest()
-    assert m["sort_order"] == ["ts"]
-    assert "ts" in m["stats_cols"]  # auto-added so the prune can work
-    entries = [p for ps in m["files"].values() for p in ps]
-    assert len(entries) >= 6  # split: several parts per bucket
-    assert all(e.endswith(".parquet") for e in entries)
-    # parts are range-disjoint on ts within each bucket
-    for ps in m["files"].values():
-        spans = sorted(tuple(m["file_stats"][p]["ts"]) for p in ps)
-        for (_, hi_a), (lo_b, _) in zip(spans, spans[1:]):
-            assert hi_a < lo_b, spans
-    # a narrow range opens only the matching parts
-    q = t.read_where({"ts": (100, 110)})
-    opened = {f.split("/data/")[1] for f in q.inputFiles()}
-    assert len(opened) <= 4, opened  # <=2 parts x 2 buckets, not all ~16
-    assert {r.ts for r in q.collect()} == set(range(100, 111))
-    # a later merge maintains the persisted sort within rewritten buckets
-    t.merge_lsn(
-        spark.createDataFrame(
-            [("r5", "p", 5, 9000), ("zz", "q", 777, 9001)],
-            "repo string, path string, ts long, __max_lsn long",
-        ),
-        ["repo", "path"],
-        batch_id="b1",
-    )
-    m2 = t._read_manifest()
-    assert m2["sort_order"] == ["ts"]
-    new_entries = [
-        p for ps in m2["files"].values() for p in ps if p not in set(entries)
-    ]
-    assert new_entries
-    for rel in new_entries:
-        root = _os.path.join(t.root, "data", rel)
-        parts = (
-            [_os.path.join(root, f) for f in _os.listdir(root) if f.endswith(".parquet")]
-            if _os.path.isdir(root)
-            else [root]
-        )
-        for part in parts:
-            ts_vals = pq.read_table(part, columns=["ts"])["ts"].to_pylist()
-            assert ts_vals == sorted(ts_vals)
-    # rows all intact after merge over split entries
-    assert t.read().count() == 201
-    # dropping the order: plain compact keeps it, sort_by=[] clears it
-    t.compact()
-    assert t._read_manifest()["sort_order"] == ["ts"]
-    t.compact(sort_by=[])
-    assert t._read_manifest()["sort_order"] == []
-
-
-def test_maybe_compact_ignores_intentional_split_parts(spark):
-    """Split part files are layout, not debt: maybe_compact must not
-    collapse a freshly split-compacted table back into one file per
-    bucket on the next maintenance tick."""
-    t = _table(spark, buckets=2)
-    rows = [(f"r{i}", "p", i, i) for i in range(100)]
-    t.merge_lsn(
-        spark.createDataFrame(rows, "repo string, path string, ts long, __max_lsn long"),
-        ["repo", "path"],
-        batch_id="b0",
-    )
-    sid = t.compact(sort_by=["ts"], max_records_per_file=10)
-    m = t._read_manifest()
-    assert max(len(p) for p in m["files"].values()) > 4  # really split
-    assert t.maybe_compact(max_files_per_bucket=4) is None  # not debt
-    assert t._read_manifest()["snapshot_id"] == sid  # no rewrite happened
-
-
-def test_zorder_compaction_prunes_on_both_columns(spark):
-    """compact(zorder_by=[a, b]) — Morton clustering: split part files
-    stay tight on BOTH columns simultaneously, so read_where prunes on
-    either one (a lexicographic sort only helps its prefix); later
-    merges keep clustering against the persisted quantile boundaries."""
-    t = _table(spark, buckets=2)
-    # x and y independent -> a plain sort on x leaves y spread full-range
-    rows = [
-        (f"r{i}", "p", (i * 37) % 200, ((i * 101) + 7) % 200, 1000 + i)
-        for i in range(400)
-    ]
-    t.merge_lsn(
-        spark.createDataFrame(
-            rows, "repo string, path string, x long, y long, __max_lsn long"
-        ),
-        ["repo", "path"],
-        batch_id="b0",
-    )
-    t.compact(zorder_by=["x", "y"], max_records_per_file=25)
-    m = t._read_manifest()
-    assert m["zorder"]["cols"] == ["x", "y"] and m["sort_order"] == []
-    assert set(m["zorder"]["cols"]) <= set(m["stats_cols"])
-    n_parts = sum(len(ps) for ps in m["files"].values())
-    assert n_parts >= 8
-
-    def opened(pred):
-        q = t.read_where(pred)
-        return len(q.inputFiles()), {r.repo for r in q.collect()}
-
-    exp_x = {f"r{i}" for i in range(400) if 0 <= (i * 37) % 200 <= 20}
-    nx, got_x = opened({"x": (0, 20)})
-    assert got_x == exp_x
-    assert nx < n_parts / 2, (nx, n_parts)  # pruned on x...
-    exp_y = {f"r{i}" for i in range(400) if 0 <= ((i * 101) + 7) % 200 <= 20}
-    ny, got_y = opened({"y": (0, 20)})
-    assert got_y == exp_y
-    assert ny < n_parts / 2, (ny, n_parts)  # ...AND on y (sort_by can't)
-
-    # a later merge recomputes the Morton key from stored boundaries:
-    # rows still intact, zorder persisted
-    t.merge_lsn(
-        spark.createDataFrame(
-            [("zz", "q", 5, 5, 9000)],
-            "repo string, path string, x long, y long, __max_lsn long",
-        ),
-        ["repo", "path"],
-        batch_id="b1",
-    )
-    assert t._read_manifest()["zorder"]["cols"] == ["x", "y"]
-    assert t.read().count() == 401
-    assert t.ops_report()["zorder"] == ["x", "y"]
-    # clearing
-    t.compact(zorder_by=[])
-    assert t._read_manifest()["zorder"] is None
-
-
-def test_zorder_refuses_strings_and_sortby_conflict(spark):
-    t = _table(spark, buckets=2)
-    t.merge_lsn(
-        spark.createDataFrame(
-            [("r", "p", 1, 1)], "repo string, path string, x long, __max_lsn long"
-        ),
-        ["repo", "path"],
-        batch_id="b0",
-    )
-    with pytest.raises(ValueError, match="numeric/timestamp"):
-        t.compact(zorder_by=["repo"])
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        t.compact(sort_by=["x"], zorder_by=["x"])
-    with pytest.raises(ValueError, match="not in table schema"):
-        t.compact(zorder_by=["nope"])

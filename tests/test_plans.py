@@ -5,6 +5,7 @@ hash joins for dims, pushed parquet filters/pruned schemas, and —
 critically — NO BroadcastNestedLoopJoin/CartesianProduct anywhere in
 the match path (the whole point of decomposing the OR-join)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from dbt_customer360_spark.plans.queries import QUERIES
@@ -84,23 +85,35 @@ def test_spread_for_compute_noop_at_scale(spark):
     assert spread.rdd.getNumPartitions() >= par
 
 
-def test_merge_lsn_is_single_shuffle(spark, tmp_path, monkeypatch):
-    """One-shuffle merge on the murmur3 layout: the merge plan contains
-    exactly ONE Exchange (the pre-agg repartition on the merge keys);
-    the max_by groupBy reuses it and the bucketed write is
-    pre-partitioned, so neither adds a shuffle."""
-    import tempfile
-
+@pytest.mark.parametrize("op", ["merge_lsn", "merge_delete", "merge_additive"])
+def test_merge_is_single_shuffle(spark, tmp_path, monkeypatch, op):
+    """One-shuffle merge on the murmur3 layout, for every copy-on-write
+    merge: the merge plan contains exactly ONE Exchange (the pre-reduce
+    repartition on the merge keys); the reduce's groupBy reuses it and
+    the bucketed write is pre-partitioned, so neither adds a shuffle."""
     from dbt_customer360_spark.lake.table import LakeTable
 
     t = LakeTable(spark, str(tmp_path / "t"), buckets=4)
+    keys = ["repo"] if op == "merge_additive" else ["repo", "path"]
     mk = lambda lo, hi: spark.range(lo, hi).selectExpr(
         "concat('r', id % 7) as repo",
         "cast(id as string) as path",
         "id as __max_lsn",
-        "false as __deleted",
+        "id % 5 = 0 as __deleted",
     )
-    t.merge_lsn(mk(0, 200), ["repo", "path"], batch_id="b0")
+    if op == "merge_lsn":
+        write = lambda df, bid: t.merge_lsn(df, keys, batch_id=bid)
+    elif op == "merge_delete":
+        write = lambda df, bid: t.merge(df, keys, batch_id=bid, delete_col="__deleted")
+    else:
+        # repeated repos fold inside the reduce: no aggregation upstream
+        write = lambda df, bid: t.merge_additive(
+            df.selectExpr("repo", "__max_lsn as s", "1 as n"),
+            keys,
+            liveness_col="n",
+            batch_id=bid,
+        )
+    write(mk(0, 200), "b0")
 
     captured = {}
     orig = LakeTable._write_bucket_files
@@ -110,7 +123,7 @@ def test_merge_lsn_is_single_shuffle(spark, tmp_path, monkeypatch):
         return orig(self, df, keys, manifest, pre_partitioned)
 
     monkeypatch.setattr(LakeTable, "_write_bucket_files", spy)
-    t.merge_lsn(mk(100, 300), ["repo", "path"], batch_id="b1")
+    write(mk(100, 300), "b1")
     assert captured["pp"] is True
     plan = captured["df"]._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
