@@ -34,10 +34,14 @@ on a cluster (the call-sites only use the API below):
   Iceberg's name-mapping.
 
 Scale notes: the bucket layout means a MERGE touching k of B buckets
-reads/writes only k/B of the table; B is chosen at create time
-(``buckets``) and should be sized so one bucket ≈ a few GB at target
-scale. All data movement is Spark jobs — the driver only manipulates
-manifest JSON (O(#files), not O(rows)) — except an ``append`` of a
+reads/writes only k/B of the table. B follows the table's bytes: it is
+the smallest power of two with bytes / B at or under
+``spark.sql.adaptive.advisoryPartitionSizeInBytes`` — set from the
+first write's size estimate, and raised by ``maybe_compact`` when the
+table's files outgrow it (a 0.5 MB table is one bucket at the 64 MB
+default, a 100 TB table 2**21); buckets are never merged back. All
+data movement is Spark jobs — the driver only manipulates manifest JSON
+(O(#files), not O(rows)) — except an ``append`` of a
 ``pyarrow.Table``, whose rows already live on the driver (lineage).
 """
 
@@ -72,11 +76,22 @@ class LakeTable:
         self,
         spark: SparkSession,
         root: str,
-        buckets: int = 16,
+        buckets: int | None = None,
         stats_cols: list[str] | None = None,
         bucket_cols: list[str] | None = None,
     ):
-        """``stats_cols``: columns whose per-file min/max are recorded
+        """``buckets``: the bucket count of a NEW table. None (default)
+        sizes it from the data: the first write records the smallest
+        power of two B with (estimated bytes) / B at or under
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (1 when
+        Spark cannot estimate the size). Only :meth:`maybe_compact`
+        raises it later, as the table's files grow; a table nobody
+        maintains keeps its first count. An explicit N creates the
+        table with N buckets. Either way the count rides the manifest,
+        so an existing table keeps its layout whatever a later writer
+        passes.
+
+        ``stats_cols``: columns whose per-file min/max are recorded
         in the manifest at commit time (read straight off the parquet
         footers — no Spark job) and used by :meth:`read_where` to skip
         files a range predicate cannot match — Iceberg-manifest-style
@@ -144,6 +159,7 @@ class LakeTable:
                 # different pmod layout — touched-bucket pruning then
                 # reads the wrong files and a merge can DUPLICATE a key
                 # (one row per layout). Readers honor the manifest.
+                # None = sized by the first copy-on-write commit
                 "buckets": self.buckets,
                 # bucket on a key subset (None = the full merge key);
                 # part of the physical layout, sticky like "buckets"
@@ -335,7 +351,13 @@ class LakeTable:
         repartition(buckets, *layout_cols) — the property the
         one-shuffle merge write relies on."""
         h = F.hash(*[F.col(k) for k in self._layout_cols(manifest, keys)])
-        return F.pmod(h, F.lit(manifest.get("buckets", self.buckets)))
+        return F.pmod(h, F.lit(self._bucket_count(manifest)))
+
+    def _bucket_count(self, manifest: dict) -> int:
+        """The layout's bucket count: the manifest's (manifests created
+        before the field fall back to the constructor value). A table
+        not sized yet holds no merged rows and reads as one bucket."""
+        return manifest.get("buckets", self.buckets) or 1
 
     def bucket_column(self, keys: list[str], manifest: dict | None = None) -> F.Column:
         """The bucket id of a row keyed by ``keys`` under the table's
@@ -476,11 +498,16 @@ class LakeTable:
         """Rows whose ``match`` columns equal (null-safe) its values,
         read from the ONE bucket those values hash to; ``match`` covers
         the layout columns. The single-bucket read behind
-        :meth:`read_point` and :meth:`read_prefix`."""
-        types = dict(m["schema"])
-        ddl = ", ".join(f"`{k}` {types[k]}" for k in match)
-        probe = local_df(self.spark, [tuple(match.values())], ddl)
-        bucket = str(probe.select(self.bucket_column(keys, m)).first()[0])
+        :meth:`read_point` and :meth:`read_prefix`. On a one-bucket
+        layout the bucket is "0" (pmod(h, 1) = 0) and the 1-row probe
+        job that hashes ``match`` is skipped."""
+        if self._bucket_count(m) == 1:
+            bucket = "0"
+        else:
+            types = dict(m["schema"])
+            ddl = ", ".join(f"`{k}` {types[k]}" for k in match)
+            probe = local_df(self.spark, [tuple(match.values())], ddl)
+            bucket = str(probe.select(self.bucket_column(keys, m)).first()[0])
         pred = None
         for k, v in match.items():
             c = F.col(k).eqNullSafe(F.lit(v))
@@ -669,22 +696,65 @@ class LakeTable:
 
     # --- writes ------------------------------------------------------------------
 
-    def _write_tasks(self, df: DataFrame, n_buckets: int) -> int:
-        """Write-task count for ``n_buckets`` bucket partitions of
-        ``df`` (rule in :meth:`_write_bucket_files`). Reads Spark's
-        ``sizeInBytes`` estimate on the driver and runs no job. The
-        estimate comes off the already-analyzed plan: it matches the
-        optimized plan's for these writes (the same statistics visitor
-        over file sizes and local rows), without an extra optimizer pass
-        per write (10-20 ms for a merge plan on a 4-vCPU host)."""
+    def _size_estimate(self, df: DataFrame) -> int | None:
+        """Spark's ``sizeInBytes`` estimate for ``df``, read on the
+        driver without a job; None when Spark cannot estimate it (its
+        default-size sentinel, e.g. an RDD-backed plan). The estimate
+        comes off the already-analyzed plan: it matches the optimized
+        plan's for these writes (the same statistics visitor over file
+        sizes and local rows), without an extra optimizer pass per write
+        (10-20 ms for a merge plan on a 4-vCPU host)."""
         jconf = self.spark._jsparkSession.sessionState().conf()
         est = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
-        if est >= jconf.defaultSizeInBytes():
-            return n_buckets
-        advisory = self.spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        return None if est >= jconf.defaultSizeInBytes() else est
+
+    def _target_bytes(self) -> int:
+        """``spark.sql.adaptive.advisoryPartitionSizeInBytes`` in bytes:
+        one write task's worth of data, and the size one bucket is kept
+        under."""
+        return self.spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
             self.spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
         )
-        want = max(self.spark.sparkContext.defaultParallelism, -(-est // advisory))
+
+    def _sized_buckets(self, nbytes: int | None) -> int:
+        """The smallest power of two B with ``nbytes`` / B at or under
+        the target bytes per bucket (:meth:`_target_bytes`); 1 when the
+        size is unknown (None)."""
+        target, b = self._target_bytes(), 1
+        while nbytes is not None and nbytes > b * target:
+            b *= 2
+        return b
+
+    def _size_layout(self, m: dict, df: DataFrame) -> bool:
+        """Give a table created with ``buckets=None`` its bucket count:
+        :meth:`_sized_buckets` of ``df``'s size estimate, recorded in
+        ``m``. The first write calls it with what it is about to lay
+        out; True when it sized ``m``, False when ``m`` already had a
+        count."""
+        if m.get("buckets", self.buckets) is not None:
+            return False
+        m["buckets"] = self._sized_buckets(self._size_estimate(df))
+        return True
+
+    def _cluster(self, df: DataFrame, m: dict, keys: list[str]) -> DataFrame:
+        """``df`` with partition i == bucket i under ``m``'s layout, so a
+        per-key reduce and the bucketed write that follow add no
+        exchange. One bucket needs no shuffle: a single partition
+        satisfies both, so ``df`` is coalesced, not hash-partitioned."""
+        n = self._bucket_count(m)
+        if n == 1:
+            return df.coalesce(1)
+        return df.repartition(n, *[F.col(k) for k in self._layout_cols(m, keys)])
+
+    def _write_tasks(self, df: DataFrame, n_buckets: int) -> int:
+        """Write-task count for ``n_buckets`` bucket partitions of
+        ``df`` (rule in :meth:`_write_bucket_files`); runs no job."""
+        est = self._size_estimate(df)
+        if est is None:
+            return n_buckets
+        want = max(
+            self.spark.sparkContext.defaultParallelism, -(-est // self._target_bytes())
+        )
         return min(n_buckets, want)
 
     def _write_bucket_files(
@@ -719,7 +789,7 @@ class LakeTable:
         manifest = manifest if manifest is not None else self._read_manifest()
         out_rel = f"w{uuid.uuid4().hex[:12]}"
         out_abs = os.path.join(self.root, "data", out_rel)
-        n_buckets = manifest.get("buckets", self.buckets)
+        n_buckets = self._bucket_count(manifest)
         tasks = self._write_tasks(df, n_buckets)
         df = df.withColumn("__bucket", self._bucket_expr(keys, manifest))
         if not pre_partitioned:
@@ -772,7 +842,9 @@ class LakeTable:
         touched buckets'. The reduce's groupBy on the merge keys adds no
         exchange (HashPartitioning on the layout columns, a subset of
         the keys, satisfies its clustering) and, since partition i ==
-        bucket i, neither does the bucketed write. This trades away
+        bucket i, neither does the bucketed write; a one-bucket layout
+        coalesces the union to one partition instead, and the merge runs
+        with no shuffle at all (:meth:`_cluster`). This trades away
         map-side combine, which only ever helped within-batch duplicate
         keys (target rows are unique per key) and measured 1.7x faster
         end-to-end; ``pre_partition=False`` (the salted merge_lsn
@@ -782,8 +854,18 @@ class LakeTable:
         ``touched`` defaults to the batch's buckets (one job). A
         caller-supplied set that misses a bucket the batch lands in
         fails the commit: that bucket's target rows were never read, so
-        replacing its file list would silently drop them."""
-        if touched is None:
+        replacing its file list would silently drop them. On a one-bucket
+        layout the whole table is bucket "0", so that is the touched set
+        and no job runs.
+
+        The first commit into a table created with ``buckets=None``
+        (which reads as one bucket until then) sizes its layout from
+        the union's size estimate (:meth:`_size_layout`); the whole
+        table was read as the target, so every new bucket counts as
+        touched."""
+        if self._bucket_count(m) == 1:
+            touched = {"0"}
+        elif touched is None:
             touched = self._touched_buckets(batch, keys, m)
         target = self._read_paths(
             m, [p for b, paths in m["files"].items() if b in touched for p in paths]
@@ -791,11 +873,10 @@ class LakeTable:
         unioned = target.withColumn("__is_target", F.lit(1)).unionByName(
             batch.withColumn("__is_target", F.lit(0)), allowMissingColumns=True
         )
+        if self._size_layout(m, unioned):
+            touched = {str(b) for b in range(m["buckets"])}
         if pre_partition:
-            unioned = unioned.repartition(
-                m.get("buckets", self.buckets),
-                *[F.col(k) for k in self._layout_cols(m, keys)],
-            )
+            unioned = self._cluster(unioned, m, keys)
         new_files = self._write_bucket_files(reduce(unioned), keys, m, pre_partition)
         stray = set(new_files) - touched
         if stray:
@@ -930,10 +1011,8 @@ class LakeTable:
                     f"merge_lsn(mor): table's pending deltas use lsn_col "
                     f"{prev_lsn!r}, got {lsn_col!r}; compact() before switching"
                 )
-            batch = batch.repartition(
-                m.get("buckets", self.buckets),
-                *[F.col(k) for k in self._layout_cols(m, keys)],
-            )
+            self._size_layout(m, batch)
+            batch = self._cluster(batch, m, keys)
             # within-batch dedup only — the target is never read; stale
             # replays below a key's stored LSN are suppressed at read
             # time by the same comparator
@@ -1105,7 +1184,18 @@ class LakeTable:
         merge-on-read tombstone rows (physical cleanup of logical
         deletes — safe once no replayable stream can carry LSNs at or
         below the live watermark)."""
-        m = self._read_manifest()
+        return self._relayout(self._read_manifest(), keys, drop_tombstones_col)
+
+    def _relayout(
+        self,
+        m: dict,
+        keys: list[str] | None,
+        drop_tombstones_col: str | None = None,
+    ) -> int:
+        """One full rewrite of the table state under ``m``'s layout
+        (bucket count and columns), committed as ``m``'s successor: the
+        write behind :meth:`compact`, :meth:`rebucket` and
+        :meth:`maybe_compact`."""
         explicit = keys is not None
         keys = keys or m.get("keys") or [m["schema"][0][0]]
         df = self.read()
@@ -1160,8 +1250,10 @@ class LakeTable:
 
     def bucket_count(self, snapshot_id: int | None = None) -> int:
         """The table's COMMITTED bucket count (manifests created before
-        the field fall back to the constructor value)."""
-        return self._read_manifest(snapshot_id).get("buckets", self.buckets)
+        the field fall back to the constructor value; a table created
+        with ``buckets=None`` reads 1 until its first write sizes
+        it)."""
+        return self._bucket_count(self._read_manifest(snapshot_id))
 
     def rebucket(
         self,
@@ -1169,10 +1261,10 @@ class LakeTable:
         keys: list[str] | None = None,
         bucket_cols: list[str] | None = None,
     ) -> int:
-        """Change the bucket layout — the operational move when a table
-        outgrows its create-time count (a 100 TB table wants a bucket
-        ~ a few GB), or when an access pattern wants a different
-        ``bucket_cols`` prefix. One full rewrite under the new layout;
+        """Change the bucket layout — the operational move when an
+        access pattern wants a different ``bucket_cols`` prefix, or a
+        different count than :meth:`maybe_compact`'s size rule gives.
+        One full rewrite under the new layout;
         the recorded count/columns and the rewritten file lists change
         in the SAME atomic commit, so concurrent writers either see
         the old layout whole or the new one (a racer committing
@@ -1187,13 +1279,32 @@ class LakeTable:
             m["bucket_cols"] = list(bucket_cols)
         elif m.get("bucket_cols") and not set(m["bucket_cols"]) <= set(keys):
             m["bucket_cols"] = None  # old prefix no longer applies
-        df = self.read()
         m["buckets"] = new_buckets
-        m["files"] = self._write_bucket_files(df, keys, m)
-        m["delta_files"] = {}
-        m["lsn_col"] = None
-        m["keys"] = keys
-        return self._commit(m)
+        return self._relayout(m, keys)
+
+    def _grown_buckets(self, m: dict) -> int | None:
+        """The bucket count a keyed table has grown into:
+        :meth:`_sized_buckets` of its base files' on-disk parquet bytes
+        (a directory listing, no Spark job) when that is above its
+        count, else None; always None for an append-only table (no
+        keys), which is never split. Pending merge-on-read deltas do not
+        count: several versions of one key are not table bytes.
+
+        The rule reads the table's bytes, not its largest bucket's: a
+        bucket no split can shrink (one whale repo under
+        ``bucket_cols=['repo']``) must not split the layout again on
+        every call. A split changes the bytes only by its new files'
+        parquet footers, so the count settles while a footer is far
+        under the target (kilobytes against the 64 MB default)."""
+        if not m.get("keys"):
+            return None
+
+        def nbytes(rel: str) -> int:
+            with os.scandir(os.path.join(self.root, "data", rel)) as it:
+                return sum(e.stat().st_size for e in it if e.name.endswith(".parquet"))
+
+        b = self._sized_buckets(sum(nbytes(p) for ps in m["files"].values() for p in ps))
+        return b if b > self._bucket_count(m) else None
 
     def maybe_compact(
         self,
@@ -1201,25 +1312,34 @@ class LakeTable:
         keys: list[str] | None = None,
         drop_tombstones_col: str | None = None,
     ) -> int | None:
-        """Cost-gated auto-compaction: rewrite only when some bucket has
-        accumulated more than ``max_files_per_bucket`` files (append
-        churn / lineage tables). Returns the new snapshot id, or None
-        when the layout is already tight — the maintenance hook a
-        streaming job calls every N epochs without paying a rewrite
-        each time. Every pending merge-on-read delta file counts too:
-        it is read tax on EACH scan of its bucket."""
+        """Cost-gated maintenance rewrite — the hook a streaming job
+        calls every N epochs without paying a rewrite each time. It
+        rewrites only when a keyed table has outgrown its bucket count
+        (bytes / B over ``spark.sql.adaptive.advisoryPartitionSizeInBytes``;
+        the rewrite then splits the layout to the sized power of two,
+        see :meth:`_grown_buckets`, so split rewrites cost O(1)
+        amortized per row), or when
+        some bucket has accumulated more than ``max_files_per_bucket``
+        files (append churn / lineage tables); every pending
+        merge-on-read delta file counts too: it is read tax on EACH
+        scan of its bucket. Returns the new snapshot id, or None when
+        the layout is already tight."""
         m = self._read_manifest()
-        deltas = m.get("delta_files") or {}
-        worst = max(
-            (
-                len(m["files"].get(b, [])) + len(deltas.get(b, []))
-                for b in set(m["files"]) | set(deltas)
-            ),
-            default=0,
-        )
-        if worst <= max_files_per_bucket:
-            return None
-        return self.compact(keys=keys, drop_tombstones_col=drop_tombstones_col)
+        grown = self._grown_buckets(m)
+        if grown is not None:
+            m["buckets"] = grown
+        else:
+            deltas = m.get("delta_files") or {}
+            worst = max(
+                (
+                    len(m["files"].get(b, [])) + len(deltas.get(b, []))
+                    for b in set(m["files"]) | set(deltas)
+                ),
+                default=0,
+            )
+            if worst <= max_files_per_bucket:
+                return None
+        return self._relayout(m, keys, drop_tombstones_col)
 
     def expire_snapshots(self, keep_last: int = 2) -> list[str]:
         """Iceberg-style snapshot expiry: drop all but the newest
@@ -1231,9 +1351,12 @@ class LakeTable:
         Returns the removed top-level data dirs. Time travel remains
         available for the kept snapshots only; committed batch_ids are
         carried in every manifest, so exactly-once replay protection
-        survives expiry."""
+        survives expiry. ``keep_last`` below 1 raises ValueError: the
+        current snapshot is always kept."""
+        if keep_last < 1:
+            raise ValueError(f"expire_snapshots: keep_last must be >= 1, got {keep_last}")
         ids = self._snapshot_ids()
-        keep = set(ids[-keep_last:]) if keep_last > 0 else set(ids)
+        keep = set(ids[-keep_last:])
         referenced: set[str] = set()
         for sid in keep:
             m = self._read_manifest(sid)
@@ -1310,7 +1433,7 @@ class LakeTable:
         report = {
             "snapshot_id": m["snapshot_id"],
             "snapshots_retained": len(self._snapshot_ids()),
-            "buckets": m.get("buckets", self.buckets),
+            "buckets": self._bucket_count(m),
             "buckets_with_files": len(per_bucket),
             "data_files": sum(per_bucket.values()),
             "max_files_per_bucket": max(per_bucket.values(), default=0),

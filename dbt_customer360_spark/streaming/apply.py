@@ -53,7 +53,7 @@ class CDCApplier:
         spark: SparkSession,
         table_root: str,
         lineage_root: str | None = None,
-        buckets: int = 16,
+        buckets: int | None = None,
         bucket_cols: list[str] | None = None,
         assume_dense_batches: bool = False,
         hot_key_salt: int | None = None,
@@ -83,7 +83,9 @@ class CDCApplier:
         ``maintenance_every``: run auto-maintenance after every N
         applied (non-skipped) batches — cost-gated compaction
         (``maybe_compact``, a no-op while every bucket holds at most
-        ``max_files_per_bucket`` files) plus snapshot expiry down to
+        ``max_files_per_bucket`` files and its bytes fit its bucket
+        count; it splits the repos layout once the table outgrows that
+        count) plus snapshot expiry down to
         ``keep_snapshots``, on both the repos and lineage tables.
         Keeps file and snapshot counts bounded over an unbounded
         stream; None (default) leaves maintenance to the operator.
@@ -124,6 +126,18 @@ class CDCApplier:
         built-in malformed-event rules, and per-rule violation counts
         ride the lineage stats (``violations``) from the pre-merge
         aggregation.
+
+        ``buckets``: the repos table's bucket count at creation. None
+        (default) sizes it from the data (LakeTable ``buckets``): the
+        first epoch's commit picks the smallest power of two that keeps
+        a bucket at or under
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. Only
+        maintenance grows it later: with ``maintenance_every`` None the
+        count stays where the first epoch put it (every later epoch
+        rewrites the whole table if that was 1) until an operator calls
+        ``table.maybe_compact()``, so a stream that starts small and
+        grows should set ``maintenance_every``. An explicit N creates
+        the table with N.
 
         ``bucket_cols``: bucket the repos table on a key-subset prefix
         (e.g. ['repo']) for prefix locality — see LakeTable.bucket_cols;
@@ -208,7 +222,8 @@ class CDCApplier:
         Four Spark jobs per epoch on every path (batch replay or
         foreachBatch, either lineage grain, dense or pruned, CoW or
         MoR) — under AQE each shuffle's map side runs as its own job,
-        so each of the two steps below is a map job plus a result job:
+        so each of the two steps below is a map job plus a result job;
+        three on a one-bucket repos table, whose merge needs no shuffle:
           1. ONE aggregation of the batch, before any write, column-
              pruned to the merge keys, (lsn, op), ``partition_col`` and
              the expectation inputs — never the content payload. Its

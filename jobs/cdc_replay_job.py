@@ -55,7 +55,13 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--checkpoint", default=None, help="streaming checkpoint dir")
     ap.add_argument("--mode", choices=["batch", "stream"], default="batch")
     ap.add_argument("--batches", type=int, default=8)
-    ap.add_argument("--buckets", type=int, default=64)
+    ap.add_argument(
+        "--buckets", type=int, default=None,
+        help="bucket count of newly created tables (default: sized from the "
+        "data - the smallest power of two keeping a bucket at or under "
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes, split as the "
+        "table grows); existing tables keep their recorded layout",
+    )
     ap.add_argument(
         "--hot-key-salt", type=int, default=None,
         help="two-phase salted merge width for streams with one dominant key",
@@ -227,7 +233,11 @@ def main(argv: list[str] | None = None) -> int:
 
         ivm = IncrementalRollup(
             applier.table,
-            LakeTable(spark, args.rollup, buckets=min(args.buckets, 16)),
+            LakeTable(
+                spark,
+                args.rollup,
+                buckets=None if args.buckets is None else min(args.buckets, 16),
+            ),
             ["repo"],
             [
                 AggSpec("n_paths", "count"),

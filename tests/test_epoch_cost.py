@@ -211,3 +211,29 @@ def test_arrow_append_conforms_to_the_table_schema(spark, tmp_path):
     assert t._read_manifest()["schema"] == [["a", "bigint"], ["b", "string"], ["c", "double"]]
     got = sorted(map(tuple, t.read().collect()), key=lambda r: r[0])
     assert got == [(1, "x", None), (2, None, 1.5)]
+
+
+def test_default_applier_writes_one_repos_file_per_epoch(spark, tmp_path):
+    """A default-sized applier on a small table lays the repos table out
+    as one bucket, so an epoch rewrites one data file in one task, and
+    the merge needs no shuffle: three jobs, the pre-merge aggregation's
+    two and the write."""
+    applier = CDCApplier(
+        spark, str(tmp_path / "repos"), lineage_root=str(tmp_path / "lineage")
+    )
+    ev_ddl = "lsn long, op string, repo string, path string, content string"
+    pre = [(i, "insert", f"r{i % 5}", f"p{i}", f"c{i}") for i in range(300)]
+    applier.apply_batch(local_df(spark, pre, ev_ddl), 0)
+    t = applier.table
+    assert t.bucket_count() == 1
+    epoch = [(1000 + i, "update", f"r{i % 5}", f"p{i}", "new") for i in range(3)]
+    with counted(spark, "default-epoch") as c:
+        applier.apply_batch(local_df(spark, epoch, ev_ddl), 1)
+    files = t._read_manifest()["files"]
+    assert list(files) == ["0"] and len(files["0"]) == 1
+    assert _parquet_files(t, files["0"][0]) == 1
+    assert c["write_tasks"] == 1
+    assert len(c["jobs"]) == 3, c["jobs"]
+    live = {(r.path, r.content) for r in applier.state().collect()}
+    assert len(live) == 300
+    assert {content for path, content in live if path in ("p0", "p1", "p2")} == {"new"}

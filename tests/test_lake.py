@@ -743,3 +743,177 @@ def test_append_refuses_key_merged_table_and_ops_report(spark):
     lin = _table(spark)
     lin.append(spark.createDataFrame([(1,)], "n int"), batch_id="a0")
     assert lin.ops_report()["committed_batches"] == 1
+
+
+ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+LSN_DDL = "repo string, path string, v long, __max_lsn long, __deleted boolean"
+
+
+def _lsn_rows(n, lsn0, v=0, mod=7):
+    return [(f"r{i % mod}", f"p{i}", v + i, lsn0 + i, False) for i in range(n)]
+
+
+def _lww(*batches):
+    """Last-LSN-wins state (repo, path) -> (v, deleted) over the batches."""
+    best = {}
+    for rows in batches:
+        for repo, path, v, lsn, dead in rows:
+            if (repo, path) not in best or lsn > best[(repo, path)][0]:
+                best[(repo, path)] = (lsn, v, dead)
+    return {k: (v, dead) for k, (_lsn, v, dead) in best.items()}
+
+
+def _lsn_state(t):
+    return {(r.repo, r.path): (r.v, r["__deleted"]) for r in t.read().collect()}
+
+
+def _bucket_bytes(t, m):
+    import os
+
+    return {
+        b: sum(
+            os.path.getsize(os.path.join(t.root, "data", rel, f))
+            for rel in paths
+            for f in os.listdir(os.path.join(t.root, "data", rel))
+            if f.endswith(".parquet")
+        )
+        for b, paths in m["files"].items()
+    }
+
+
+def _parts(t, rel):
+    import os
+
+    return [f for f in os.listdir(os.path.join(t.root, "data", rel)) if f.endswith(".parquet")]
+
+
+def test_default_table_sizes_its_layout_then_splits_as_it_grows(spark):
+    """buckets=None: the first copy-on-write commit records the smallest
+    power of two that keeps the batch's size estimate per bucket at or
+    under the advisory size; maybe_compact raises the count once the
+    table's files on disk outgrow it. State stays last-LSN-wins
+    throughout, merges after the split prune against the new layout,
+    and rolling back past the split restores the old count."""
+    from dbt_customer360_spark.session import local_df
+
+    keys = ["repo", "path"]
+    old = spark.conf.get(ADVISORY)
+    try:
+        first = _lsn_rows(400, 0)
+        df = local_df(spark, first, LSN_DDL)
+        est = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
+        # est / 3 per bucket: 4 buckets hold it, 2 do not
+        spark.conf.set(ADVISORY, f"{est // 3}b")
+        t = LakeTable(spark, tempfile.mkdtemp(prefix="lakesized_"))
+        assert t._read_manifest()["buckets"] is None
+        t.merge_lsn(df, keys, batch_id="b0")
+        assert t.bucket_count() == 4
+        assert set(t._read_manifest()["files"]) <= {"0", "1", "2", "3"}
+        assert _lsn_state(t) == _lww(first)
+
+        # a tiny target: the table's files outgrow 4 buckets, and the
+        # split sizes the count from their bytes
+        pre_split = t.current_snapshot_id()
+        total = sum(_bucket_bytes(t, t._read_manifest()).values())
+        spark.conf.set(ADVISORY, f"{total // 12}b")  # total / 16 fits, / 8 does not
+        sid = t.maybe_compact()
+        assert sid is not None and t.bucket_count() == 16
+        m = t._read_manifest()
+        assert len(m["files"]) > 4
+        assert all(len(p) == 1 and len(_parts(t, p[0])) == 1 for p in m["files"].values())
+        assert _lsn_state(t) == _lww(first)
+
+        # pruned merge against the new layout: only touched buckets rewrite
+        batch = [("r1", "p1", 900, 1000, False), ("r2", "p2", 0, 1001, True)]
+        t.merge_lsn(local_df(spark, batch, LSN_DDL), keys, batch_id="b1")
+        after = t._read_manifest()["files"]
+        assert 1 <= sum(after[b] != m["files"].get(b) for b in after) <= 2
+        assert _lsn_state(t) == _lww(first, batch)
+        got = t.read_point({"repo": "r2", "path": "p2"}).collect()
+        assert [(r.v, r["__deleted"]) for r in got] == [(0, True)]
+        got = t.read_point({"repo": "r1", "path": "p1"}).collect()
+        assert [(r.v, r["__max_lsn"]) for r in got] == [(900, 1000)]
+
+        t.rollback_to(pre_split)
+        assert t.bucket_count() == 4
+        assert _lsn_state(t) == _lww(first)
+    finally:
+        spark.conf.set(ADVISORY, old)
+
+
+def test_whale_bucket_splits_the_layout_once(spark):
+    """Under bucket_cols=['repo'] every path of one repo hashes to one
+    bucket, which no split can shrink. maybe_compact sizes the count
+    from the table's bytes, so it splits once and then holds, with the
+    whale's bucket still over the target."""
+    from dbt_customer360_spark.session import local_df
+
+    old = spark.conf.get(ADVISORY)
+    try:
+        rows = [("whale", f"p{i}", i, i, False) for i in range(3000)]
+        rows += [(f"r{i % 3}", f"p{i}", i, 5000 + i, False) for i in range(150)]
+        t = LakeTable(spark, tempfile.mkdtemp(prefix="lakewhale_"), bucket_cols=["repo"])
+        t.merge_lsn(local_df(spark, rows, LSN_DDL), ["repo", "path"], batch_id="b0")
+        assert t.bucket_count() == 1  # 64 MB default target
+        total = sum(_bucket_bytes(t, t._read_manifest()).values())
+        spark.conf.set(ADVISORY, f"{total // 3}b")  # total / 4 fits, / 2 does not
+        assert t.maybe_compact() is not None and t.bucket_count() == 4
+        assert max(_bucket_bytes(t, t._read_manifest()).values()) > total // 3
+        assert t.maybe_compact() is None and t.bucket_count() == 4
+        assert _lsn_state(t) == _lww(rows)
+    finally:
+        spark.conf.set(ADVISORY, old)
+
+
+def test_append_only_table_is_never_split(spark):
+    """Lineage/quarantine-style tables carry no keys: however far past
+    the target they grow, maybe_compact keeps one bucket and records no
+    keys (a keyed manifest would make the next append refuse)."""
+    from dbt_customer360_spark.session import local_df
+
+    old = spark.conf.get(ADVISORY)
+    try:
+        spark.conf.set(ADVISORY, "64b")
+        t = LakeTable(spark, tempfile.mkdtemp(prefix="lakeappend_"))
+        for i in range(3):
+            t.append(local_df(spark, [(i, f"row{i}" * 50)], "n int, s string"))
+        assert t.maybe_compact() is None
+        assert t.maybe_compact(max_files_per_bucket=2) is not None
+        m = t._read_manifest()
+        assert list(m["files"]) == ["0"] and "keys" not in m
+        assert t.bucket_count() == 1
+        t.append(local_df(spark, [(9, "x")], "n int, s string"))
+        assert t.read().count() == 4
+    finally:
+        spark.conf.set(ADVISORY, old)
+
+
+def test_read_point_on_one_bucket_layout_skips_the_probe(spark, monkeypatch):
+    """One bucket: every key is in bucket 0 (pmod(h, 1) = 0), so a GET
+    builds no probe frame; live rows and tombstones read back exact."""
+    import dbt_customer360_spark.lake.table as table_mod
+    from dbt_customer360_spark.session import local_df
+
+    t = _table(spark, buckets=1)
+    rows = _lsn_rows(20, 0) + [("r9", "gone", 5, 50, True)]
+    t.merge_lsn(local_df(spark, rows, LSN_DDL), ["repo", "path"], batch_id="b0")
+
+    def no_probe(*a, **k):
+        raise AssertionError("one-bucket GET built a probe frame")
+
+    monkeypatch.setattr(table_mod, "local_df", no_probe)
+    got = t.read_point({"repo": "r3", "path": "p3"}).collect()
+    assert [(r.v, r["__deleted"]) for r in got] == [(3, False)]
+    got = t.read_point({"repo": "r9", "path": "gone"}).collect()
+    assert [(r.v, r["__deleted"]) for r in got] == [(5, True)]
+    assert t.read_point({"repo": "r3", "path": "nope"}).count() == 0
+
+
+def test_expire_snapshots_refuses_keep_last_below_one(spark):
+    t = _table(spark, buckets=1)
+    for i in range(2):
+        t.append(spark.createDataFrame([(i,)], "n int"), batch_id=f"a{i}")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="keep_last"):
+            t.expire_snapshots(keep_last=bad)
+    assert len(t._snapshot_ids()) == 2 and t.read().count() == 2

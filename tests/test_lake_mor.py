@@ -260,3 +260,30 @@ def test_read_point_requires_full_key_and_tombstones(spark):
     t.merge_lsn(d, KEYS, batch_id="b1")
     got = t.read_point({"repo": "r", "path": "p"}).collect()
     assert len(got) == 1 and bool(got[0]["__deleted"])
+
+
+def test_mor_first_write_sizes_a_default_table(spark):
+    """A merge-on-read epoch can be the first write into a table created
+    with buckets=None: it sizes the layout from the batch's estimate,
+    and its deltas, GETs and a later copy-on-write merge all use it."""
+    from dbt_customer360_spark.session import local_df
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    try:
+        rows = [(f"r{i % 5}", f"p{i}", i, i) for i in range(200)]
+        df = local_df(spark, rows, SCHEMA)
+        est = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
+        spark.conf.set(key, f"{est // 3}b")  # 4 buckets hold it, 2 do not
+        t = LakeTable(spark, tempfile.mkdtemp(prefix="mortest_"))
+        t.merge_lsn(df, KEYS, batch_id="e0", mor=True)
+        assert t.bucket_count() == 4
+        assert set(t._read_manifest()["delta_files"]) <= {"0", "1", "2", "3"}
+        t.merge_lsn(_df(spark, [("r1", "p1", 100, 500)]), KEYS, batch_id="e1")
+        want = {(r, p): (v, lsn) for r, p, v, lsn in rows}
+        want[("r1", "p1")] = (100, 500)
+        assert _state(t) == want
+        got = t.read_point({"repo": "r2", "path": "p7"}).collect()
+        assert [(r.v, r["__max_lsn"]) for r in got] == [(7, 7)]
+    finally:
+        spark.conf.set(key, old)
