@@ -193,8 +193,8 @@ the foreachBatch-style applier (single-pass max-LSN merge: ONE wide
 shuffle per micro-batch — the pre-aggregation hash partition on the
 merge keys doubles as the murmur3 bucket layout, so neither the
 max_by groupBy nor the bucketed copy-on-write write adds an exchange
-— tombstone deletes, idempotent epoch commits, lineage stats from
-the one column-pruned pre-merge aggregation, optional two-phase salting for
+— tombstone deletes, idempotent epoch commits, lineage stats observed
+on the merge's own write stage, optional two-phase salting for
 single-hot-key streams) — at
 local[8] and local[32] on identical input files. Fresh subprocess and
 fresh target table per size; event generation and an OS-cache warm of
@@ -234,7 +234,7 @@ microbenchmarks on a real 4N-executor cluster scale near 1.0 because
 every executor brings its own memory bus, disks and NIC; the engine
 itself has no serial stage — every job is hash-partitioned, the
 driver only manipulates manifest JSON (O(#files)), and lineage stats
-come from one column-pruned aggregation of the batch, not the table.
+are observed on the batch rows inside the merge's own write stage.
 Host noise: repeated identical runs on this time-shared box vary up
 to 2x minute-to-minute (all raw times listed above); best-of-N
 interleaved is used to damp it. Identical final_rows at both sizes

@@ -54,7 +54,7 @@ import tempfile
 import uuid
 from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_customer360_spark.session import local_df
@@ -767,11 +767,12 @@ class LakeTable:
         """Write df as one parquet dir per hash-bucket of the merge keys.
 
         One Spark write job partitioned by bucket id; each bucket's rows
-        land under ``__bucket=<i>/``. The repartition is by the layout
-        columns themselves (partition i == bucket i, see _bucket_expr),
-        so a caller whose plan is already hash-partitioned on them — the
-        copy-on-write rewrite repartitions BEFORE its reduce — passes
-        ``pre_partitioned=True`` and the write adds NO shuffle at all.
+        land under ``__bucket=<i>/``. The rows are clustered by
+        :meth:`_cluster` (partition i == bucket i, see _bucket_expr; a
+        one-bucket layout coalesces and shuffles nothing), so a caller
+        whose plan is already clustered — the copy-on-write rewrite
+        clusters BEFORE its reduce — passes ``pre_partitioned=True`` and
+        the write adds NO shuffle at all.
 
         Each bucket is written by exactly one task, as one file. The B
         bucket partitions are coalesced — whole partitions merged, never
@@ -793,7 +794,7 @@ class LakeTable:
         tasks = self._write_tasks(df, n_buckets)
         df = df.withColumn("__bucket", self._bucket_expr(keys, manifest))
         if not pre_partitioned:
-            df = df.repartition(n_buckets, *self._layout_cols(manifest, keys))
+            df = self._cluster(df, manifest, keys)
         if tasks < n_buckets:
             df = df.coalesce(tasks)
         df.write.partitionBy("__bucket").mode("overwrite").parquet(out_abs)
@@ -828,6 +829,7 @@ class LakeTable:
         batch_id: str | None,
         touched: set[str] | None = None,
         pre_partition: bool = True,
+        observe: tuple | None = None,
     ) -> int:
         """The copy-on-write rewrite behind :meth:`merge`,
         :meth:`merge_lsn` and :meth:`merge_additive`; each supplies only
@@ -862,7 +864,10 @@ class LakeTable:
         (which reads as one bucket until then) sizes its layout from
         the union's size estimate (:meth:`_size_layout`); the whole
         table was read as the target, so every new bucket counts as
-        touched."""
+        touched.
+
+        ``observe`` (see :meth:`merge_lsn`) rides the clustered union,
+        the first point where every row is in the write stage."""
         if self._bucket_count(m) == 1:
             touched = {"0"}
         elif touched is None:
@@ -877,6 +882,7 @@ class LakeTable:
             touched = {str(b) for b in range(m["buckets"])}
         if pre_partition:
             unioned = self._cluster(unioned, m, keys)
+        unioned, report = self._observed(unioned, observe, F.col("__is_target") == 0)
         new_files = self._write_bucket_files(reduce(unioned), keys, m, pre_partition)
         stray = set(new_files) - touched
         if stray:
@@ -889,7 +895,23 @@ class LakeTable:
         files.update(new_files)
         m["files"] = files
         m["keys"] = keys
-        return self._commit(m, batch_id)
+        sid = self._commit(m, batch_id)
+        report()
+        return sid
+
+    @staticmethod
+    def _observed(
+        df: DataFrame, observe: tuple | None, is_batch: F.Column
+    ) -> tuple[DataFrame, Callable[[], None]]:
+        """``df`` carrying ``observe``'s aggregates (see
+        :meth:`merge_lsn`), and the callback that hands their values to
+        its ``on_values``. Call it only after ``df`` was written:
+        ``Observation.get`` blocks until the observed plan has run."""
+        if observe is None:
+            return df, lambda: None
+        aggregates, on_values = observe
+        obs = Observation()
+        return df.observe(obs, *aggregates(is_batch)), lambda: on_values(obs.get)
 
     def merge(
         self,
@@ -951,6 +973,10 @@ class LakeTable:
         touched: list[int] | None = None,
         salt: int | None = None,
         mor: bool = False,
+        observe: tuple[
+            Callable[[F.Column], list[F.Column]], Callable[[dict], None]
+        ]
+        | None = None,
     ) -> int:
         """Last-writer-wins MERGE: one aggregation replaces batch-dedup,
         high-watermark filtering, and the upsert in a single pass.
@@ -994,7 +1020,27 @@ class LakeTable:
         ``salt`` is a CoW-path knob and is ignored under ``mor``: the
         MoR aggregation reduces only the batch; plain non-LSN writes
         (``merge``/``merge_additive``) refuse while deltas are pending.
+
+        ``observe=(aggregates, on_values)``: batch statistics taken by
+        the merge's own write job, with no job of their own (lineage
+        stats, ``CDCApplier.apply_batch``). ``aggregates(is_batch)``
+        returns named aggregate columns (``DataFrame.observe``) over the
+        rows of the write stage, which hold the target rows too: each
+        must count only the rows where the boolean column ``is_batch``
+        holds. They run after the clustering exchange, in the stage
+        that writes the files — a result stage, whose metric updates
+        Spark applies exactly once — and add no exchange. After the
+        commit ``on_values`` gets the dict of their values; a call that
+        writes nothing (``batch_id`` already committed) never calls it.
+        Refused with ``salt`` on copy-on-write: salted batch rows only
+        pass through a map stage, whose re-run tasks can count twice.
         """
+        salted = bool(salt and salt > 1)
+        if observe is not None and salted and not mor:
+            raise ValueError(
+                "merge_lsn: observe needs an unsalted merge (salted batch "
+                "rows only pass through a map stage)"
+            )
         m = self._read_manifest()
         if batch_id is not None and batch_id in m["batch_ids"]:
             return m["snapshot_id"]
@@ -1012,7 +1058,9 @@ class LakeTable:
                     f"{prev_lsn!r}, got {lsn_col!r}; compact() before switching"
                 )
             self._size_layout(m, batch)
-            batch = self._cluster(batch, m, keys)
+            batch, report = self._observed(
+                self._cluster(batch, m, keys), observe, F.lit(True)
+            )
             # within-batch dedup only — the target is never read; stale
             # replays below a key's stored LSN are suppressed at read
             # time by the same comparator
@@ -1028,10 +1076,11 @@ class LakeTable:
             m["delta_files"] = deltas
             m["lsn_col"] = lsn_col
             m["keys"] = keys
-            return self._commit(m, batch_id)
+            sid = self._commit(m, batch_id)
+            report()
+            return sid
 
         order = F.struct(F.col(lsn_col), F.col("__is_target"))
-        salted = bool(salt and salt > 1)
 
         def reduce(unioned: DataFrame) -> DataFrame:
             if salted:
@@ -1059,6 +1108,7 @@ class LakeTable:
             batch_id,
             touched=None if touched is None else {str(b) for b in touched},
             pre_partition=not salted,
+            observe=observe,
         )
 
     def merge_additive(

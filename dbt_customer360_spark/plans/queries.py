@@ -1592,7 +1592,8 @@ def cdc_expectations_state(spark, sf):
     value < 20 dead-letter instead of merging, so the final table is
     the LWW closed form over the SURVIVING feed — which is exactly
     what the oracle's WHERE clause states. Violations are counted in
-    the epoch's one pre-merge aggregation."""
+    the epoch's pre-merge aggregation, which validation requires (an
+    unvalidated epoch observes its stats on the merge's write)."""
     from dbt_customer360_spark.streaming.apply import CDCApplier, replay_batch
 
     e = _t(spark, sf, "events")

@@ -47,6 +47,20 @@ LINEAGE_SCHEMA = pa.schema(
 )
 
 
+def _epoch_stats(is_batch: F.Column) -> list[F.Column]:
+    """An epoch's lineage stats as ``merge_lsn(observe=...)``
+    aggregates over the merge's write stage: the batch rows' count,
+    deletes and LSN range — the pre-merge aggregation's epoch row
+    (``n``, ``d``, ``lo``, ``hi``)."""
+    lsn = F.when(is_batch, F.col("__max_lsn"))
+    return [
+        F.count_if(is_batch).alias("n"),
+        F.count_if(is_batch & F.col("__deleted")).alias("d"),
+        F.min(lsn).alias("lo"),
+        F.max(lsn).alias("hi"),
+    ]
+
+
 class CDCApplier:
     def __init__(
         self,
@@ -71,14 +85,18 @@ class CDCApplier:
         """``assume_dense_batches``: declare that every micro-batch
         touches (essentially) every hash bucket — true for high-volume
         streams whose batch key count >> bucket count. The merge then
-        reads every target bucket instead of the touched set the
-        pre-merge aggregation found (merge_lsn's stray-bucket guard
-        still holds: the declared set is the full bucket range); the
-        epoch's job count is the same either way.
+        reads every target bucket instead of the touched set (merge_lsn's
+        stray-bucket guard still holds: the declared set is the full
+        bucket range). On the observed-stats path (see ``apply_batch``)
+        that saves the job that finds the touched buckets of a
+        multi-bucket copy-on-write table; with the pre-merge aggregation
+        it changes no job count.
 
         ``hot_key_salt``: explicit two-phase salted merge (see
         LakeTable.merge_lsn) for streams where one (repo, path)
-        dominates whole micro-batches.
+        dominates whole micro-batches. Its epochs take their stats from
+        the pre-merge aggregation: the salted merge's batch rows only
+        pass through a map stage, which cannot be observed exactly.
 
         ``maintenance_every``: run auto-maintenance after every N
         applied (non-skipped) batches — cost-gated compaction
@@ -98,9 +116,10 @@ class CDCApplier:
         micro-batch; 'partition' additionally writes one row per source
         partition (``partition_col``, the feed's Kafka-partition analog)
         carrying that partition's offset range / rows / deletes — the
-        north_star's per-partition lineage. Both grains come from the
-        same pre-merge aggregation (see ``apply_batch``), so partition
-        grain adds no job; a partition-grain batch without
+        north_star's per-partition lineage. Epoch grain observes its one
+        row on the merge's own write; partition grain needs a grouping,
+        so its rows come from the pre-merge aggregation (two more jobs,
+        see ``apply_batch``). A partition-grain batch without
         ``partition_col`` raises before any write.
 
         ``quarantine_root``: dead-letter table for malformed events.
@@ -109,10 +128,10 @@ class CDCApplier:
         instead of poisoning or failing the batch; valid rows proceed.
         Exactly-once: the quarantine append carries its own idempotent
         batch id, so a replayed epoch re-quarantines nothing. The
-        violation counts come from the pre-merge aggregation every epoch
-        runs; only an epoch that quarantines rows pays one more job (the
-        dead-letter append), and a clean batch adds NO filter to the
-        merge plan.
+        violation counts come from the pre-merge aggregation, which
+        every epoch then runs; only an epoch that quarantines rows pays
+        one more job (the dead-letter append), and a clean batch adds NO
+        filter to the merge plan.
 
         ``expectations``: user data-quality rules evaluated per batch —
         ``(name, sql_predicate, action)`` with action ``'quarantine'``
@@ -125,7 +144,7 @@ class CDCApplier:
         SQL CHECK's pass-on-NULL). Rules are checked in order after the
         built-in malformed-event rules, and per-rule violation counts
         ride the lineage stats (``violations``) from the pre-merge
-        aggregation.
+        aggregation, which every epoch then runs.
 
         ``buckets``: the repos table's bucket count at creation. None
         (default) sizes it from the data (LakeTable ``buckets``): the
@@ -219,28 +238,38 @@ class CDCApplier:
     def apply_batch(self, batch: DataFrame, epoch_id: int | str) -> dict:
         """Apply one micro-batch exactly-once; returns lineage stats.
 
-        Four Spark jobs per epoch on every path (batch replay or
-        foreachBatch, either lineage grain, dense or pruned, CoW or
-        MoR) — under AQE each shuffle's map side runs as its own job,
-        so each of the two steps below is a map job plus a result job;
-        three on a one-bucket repos table, whose merge needs no shuffle:
-          1. ONE aggregation of the batch, before any write, column-
-             pruned to the merge keys, (lsn, op), ``partition_col`` and
-             the expectation inputs — never the content payload. Its
-             grouping sets return, together, the per-reason violation
-             counts, the touched hash-buckets of the valid rows, and
-             their epoch and per-partition (rows, deletes, LSN range):
-             O(buckets + partitions x reasons) rows on the driver;
-          2. the LSN merge itself (union touched target + batch,
-             ``max_by`` reduce, bucketed write) — within-batch dedup,
-             stale-replay rejection (high-watermark), and the upsert are
-             all one comparator (hot-key skew: ``salt`` in
-             LakeTable.merge_lsn).
-        The lineage rows are written by pyarrow on the driver — no job.
-        A fail-expectation raises after step 1, before any write; an
-        epoch that quarantines rows adds one job for the dead-letter
-        append, and the rollup refresh and maintenance add theirs when
-        they are due.
+        Where the lineage stats come from decides the job count (under
+        AQE each shuffle's map side runs as its own job, so a shuffle is
+        a map job plus a result job), batch replay or foreachBatch alike:
+          * observed (default: epoch grain, no ``quarantine_root``, no
+            ``expectations``, no ``hot_key_salt``): the merge's own
+            write stage observes the batch rows' count, deletes and LSN
+            range (``merge_lsn(observe=...)``), so the merge is the
+            epoch's only step — 1 job on a one-bucket table (its merge
+            coalesces instead of shuffling), 2 on a multi-bucket one
+            that is dense or MoR, 4 when a pruned copy-on-write merge
+            first finds its touched buckets (one ``distinct`` job pair);
+          * aggregated (partition grain, validation or salting — what an
+            observation cannot give exactly): ONE aggregation of the
+            batch runs first, before any write, column-pruned to the
+            merge keys, (lsn, op), ``partition_col`` and the expectation
+            inputs — never the content payload. Its grouping sets
+            return, together, the per-reason violation counts, the
+            touched hash-buckets of the valid rows, and their epoch and
+            per-partition (rows, deletes, LSN range): O(buckets +
+            partitions x reasons) rows on the driver. 2 jobs, then the
+            merge's 1 (one bucket) or 2.
+        The merge itself (union touched target + batch, ``max_by``
+        reduce, bucketed write) does within-batch dedup, stale-replay
+        rejection (high-watermark), and the upsert with one comparator
+        (hot-key skew: ``salt`` in LakeTable.merge_lsn). The lineage
+        rows are written by pyarrow on the driver after the merge's
+        commit — no job. A fail-expectation raises after the
+        aggregation, before any write; an epoch that quarantines rows
+        adds one job for the dead-letter append, and the rollup refresh
+        and maintenance add theirs when they are due. A merge that finds
+        the epoch already committed (a concurrent writer won the race)
+        observes nothing, and the epoch returns as skipped.
 
         Deletes become TOMBSTONES (not physical removals): the row keeps
         carrying its __max_lsn watermark so a stale replayed update with
@@ -258,6 +287,106 @@ class CDCApplier:
                 f"epoch {epoch_id}: lineage_grain='partition' needs the batch "
                 f"column {self.partition_col!r}; nothing written"
             )
+        if partition_rows or self.quarantine is not None or self.expectations or self.hot_key_salt:
+            batch, touched, per_part, violations = self._aggregate_batch(
+                batch, epoch_id, batch_id, partition_rows
+            )
+            observe = None
+        else:
+            touched = (
+                list(range(self.table.bucket_count())) if self.assume_dense_batches else None
+            )
+            per_part, violations = [], {}
+            observe = (_epoch_stats, per_part.append)
+        upserts = (
+            batch.withColumn("__deleted", F.col("op") == "delete")
+            .withColumn("__max_lsn", F.col("lsn"))
+            .drop("op", "lsn")
+        )
+        sid = self.table.merge_lsn(
+            upserts,
+            KEYS,
+            lsn_col="__max_lsn",
+            batch_id=batch_id,
+            touched=touched,
+            salt=self.hot_key_salt,
+            mor=self.write_mode == "mor",
+            observe=observe,
+        )
+        if observe is not None and not per_part:
+            # another writer committed this epoch after the check above:
+            # merge_lsn wrote nothing, so nothing was observed
+            return {"epoch": str(epoch_id), "skipped": True, "rows_applied": 0}
+        los = [r["lo"] for r in per_part if r["lo"] is not None]
+        his = [r["hi"] for r in per_part if r["hi"] is not None]
+        lineage = {
+            "epoch": str(epoch_id),
+            "skipped": False,
+            "rows_applied": sum(r["n"] for r in per_part),
+            "quarantined": sum(violations.values()),
+            "violations": violations,
+            "deletes": sum(r["d"] for r in per_part),
+            "min_lsn": min(los, default=None),
+            "max_lsn": max(his, default=None),
+            "snapshot_id": sid,
+            "committed_at": time.time(),
+        }
+        if self.lineage is not None:
+            rows = [
+                (
+                    "epoch",  # row_kind: the epoch-total row
+                    None,
+                    lineage["rows_applied"],
+                    lineage["deletes"],
+                    lineage["min_lsn"],
+                    lineage["max_lsn"],
+                )
+            ]
+            if partition_rows:
+                # row_kind distinguishes these from the epoch-total row,
+                # so a genuinely-NULL partition value stays NULL; a
+                # partition whose lsn values are all NULL keeps NULL lo/hi
+                rows += [
+                    (
+                        "partition",
+                        str(r["__part"]) if r["__part"] is not None else None,
+                        r["n"],
+                        r["d"],
+                        r["lo"],
+                        r["hi"],
+                    )
+                    for r in per_part
+                ]
+            # the rows already live on the driver, so pyarrow writes
+            # them in-process: no Spark job per epoch
+            self.lineage.append(
+                pa.Table.from_pylist(
+                    [dict(zip(LINEAGE_SCHEMA.names, (str(epoch_id), *r, sid))) for r in rows],
+                    schema=LINEAGE_SCHEMA,
+                ),
+                batch_id=f"lineage-{batch_id}",
+            )
+        self._applied_since_maintenance += 1
+        self._applied_since_rollup += 1
+        if self.rollup is not None and self._applied_since_rollup >= self.rollup_every:
+            self.rollup.refresh()
+            self._applied_since_rollup = 0
+        if (
+            self.maintenance_every
+            and self._applied_since_maintenance >= self.maintenance_every
+        ):
+            self.maybe_maintain()
+        return lineage
+
+    def _aggregate_batch(
+        self, batch: DataFrame, epoch_id: int | str, batch_id: str, partition_rows: bool
+    ) -> tuple[DataFrame, list[int], list, dict[str, int]]:
+        """The pre-merge aggregation (``apply_batch`` step 1): validates
+        the batch, quarantines its invalid rows, and returns the valid
+        rows, their touched buckets, their per-partition stats rows
+        (``n``, ``d``, ``lo``, ``hi``; one row at epoch grain) and the
+        per-reason violation counts. Raises before any write when a
+        fail-expectation is violated."""
         # ONE reason chain, first match wins: fail-rules outrank
         # drop-rules (a row violating both must abort, not slip into
         # the dead-letter table), built-ins rank between. NULL = valid.
@@ -332,80 +461,7 @@ class CDCApplier:
             touched = list(range(self.table.bucket_count()))
         else:
             touched = [r["__bucket"] for r in groups if r["__bucket"] is not None]
-        upserts = (
-            batch.withColumn("__deleted", F.col("op") == "delete")
-            .withColumn("__max_lsn", F.col("lsn"))
-            .drop("op", "lsn")
-        )
-        sid = self.table.merge_lsn(
-            upserts,
-            KEYS,
-            lsn_col="__max_lsn",
-            batch_id=batch_id,
-            touched=touched,
-            salt=self.hot_key_salt,
-            mor=self.write_mode == "mor",
-        )
-        los = [r["lo"] for r in per_part if r["lo"] is not None]
-        his = [r["hi"] for r in per_part if r["hi"] is not None]
-        lineage = {
-            "epoch": str(epoch_id),
-            "skipped": False,
-            "rows_applied": sum(r["n"] for r in per_part),
-            "quarantined": n_quarantined,
-            "violations": violations,
-            "deletes": sum(r["d"] for r in per_part),
-            "min_lsn": min(los, default=None),
-            "max_lsn": max(his, default=None),
-            "snapshot_id": sid,
-            "committed_at": time.time(),
-        }
-        if self.lineage is not None:
-            rows = [
-                (
-                    "epoch",  # row_kind: the epoch-total row
-                    None,
-                    lineage["rows_applied"],
-                    lineage["deletes"],
-                    lineage["min_lsn"],
-                    lineage["max_lsn"],
-                )
-            ]
-            if partition_rows:
-                # row_kind distinguishes these from the epoch-total row,
-                # so a genuinely-NULL partition value stays NULL; a
-                # partition whose lsn values are all NULL keeps NULL lo/hi
-                rows += [
-                    (
-                        "partition",
-                        str(r["__part"]) if r["__part"] is not None else None,
-                        r["n"],
-                        r["d"],
-                        r["lo"],
-                        r["hi"],
-                    )
-                    for r in per_part
-                ]
-            # the rows already live on the driver, so pyarrow writes
-            # them in-process: no Spark job per epoch
-            self.lineage.append(
-                pa.Table.from_pylist(
-                    [dict(zip(LINEAGE_SCHEMA.names, (str(epoch_id), *r, sid))) for r in rows],
-                    schema=LINEAGE_SCHEMA,
-                ),
-                batch_id=f"lineage-{batch_id}",
-            )
-        self._applied_since_maintenance += 1
-        self._applied_since_rollup += 1
-        if self.rollup is not None and self._applied_since_rollup >= self.rollup_every:
-            self.rollup.refresh()
-            self._applied_since_rollup = 0
-        if (
-            self.maintenance_every
-            and self._applied_since_maintenance >= self.maintenance_every
-        ):
-            self.maybe_maintain()
-        return lineage
+        return batch, touched, per_part, violations
 
     def quarantined(self) -> DataFrame:
         """Dead-letter rows (original event columns + __reason + epoch)."""

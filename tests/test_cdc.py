@@ -2,11 +2,14 @@
 
 import hashlib
 import tempfile
+import threading
 
 import pytest
 
 from pyspark.sql import functions as F
 
+from dbt_customer360_spark.lake.table import LakeTable
+from dbt_customer360_spark.session import local_df
 from dbt_customer360_spark.sources.cdc import generate_change_events
 from dbt_customer360_spark.streaming.apply import CDCApplier, replay_batch
 
@@ -108,8 +111,8 @@ def test_streaming_foreachbatch_with_checkpoint(spark, tmp_path):
     root = str(tmp_path / "lake")
     ap = CDCApplier(spark, f"{root}/repos", buckets=4)
     q = ap.stream(src, str(tmp_path / "ckpt"), schema=schema, max_files_per_trigger=2)
-    # MUST terminate: availableNow + stats from the pre-merge aggregation
-    # (Observation.get inside foreachBatch hung the query, round 3)
+    # MUST terminate: availableNow, with the epoch stats observed on
+    # the merge's own write inside foreachBatch
     assert q.awaitTermination(300) is True
     oracle = _python_oracle(events.collect())
     assert _sha(_engine_state(ap)) == _sha(oracle)
@@ -119,6 +122,126 @@ def test_streaming_foreachbatch_with_checkpoint(spark, tmp_path):
     assert q2.awaitTermination(300) is True
     assert ap.table.current_snapshot_id() == snap_before
     assert _sha(_engine_state(ap)) == _sha(oracle)
+
+
+def _within(seconds, fn, *args, **kwargs):
+    """``fn(*args, **kwargs)`` on a daemon thread, failing the test after
+    ``seconds`` instead of hanging it: an ``Observation`` whose plan
+    never ran blocks ``Observation.get`` forever."""
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn(*args, **kwargs)
+        except BaseException as e:  # re-raised on the test's thread
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"call still blocked after {seconds} s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+EV_DDL = (
+    "lsn long, op string, repo string, path string, content string, source_connector string"
+)
+STATS = ("epoch", "skipped", "rows_applied", "deletes", "min_lsn", "max_lsn", "snapshot_id")
+
+
+def _contents(ap):
+    return {(r.repo, r.path): r.content for r in ap.state().collect()}
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [
+        {},
+        {"buckets": 4},
+        {"buckets": 4, "assume_dense_batches": True},
+        {"buckets": 4, "write_mode": "mor"},
+    ],
+    ids=["one-bucket", "pruned", "dense", "mor"],
+)
+def test_observed_stats_match_the_grouped_aggregation(spark, tmp_path, layout):
+    """A default applier takes its lineage stats from an observation on
+    the merge's write; a partition-grain applier from the pre-merge
+    aggregation. Same batches, same epoch lineage rows and stats."""
+    batches = [
+        [],  # empty batch into an empty table
+        # within-batch duplicate keys, and a NULL-lsn row
+        [(10 + i, "insert", f"r{i % 3}", f"p{i % 5}", f"c{i}", "k0") for i in range(12)]
+        + [(None, "insert", "r9", "p9", "nolsn", "k1")],
+        # updates and deletes
+        [
+            (100 + i, "update" if i % 3 else "delete", f"r{i % 3}", f"p{i % 5}", "u", f"k{i % 2}")
+            for i in range(9)
+        ],
+        # stale replay below the stored LSN
+        [(11, "update", "r1", "p1", "stale", "k0"), (12, "delete", "r2", "p2", None, "k1")],
+        [],  # empty batch into a populated table
+    ]
+    runs = {}
+    for grain in ("epoch", "partition"):
+        root = tmp_path / grain
+        ap = CDCApplier(
+            spark,
+            str(root / "repos"),
+            lineage_root=str(root / "lineage"),
+            lineage_grain=grain,
+            **layout,
+        )
+        stats = [
+            _within(120, ap.apply_batch, local_df(spark, rows, EV_DDL), e)
+            for e, rows in enumerate(batches)
+        ]
+        lineage = sorted(
+            (tuple(r) for r in ap.lineage.read().collect() if r.row_kind == "epoch"), key=str
+        )
+        runs[grain] = ([{k: s[k] for k in STATS} for s in stats], lineage, _contents(ap))
+    assert runs["epoch"] == runs["partition"]
+    stats, lineage, state = runs["epoch"]
+    assert [s["rows_applied"] for s in stats] == [0, 13, 9, 2, 0]
+    assert [s["deletes"] for s in stats] == [0, 0, 3, 1, 0]
+    assert [(s["min_lsn"], s["max_lsn"]) for s in stats] == [
+        (None, None), (10, 21), (100, 108), (11, 12), (None, None)
+    ]
+    assert len(lineage) == len(batches)
+    assert state[("r1", "p1")] == "u" and ("r0", "p0") not in state
+
+
+def test_observed_merge_without_a_write_never_calls_back(spark, tmp_path):
+    """merge_lsn(observe=...) with an already-committed batch id returns
+    the current snapshot and never calls on_values (an observation
+    whose plan never ran cannot be read); apply_batch reports such a
+    lost race as skipped and writes no lineage."""
+    t = LakeTable(spark, str(tmp_path / "t"))
+    ddl = "repo string, path string, v long, __max_lsn long"
+    t.merge_lsn(local_df(spark, [("r", "p", 1, 1)], ddl), ["repo", "path"], batch_id="b0")
+    got = []
+    observe = (lambda is_batch: [F.count_if(is_batch).alias("n")], got.append)
+    sid = _within(
+        120, t.merge_lsn, local_df(spark, [("r", "q", 2, 2)], ddl), ["repo", "path"],
+        batch_id="b0", observe=observe,
+    )
+    assert sid == t.current_snapshot_id() and got == []
+    _within(120, t.merge_lsn, local_df(spark, [("r", "q", 2, 2)], ddl), ["repo", "path"],
+            batch_id="b1", observe=observe)
+    assert got == [{"n": 1}]
+    with pytest.raises(ValueError, match="unsalted"):
+        t.merge_lsn(local_df(spark, [("r", "q", 2, 2)], ddl), ["repo", "path"],
+                    batch_id="b2", salt=4, observe=observe)
+
+    ap = CDCApplier(spark, str(tmp_path / "repos"), lineage_root=str(tmp_path / "lineage"))
+    batch = local_df(spark, [(1, "insert", "r", "p", "c", "k0")], EV_DDL)
+    assert _within(120, ap.apply_batch, batch, 0)["rows_applied"] == 1
+    # the epoch commits between apply_batch's own check and its merge
+    ap.table.committed_batch_ids = lambda: set()
+    skipped = {"epoch": "0", "skipped": True, "rows_applied": 0}
+    assert _within(120, ap.apply_batch, batch, 0) == skipped
+    assert ap.lineage.read().count() == 1
 
 
 def test_schema_evolution_midstream(spark):

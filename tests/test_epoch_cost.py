@@ -128,11 +128,13 @@ def test_salted_and_mor_writes_keep_one_file_per_bucket(spark, tmp_path, mode):
 @pytest.mark.parametrize("dense", [False, True], ids=["pruned", "dense"])
 @pytest.mark.parametrize("grain", ["epoch", "partition"])
 def test_pruned_epoch_launches_at_most_four_jobs(spark, tmp_path, grain, dense, quarantine):
-    """One pre-merge aggregation (validation, touched buckets and lineage
-    stats together) plus the merge, each a map job and a result job under
-    AQE, at either lineage grain, dense or pruned; the lineage rows are
-    written on the driver and add none. Quarantining a row adds the one
-    dead-letter append."""
+    """The merge is a map job and a result job under AQE. Validation or
+    partition grain adds the pre-merge aggregation (validation, touched
+    buckets and lineage stats together; two more); a clean epoch-grain
+    epoch observes its stats on the merge's write instead, and only a
+    pruned one pays for finding its touched buckets. The lineage rows
+    are written on the driver and add none. Quarantining a row adds the
+    one dead-letter append."""
     applier = CDCApplier(
         spark,
         str(tmp_path / "repos"),
@@ -156,7 +158,11 @@ def test_pruned_epoch_launches_at_most_four_jobs(spark, tmp_path, grain, dense, 
     assert out["rows_applied"] == 3
     assert out["quarantined"] == int(quarantine)
     assert out["violations"] == ({"null_lsn": 1} if quarantine else {})
-    assert len(c["jobs"]) <= 4 + quarantine, c["jobs"]
+    if grain == "epoch" and dense and not quarantine:
+        # stats observed on the merge's write: its map and result jobs
+        assert len(c["jobs"]) == 2, c["jobs"]
+    else:
+        assert len(c["jobs"]) <= 4 + quarantine, c["jobs"]
     sid0 = applier.table.current_snapshot_id() - 1
     want = {
         ("0", "epoch", None, 300, 0, 0, 299, sid0),
@@ -216,8 +222,8 @@ def test_arrow_append_conforms_to_the_table_schema(spark, tmp_path):
 def test_default_applier_writes_one_repos_file_per_epoch(spark, tmp_path):
     """A default-sized applier on a small table lays the repos table out
     as one bucket, so an epoch rewrites one data file in one task, and
-    the merge needs no shuffle: three jobs, the pre-merge aggregation's
-    two and the write."""
+    the merge needs no shuffle: the write is the epoch's one job, and
+    the lineage stats are observed on it."""
     applier = CDCApplier(
         spark, str(tmp_path / "repos"), lineage_root=str(tmp_path / "lineage")
     )
@@ -228,12 +234,29 @@ def test_default_applier_writes_one_repos_file_per_epoch(spark, tmp_path):
     assert t.bucket_count() == 1
     epoch = [(1000 + i, "update", f"r{i % 5}", f"p{i}", "new") for i in range(3)]
     with counted(spark, "default-epoch") as c:
-        applier.apply_batch(local_df(spark, epoch, ev_ddl), 1)
+        out = applier.apply_batch(local_df(spark, epoch, ev_ddl), 1)
+    assert (out["rows_applied"], out["min_lsn"], out["max_lsn"]) == (3, 1000, 1002)
     files = t._read_manifest()["files"]
     assert list(files) == ["0"] and len(files["0"]) == 1
     assert _parquet_files(t, files["0"][0]) == 1
     assert c["write_tasks"] == 1
-    assert len(c["jobs"]) == 3, c["jobs"]
+    assert len(c["jobs"]) == 1, c["jobs"]
     live = {(r.path, r.content) for r in applier.state().collect()}
     assert len(live) == 300
     assert {content for path, content in live if path in ("p0", "p1", "p2")} == {"new"}
+
+
+def test_one_bucket_compaction_runs_one_job(spark, tmp_path):
+    """Compacting a one-bucket table coalesces its rows into the one
+    write task instead of hash-partitioning them into one partition:
+    a single job, and every row reads back."""
+    t = LakeTable(spark, str(tmp_path / "lineage"), buckets=1)
+    rows = [(str(i), "epoch", None, i, 0, i, i, i) for i in range(9)]
+    for r in rows:
+        t.append(_arrow_lineage([r]), batch_id=f"a{r[0]}")
+    assert len(t._read_manifest()["files"]["0"]) == 9
+    with counted(spark, "one-bucket-compact") as c:
+        t.compact()
+    assert len(c["jobs"]) == 1, c["jobs"]
+    assert len(t._read_manifest()["files"]["0"]) == 1
+    assert sorted(map(tuple, t.read().collect()), key=str) == sorted(rows, key=str)

@@ -85,12 +85,15 @@ def test_spread_for_compute_noop_at_scale(spark):
     assert spread.rdd.getNumPartitions() >= par
 
 
-@pytest.mark.parametrize("op", ["merge_lsn", "merge_delete", "merge_additive"])
+@pytest.mark.parametrize(
+    "op", ["merge_lsn", "merge_lsn_observed", "merge_delete", "merge_additive"]
+)
 def test_merge_is_single_shuffle(spark, tmp_path, monkeypatch, op):
     """One-shuffle merge on the murmur3 layout, for every copy-on-write
     merge: the merge plan contains exactly ONE Exchange (the pre-reduce
     repartition on the merge keys); the reduce's groupBy reuses it and
-    the bucketed write is pre-partitioned, so neither adds a shuffle."""
+    the bucketed write is pre-partitioned, so neither adds a shuffle.
+    Observed batch stats (``merge_lsn(observe=...)``) add none either."""
     from dbt_customer360_spark.lake.table import LakeTable
 
     t = LakeTable(spark, str(tmp_path / "t"), buckets=4)
@@ -101,8 +104,14 @@ def test_merge_is_single_shuffle(spark, tmp_path, monkeypatch, op):
         "id as __max_lsn",
         "id % 5 = 0 as __deleted",
     )
+    observed = []
     if op == "merge_lsn":
         write = lambda df, bid: t.merge_lsn(df, keys, batch_id=bid)
+    elif op == "merge_lsn_observed":
+        count = lambda is_batch: [F.count_if(is_batch).alias("n")]
+        write = lambda df, bid: t.merge_lsn(
+            df, keys, batch_id=bid, observe=(count, observed.append)
+        )
     elif op == "merge_delete":
         write = lambda df, bid: t.merge(df, keys, batch_id=bid, delete_col="__deleted")
     else:
@@ -127,3 +136,7 @@ def test_merge_is_single_shuffle(spark, tmp_path, monkeypatch, op):
     assert captured["pp"] is True
     plan = captured["df"]._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
+    if op == "merge_lsn_observed":
+        # above the exchange: in the write stage, not a map stage
+        assert 0 <= plan.find("CollectMetrics") < plan.index("Exchange"), plan
+        assert observed == [{"n": 200}, {"n": 200}]
