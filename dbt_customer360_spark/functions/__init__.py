@@ -6,12 +6,7 @@ from dbt_customer360_spark.functions.normalize import (  # noqa: F401
     STREET_SUFFIX_MAP,
     empty_to_null,
     levenshtein_similarity,
-    name_suffixes,
-    name_titles,
     null_sentinel,
-    org_suffixes,
     safe_divide,
-    split_address_lines,
-    street_suffixes,
     surrogate_key,
 )

@@ -1,15 +1,15 @@
 """Arrow/pandas fast paths for the macro normalizers.
 
-The expression builders in :mod:`normalize` reproduce the reference's
-giant CASE chains with native columns — faithful, but a 215-branch
-CASE blows Janino's 64 KB codegen limit and falls back to interpreted
-eval (measured 116 s/1M rows for street_suffixes). These pandas-UDF
-twins implement the SAME first-match-wins semantics with precompiled
-token lookups (0.9 s/1M rows, 135x) and are the default execution
-path for hot pipelines; equivalence against the expression builders
+The ``*_sql`` builders in :mod:`normalize` transcribe the reference's
+giant CASE chains — faithful, but a 215-branch CASE evaluated in Spark
+blows Janino's 64 KB codegen limit and falls back to interpreted eval
+(measured 116 s/1M rows for street_suffixes). These pandas-UDF twins
+implement the SAME first-match-wins semantics with precompiled token
+lookups (0.9 s/1M rows, 135x) and are the execution path of the
+pipeline; equivalence against the SQL CASE chains, evaluated in Spark,
 is fuzz-tested (tests/test_fast_normalize.py) AND enforced by the
-driver gate (queries use these, oracles are SQL generated from the
-CASE semantics).
+driver gate (queries use these, oracles render the same SQL in
+DuckDB).
 
 Design: all are Series -> Series pandas UDFs (Arrow batches, zero
 per-row Python at the DataFrame layer; inside the batch, per-row work
@@ -52,7 +52,7 @@ _UNIT_ITEMS = list(SECONDARY_UNITS.items())
 
 
 def _title_split(name: str | None) -> tuple[str | None, str | None]:
-    """Mirror normalize.name_titles: first matching title (list order)
+    """Mirror normalize.name_titles_sql: first matching title (list order)
     where name starts with 'T ' / 'T. ' followed by >= 2 more words;
     strip via global replace of the matched prefix token."""
     if name is None:
@@ -88,7 +88,7 @@ def name_titles_fast(col) -> Column:
 
 
 def _name_suffix_split(name: str | None) -> tuple[str | None, str | None]:
-    """Mirror normalize.name_suffixes exactly: strip and tag are two
+    """Mirror normalize.name_suffixes_sql exactly: strip and tag are two
     INDEPENDENT first-match-wins chains over the suffix list (they can
     pick different suffixes — reference quirk preserved)."""
     if name is None:
@@ -183,7 +183,7 @@ def org_suffixes_fast(col) -> Column:
 
 
 def _street_expand(addr: str | None) -> str | None:
-    """Mirror normalize.street_suffixes: the LIKE patterns '% % al' /
+    """Mirror normalize.street_suffixes_sql: the LIKE patterns '% % al' /
     '% % al %' / '% % al,%' all put a literal space immediately before
     the abbr, so the abbr must be a whole space-delimited token (or a
     token's pre-comma head) with at least one more space earlier in
@@ -230,8 +230,8 @@ def street_suffixes_fast(col) -> Column:
 
 
 def _split_address(addr: str | None) -> tuple[str | None, str | None]:
-    """Mirror normalize.split_address_lines: comma split first, else the
-    first secondary-unit designator (dict order, dotted before plain
+    """Mirror normalize.split_address_lines_sql: comma split first, else the
+    first secondary-unit designator (dict order, plain before dotted
     within an entry), case-insensitive match, split on the as-written
     token (missing-case split falls through like split_part does)."""
     if addr is None:

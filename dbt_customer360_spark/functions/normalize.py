@@ -1,11 +1,17 @@
 """Scalar normalizer library.
 
-The reference implements these as Jinja macros that expand into giant
-SQL CASE chains at compile time (see /root/reference/macros/*.sql).
-Here each normalizer is a *Column-expression builder*: a Python
-function that assembles the same first-match-wins CASE semantics out
-of native ``pyspark.sql.functions`` — fully JVM-side, whole-stage
-codegen'd, zero per-row Python.
+The reference implements the five macro normalizers (name titles,
+name suffixes, org suffixes, street suffixes, address-line split) as
+Jinja macros that expand into giant SQL CASE chains at compile time
+(the reference's macros/*.sql). This module holds their word lists
+and, for each, ONE reference implementation: a ``*_sql`` builder that
+renders the same first-match-wins CASE chain as ANSI SQL over a
+column name. DuckDB oracles render it (so an oracle is generated from
+the SAME word lists and can never drift), and tests evaluate it in
+Spark with ``F.expr`` to check the Arrow fast paths
+(:mod:`functions.fast`), which are what the pipeline runs. The small
+scalar helpers (``empty_to_null``, ``surrogate_key``, ...) are native
+Column builders.
 
 Faithfulness notes (quirks preserved deliberately):
 
@@ -41,10 +47,6 @@ Deliberate semantic FIXES (documented deviations, round-2 advice):
   so the tag actually reports the stripped suffix; the *strip* itself
   is bug-for-bug identical. Set the tag aside if byte-parity with the
   reference's always-NULL column is required.
-
-Every builder also has a ``*_sql`` twin that renders the equivalent
-ANSI-SQL CASE chain (used to generate DuckDB oracle SQL from the SAME
-word lists, so the oracle can never drift from the Spark side).
 """
 
 from __future__ import annotations
@@ -125,10 +127,6 @@ def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def _like(c: Column, pattern: str) -> Column:
-    return c.like(pattern.replace("\\", "\\\\"))
-
-
 def _sql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
@@ -187,30 +185,13 @@ def surrogate_key_sql(*cols: str) -> str:
 # --- name titles ---------------------------------------------------------------
 
 
-def name_titles(c: Column | str) -> tuple[Column, Column]:
-    """Strip honorifics: returns (no_title, title).
-
-    CASE semantics from macros/name_titles.sql:118-133: first matching
-    title in list order wins; matches ``'T % %'`` / ``'T. % %'``;
-    strip is a global replace of ``'T '`` / ``'T. '``.
-    """
-    c = _col(c)
-    no_title: Column = c
-    title: Column = F.lit(None).cast("string")
-    # build bottom-up so the FIRST list entry is the OUTERMOST when()
-    for t in reversed(NAME_TITLES):
-        cond_plain = _like(c, f"{t} % %")
-        cond_dot = _like(c, f"{t}. % %")
-        no_title = (
-            F.when(cond_plain, F.replace(c, F.lit(f"{t} "), F.lit("")))
-            .when(cond_dot, F.replace(c, F.lit(f"{t}. "), F.lit("")))
-            .otherwise(no_title)
-        )
-        title = F.when(cond_plain | cond_dot, F.lit(t)).otherwise(title)
-    return no_title, title
-
-
 def name_titles_sql(c: str) -> tuple[str, str]:
+    """Strip honorifics: (no_title, title) CASE expressions over ``c``.
+
+    macros/name_titles.sql:118-133: first matching title in list order
+    wins; matches ``'T % %'`` / ``'T. % %'``; strip is a global replace
+    of ``'T '`` / ``'T. '``.
+    """
     strip_whens, tag_whens = [], []
     for t in NAME_TITLES:
         q = _sql_quote
@@ -230,36 +211,13 @@ def name_titles_sql(c: str) -> tuple[str, str]:
 # --- name suffixes --------------------------------------------------------------
 
 
-def name_suffixes(c: Column | str) -> tuple[Column, Column]:
-    """Strip generational suffixes: returns (no_suffix, suffix).
+def name_suffixes_sql(c: str) -> tuple[str, str]:
+    """Strip generational suffixes: (no_suffix, suffix).
 
     macros/name_suffixes.sql:21-37: match '% % suf' (lowercased) or
     '% %, suf'/'% %,suf'; replacement removes the suffix token in
     as-written, lower, and UPPER variants.
     """
-    c = _col(c)
-    lc = F.lower(c)
-    no_suffix: Column = c
-    suffix: Column = F.lit(None).cast("string")
-    for s in reversed(NAME_SUFFIXES):
-        sl, su = s.lower(), s.upper()
-        cond_space = _like(lc, f"% % {sl}")
-        cond_comma = _like(lc, f"% %, {sl}") | _like(c, f"% %,{s}")
-        strip_space = F.replace(
-            F.replace(F.replace(c, F.lit(f" {s}"), F.lit("")), F.lit(f" {sl}"), F.lit("")),
-            F.lit(f" {su}"),
-            F.lit(""),
-        )
-        no_suffix = (
-            F.when(cond_space, strip_space)
-            .when(cond_comma, F.replace(c, F.lit(f",{s}"), F.lit("")))
-            .otherwise(no_suffix)
-        )
-        suffix = F.when(cond_space | _like(lc, f"% %,{sl}"), F.lit(s)).otherwise(suffix)
-    return no_suffix, suffix
-
-
-def name_suffixes_sql(c: str) -> tuple[str, str]:
     q = _sql_quote
     strip_whens, tag_whens = [], []
     for s in NAME_SUFFIXES:
@@ -284,40 +242,11 @@ def name_suffixes_sql(c: str) -> tuple[str, str]:
 _ORG_CONTEXTS = [(" ", ""), ("_", ""), (" ", "."), (",", ""), (", ", "")]
 
 
-def org_suffixes(c: Column | str) -> tuple[Column, Column]:
-    """Strip org suffixes in 5 punctuation contexts
-    (macros/org_suffixes.sql:52-75): ' suf', '_suf', ' suf.', ',suf', ', suf'.
-    """
-    c = _col(c)
-    lc = F.lower(c)
-    no_suffix: Column = c
-    suffix: Column = F.lit(None).cast("string")
-    for s in reversed(ORG_SUFFIXES):
-        sl, su = s.lower(), s.upper()
-        branch = None
-        tag_cond = None
-        for pre, post in _ORG_CONTEXTS:
-            pat = f"%{pre if pre != ' ' else ' '}{sl}{post}"
-            if pre == " " and post == "":
-                pat = f"% {sl}"
-            cond = _like(lc, pat)
-            strip = F.replace(
-                F.replace(
-                    F.replace(c, F.lit(f"{pre}{s}{post}"), F.lit("")),
-                    F.lit(f"{pre}{su}{post}"),
-                    F.lit(""),
-                ),
-                F.lit(f"{pre}{sl}{post}"),
-                F.lit(""),
-            )
-            branch = F.when(cond, strip) if branch is None else branch.when(cond, strip)
-            tag_cond = cond if tag_cond is None else (tag_cond | cond)
-        no_suffix = branch.otherwise(no_suffix)
-        suffix = F.when(tag_cond, F.lit(s)).otherwise(suffix)
-    return no_suffix, suffix
-
-
 def org_suffixes_sql(c: str) -> tuple[str, str]:
+    """Strip org suffixes in 5 punctuation contexts
+    (macros/org_suffixes.sql:52-75): ' suf', '_suf', ' suf.', ',suf',
+    ', suf'; returns (no_suffix, suffix).
+    """
     q = _sql_quote
     strip_whens, tag_whens = [], []
     for s in ORG_SUFFIXES:
@@ -342,7 +271,7 @@ def org_suffixes_sql(c: str) -> tuple[str, str]:
 # --- street suffixes -------------------------------------------------------------
 
 
-def street_suffixes(c: Column | str) -> Column:
+def street_suffixes_sql(c: str) -> str:
     """Expand street abbreviations to long form ('St' -> 'Street').
 
     macros/street_suffixes.sql:518-526 over the COLLAPSED 215-entry
@@ -350,22 +279,6 @@ def street_suffixes(c: Column | str) -> Column:
     then global-replace abbr in as-written/lower/UPPER variants.
     First dict entry wins (insertion order preserved).
     """
-    c = _col(c)
-    lc = F.lower(c)
-    out: Column = c
-    for long, abbr in reversed(list(STREET_SUFFIX_MAP.items())):
-        al, au = abbr.lower(), abbr.upper()
-        cond = _like(lc, f"% % {al}") | _like(lc, f"% % {al} %") | _like(lc, f"% % {al},%")
-        rep = F.replace(
-            F.replace(F.replace(c, F.lit(abbr), F.lit(long)), F.lit(al), F.lit(long)),
-            F.lit(au),
-            F.lit(long),
-        )
-        out = F.when(cond, rep).otherwise(out)
-    return out
-
-
-def street_suffixes_sql(c: str) -> str:
     q = _sql_quote
     whens = []
     for long, abbr in STREET_SUFFIX_MAP.items():
@@ -385,56 +298,26 @@ def street_suffixes_sql(c: str) -> str:
 # --- address line split -----------------------------------------------------------
 
 
-def split_address_lines(c: Column | str) -> tuple[Column, Column]:
+def split_address_lines_sql(c: str) -> tuple[str, str]:
     """Split an address into (line_1, line_2).
 
     macros/split_address_lines.sql: split on ', ' / ',' first, else
-    before a secondary-unit designator (with '.'-suffixed and case
-    variants); line_2 is prefixed with the canonical designator.
+    before the first secondary-unit designator in dict order, its
+    plain form checked before its '.'-suffixed one (case-insensitive
+    match, split on the as-written token); line_2 is prefixed with the
+    canonical designator.
     """
-    c = _col(c)
-    lc = F.lower(c)
-
-    line1: Column = c
-    line2: Column = F.lit(None).cast("string")
-    units = list(SECONDARY_UNITS.items())
-    for unit, needs_num in reversed(units):
-        for dotted in (True, False):
-            tok = f"{unit}." if dotted else unit
-            pat = f"% {tok.lower()} %" if needs_num else f"% {tok.lower()}"
-            cond = _like(lc, pat)
-            line1 = F.when(cond, F.split_part(c, F.lit(tok), F.lit(1))).otherwise(line1)
-            line2 = F.when(
-                cond, F.concat(F.lit(unit), F.split_part(c, F.lit(tok), F.lit(2)))
-            ).otherwise(line2)
-    comma_space = _like(c, "%, %")
-    comma = _like(c, "%,%")
-    line1 = (
-        F.when(comma_space, F.split_part(c, F.lit(", "), F.lit(1)))
-        .when(comma, F.split_part(c, F.lit(","), F.lit(1)))
-        .otherwise(line1)
-    )
-    line2 = (
-        F.when(comma_space, F.split_part(c, F.lit(", "), F.lit(2)))
-        .when(comma, F.split_part(c, F.lit(","), F.lit(2)))
-        .otherwise(line2)
-    )
-    return line1, line2
-
-
-def split_address_lines_sql(c: str) -> tuple[str, str]:
     q = _sql_quote
     w1 = [
         f"when {c} like '%, %' then split_part({c}, ', ', 1)",
         f"when {c} like '%,%' then split_part({c}, ',', 1)",
     ]
-    w2 = list(w1)
     w2 = [
         f"when {c} like '%, %' then split_part({c}, ', ', 2)",
         f"when {c} like '%,%' then split_part({c}, ',', 2)",
     ]
     for unit, needs_num in SECONDARY_UNITS.items():
-        for dotted in (True, False):
+        for dotted in (False, True):  # plain variant checked before dotted
             tok = f"{unit}." if dotted else unit
             pat = q(f"% {tok.lower()} %" if needs_num else f"% {tok.lower()}")
             w1.append(f"when lower({c}) like {pat} then split_part({c}, {q(tok)}, 1)")

@@ -21,8 +21,7 @@ twin:
   standard PERCENTILE_DISC definition, verified to match DuckDB's
   native ``quantile_disc``. Exact, so it only suits grouped data
   whose per-group sort fits a task (profiling cuts, not the raw
-  corpus); the sketch path for whole-corpus quantiles is
-  operators/sketches.py.
+  corpus).
 - :func:`zscore_outliers` — per-group population z-score on an
   INTEGER column: integer sums are exact and order-free, the
   mean/variance are then a fixed sequence of exactly-rounded double

@@ -84,13 +84,14 @@ class CDCApplier:
     ):
         """``assume_dense_batches``: declare that every micro-batch
         touches (essentially) every hash bucket — true for high-volume
-        streams whose batch key count >> bucket count. The merge then
-        reads every target bucket instead of the touched set (merge_lsn's
-        stray-bucket guard still holds: the declared set is the full
-        bucket range). On the observed-stats path (see ``apply_batch``)
-        that saves the job that finds the touched buckets of a
-        multi-bucket copy-on-write table; with the pre-merge aggregation
-        it changes no job count.
+        streams whose batch key count >> bucket count. It acts only on
+        the observed-stats path (see ``apply_batch``): the merge there
+        reads every target bucket instead of first finding the touched
+        set, which saves that job pair on a multi-bucket copy-on-write
+        table (merge_lsn's stray-bucket guard still holds: the declared
+        set is the full bucket range). An epoch that runs the pre-merge
+        aggregation gets the exact touched set from it for free, so it
+        rewrites only the buckets its rows land in, flag or not.
 
         ``hot_key_salt``: explicit two-phase salted merge (see
         LakeTable.merge_lsn) for streams where one (repo, path)
@@ -104,7 +105,8 @@ class CDCApplier:
         ``max_files_per_bucket`` files and its bytes fit its bucket
         count; it splits the repos layout once the table outgrows that
         count) plus snapshot expiry down to
-        ``keep_snapshots``, on both the repos and lineage tables.
+        ``keep_snapshots`` (at least 1, checked here before any table is
+        opened), on both the repos and lineage tables.
         Keeps file and snapshot counts bounded over an unbounded
         stream; None (default) leaves maintenance to the operator.
         Tombstones are deliberately KEPT by auto-compaction — a
@@ -172,6 +174,8 @@ class CDCApplier:
         update-heavy feeds whose every epoch touches most buckets."""
         if write_mode not in ("cow", "mor"):
             raise ValueError(f"write_mode must be 'cow' or 'mor': {write_mode!r}")
+        if keep_snapshots < 1:
+            raise ValueError(f"keep_snapshots must be >= 1: {keep_snapshots!r}")
         if lineage_grain not in ("epoch", "partition"):
             raise ValueError(
                 f"lineage_grain must be 'epoch' or 'partition': {lineage_grain!r}"
@@ -457,10 +461,7 @@ class CDCApplier:
             )
             batch = flagged.filter(F.col("__reason").isNull()).drop("__reason")
         # clean batch: keep the original plan — no residual filter
-        if self.assume_dense_batches:
-            touched = list(range(self.table.bucket_count()))
-        else:
-            touched = [r["__bucket"] for r in groups if r["__bucket"] is not None]
+        touched = [r["__bucket"] for r in groups if r["__bucket"] is not None]
         return batch, touched, per_part, violations
 
     def quarantined(self) -> DataFrame:

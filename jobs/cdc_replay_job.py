@@ -68,7 +68,11 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--dense-batches", action="store_true",
-        help="batches touch every bucket: merge reads every bucket, not the touched set",
+        help="batches touch every bucket: an epoch that takes its lineage "
+        "stats from the merge reads every bucket instead of first finding the "
+        "touched set; epochs that run the pre-merge aggregation (partition "
+        "grain, quarantine, expectations, salting) rewrite only their "
+        "touched buckets either way",
     )
     ap.add_argument(
         "--write-mode", choices=["cow", "mor"], default="cow",
@@ -94,7 +98,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--keep-snapshots", type=int, default=4,
-        help="snapshots retained by auto-maintenance expiry",
+        help="snapshots retained by auto-maintenance expiry (at least 1)",
     )
     ap.add_argument(
         "--lineage-grain", choices=["epoch", "partition"], default="epoch",

@@ -357,6 +357,46 @@ def test_partition_grain_without_partition_column_raises_before_write(spark, tmp
     assert ap.lineage.current_snapshot_id() == 0
 
 
+def test_aggregated_dense_epoch_rewrites_only_its_touched_buckets(spark, tmp_path):
+    """An epoch that runs the pre-merge aggregation (here partition
+    grain) merges into the touched set the aggregation found, even under
+    ``assume_dense_batches``: a one-key epoch into a 4-bucket table
+    rewrites one bucket and carries the other three buckets' files over
+    unchanged."""
+    ap = CDCApplier(
+        spark, str(tmp_path / "repos"), str(tmp_path / "lineage"), buckets=4,
+        assume_dense_batches=True, lineage_grain="partition",
+    )
+    pre = [(i, "insert", f"r{i % 5}", f"p{i}", f"c{i}", f"k{i % 2}") for i in range(200)]
+    ap.apply_batch(local_df(spark, pre, EV_DDL), 0)
+    before = ap.table._read_manifest()["files"]
+    assert sorted(before) == ["0", "1", "2", "3"]
+    out = ap.apply_batch(local_df(spark, [(1000, "update", "r0", "p0", "new", "k0")], EV_DDL), 1)
+    after = ap.table._read_manifest()["files"]
+    assert out["rows_applied"] == 1
+    assert sorted(after) == sorted(before)
+    assert sum(after[b] != before[b] for b in before) == 1
+    assert _contents(ap)[("r0", "p0")] == "new"
+
+
+def test_keep_snapshots_below_one_raises_before_any_table_opens(spark, tmp_path):
+    """Expiry must keep the current snapshot, so ``keep_snapshots`` below
+    1 is refused at construction (CLI included), before any table
+    directory exists, not at the first maintenance tick after an epoch
+    has already committed."""
+    from jobs.cdc_replay_job import main as job_main
+
+    with pytest.raises(ValueError, match="keep_snapshots must be >= 1"):
+        CDCApplier(
+            spark, str(tmp_path / "repos"), str(tmp_path / "lineage"),
+            maintenance_every=1, keep_snapshots=0,
+        )
+    with pytest.raises(ValueError, match="keep_snapshots must be >= 1"):
+        job_main(["--generate", "10", "--table", str(tmp_path / "cli"),
+                  "--keep-snapshots", "0"])
+    assert list(tmp_path.iterdir()) == []
+
+
 def test_merge_lsn_property_random_streams(spark):
     """Property test (hypothesis): for ANY op stream over a small key
     space — duplicate LSN-ordered upserts/deletes, any contiguous batch

@@ -8,8 +8,13 @@ def _one(spark, value, *cols):
     return df.select(*cols).first()
 
 
+def _sql(*exprs):
+    """The ``*_sql`` CASE chains, evaluated by Spark."""
+    return [F.expr(e) for e in exprs]
+
+
 def test_name_titles_strip(spark):
-    no_title, title = N.name_titles("x")
+    no_title, title = _sql(*N.name_titles_sql("x"))
     r = _one(spark, "Dr John Smith", no_title.alias("n"), title.alias("t"))
     assert r.n == "John Smith" and r.t == "Dr"
     # title must be followed by >= 2 words (name_titles.sql:120)
@@ -24,7 +29,7 @@ def test_name_titles_strip(spark):
 
 
 def test_name_suffixes_strip(spark):
-    no_suffix, suffix = N.name_suffixes("x")
+    no_suffix, suffix = _sql(*N.name_suffixes_sql("x"))
     r = _one(spark, "Bob Jones Jr", no_suffix.alias("n"), suffix.alias("s"))
     assert r.n == "Bob Jones" and r.s == "Jr"
     r = _one(spark, "Bob Jones", no_suffix.alias("n"), suffix.alias("s"))
@@ -32,7 +37,7 @@ def test_name_suffixes_strip(spark):
 
 
 def test_org_suffixes_strip(spark):
-    no_suffix, suffix = N.org_suffixes("x")
+    no_suffix, suffix = _sql(*N.org_suffixes_sql("x"))
     r = _one(spark, "Acme Inc", no_suffix.alias("n"), suffix.alias("s"))
     assert r.n == "Acme" and r.s == "Inc"
     # context order is the reference's: ' suf' is checked before ', suf',
@@ -44,7 +49,7 @@ def test_org_suffixes_strip(spark):
 
 
 def test_street_suffixes_expand(spark):
-    col = N.street_suffixes("x")
+    (col,) = _sql(N.street_suffixes_sql("x"))
     assert _one(spark, "100 Main St", col.alias("v")).v == "100 Main Street"
     assert _one(spark, "100 Main Street", col.alias("v")).v == "100 Main Street"
     # collapsed-map quirk: 'Str' is NOT an effective trigger (last-wins 'St')
@@ -52,7 +57,7 @@ def test_street_suffixes_expand(spark):
 
 
 def test_split_address_lines(spark):
-    l1, l2 = N.split_address_lines("x")
+    l1, l2 = _sql(*N.split_address_lines_sql("x"))
     r = _one(spark, "12 Oak Ave, Apt 5", l1.alias("a"), l2.alias("b"))
     assert r.a == "12 Oak Ave" and r.b == "Apt 5"
     r = _one(spark, "12 Oak Ave Suite 7", l1.alias("a"), l2.alias("b"))
